@@ -7,8 +7,8 @@
   Q_KS(λ) = 2 Σ_{j≥1} (-1)^{j-1} exp(-2 j² λ²), with the small-λ
   Jacobi-theta form for accuracy (Marsaglia, Tsang & Wang 2003).
 
-Used from Arrow-vectorized pandas UDFs over the tiny per-(partition, column)
-drift-stat rows — never over raw data.
+Used by the driver-side drift kernel and by Arrow-vectorized pandas UDFs over
+the tiny per-(partition, column) drift-stat rows — never over raw data.
 """
 
 from __future__ import annotations

@@ -6,12 +6,21 @@ promised semantics are in ``README.md:42-62``: KS two-sample test, PSI with
 0.1/0.25 thresholds, chi-square contingency, Jensen-Shannon divergence.
 
 Distributed shape: drift is computed from HISTOGRAMS, never raw rows. The
-current table contributes per-partition histograms (one aggregate); the
-reference snapshot histogram is tiny and broadcast (J4). Each statistic is
-then pure column algebra + a window cumsum over the ~O(bins) rows per
-(partition, column) group — an exact computation at any data scale. A global
-sort of 10^12 raw values for exact KS is impossible; per-value bins on a
-bounded int domain (n_tok ∈ [1, 2048]) make the binned ECDF exact
+current table contributes per-partition histograms (one aggregate) and the
+reference snapshot histogram is tiny. Two exact forms of the statistics:
+
+- ``drift_stats_broadcast`` (the pipeline's): the O(partitions × bins)
+  histogram rows are collected and one numpy kernel, ``_drift_from_counts``,
+  computes every statistic and p-value per (partition, column) group on the
+  driver.
+- ``drift_stats`` / ``numeric_drift`` / ``with_drift_pvalues``: pure column
+  algebra + a window cumsum over the ~O(bins) rows per group with the
+  reference broadcast (J4). It stays distributed, so it also serves
+  vocabulary-sized histograms (``token_drift``), and it is the reference the
+  tests hold the kernel to.
+
+A global sort of 10^12 raw values for exact KS is impossible; per-value bins
+on a bounded int domain (n_tok ∈ [1, 2048]) make the binned ECDF exact
 (SURVEY.md §7.4.4).
 
 Zero-bin convention (documented, mirrored by the DuckDB oracle in
@@ -276,12 +285,61 @@ def _drift_from_counts(
     }
 
 
-_BROADCAST_SCHEMA = (
+_KERNEL_SCHEMA = (
     "part_id int, col string, n_cur long, n_ref long, psi double, "
     "js_divergence double, ks_stat double, chi2_stat double, chi2_dof long, "
-    "ks_pvalue double, chi2_pvalue double, psi_drift string, "
-    "ks_significant boolean, chi2_significant boolean, drift_detected boolean"
+    "ks_pvalue double, chi2_pvalue double"
 )
+
+
+def collect_ref_hist(ref_hist: DataFrame) -> dict[str, dict]:
+    """The reference histograms (tiny by construction) as col → bin → cnt."""
+    ref_map: dict[str, dict] = {}
+    for row in ref_hist.select("col", "bin", "cnt").collect():
+        bins = ref_map.setdefault(row["col"], {})
+        bins[row["bin"]] = bins.get(row["bin"], 0) + row["cnt"]
+    return ref_map
+
+
+def drift_from_histograms(
+    cur_rows, ref_map: dict[str, dict], numeric_cols, bins: int
+) -> list[dict]:
+    """Driver-side drift over collected (part_id, col, bin, cnt) rows: one
+    ``_drift_from_counts`` result (plus part_id and col) per (partition,
+    column) group present in ``cur_rows``."""
+    groups: dict[tuple, dict] = {}
+    for part_id, col, b, cnt in cur_rows:
+        g = groups.setdefault((part_id, col), {})
+        g[b] = g.get(b, 0) + cnt
+    return [
+        {
+            "part_id": part_id,
+            "col": col,
+            **_drift_from_counts(
+                cur, ref_map.get(col, {}), col in numeric_cols, bins
+            ),
+        }
+        for (part_id, col), cur in groups.items()
+    ]
+
+
+def _with_drift_flags(
+    drift: DataFrame, config: EngineConfig = DEFAULT_CONFIG
+) -> DataFrame:
+    """Significance verdicts over drift-stat rows that carry p-values. A NaN
+    PSI (column absent from the reference) is not drift by itself."""
+    t = config.thresholds
+    psi = F.col("psi")
+    return (
+        drift.withColumn("ks_significant", F.col("ks_pvalue") < t.ks_alpha)
+        .withColumn("chi2_significant", F.col("chi2_pvalue") < t.chi2_alpha)
+        .withColumn(
+            "drift_detected",
+            ((psi >= t.psi_moderate) & ~F.isnan(psi))
+            | F.col("ks_significant")
+            | F.col("chi2_significant"),
+        )
+    )
 
 
 def drift_stats_broadcast(
@@ -291,51 +349,30 @@ def drift_stats_broadcast(
     partition_col: str = "part_id",
     config: EngineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
-    """Single-stage drift: the reference histograms (tiny by construction)
-    are collected once and BROADCAST to executors; every statistic AND
-    p-value for a (partition, column) group is computed in one Arrow batch
-    by ``applyInPandas`` over that group's histogram rows. Replaces the
+    """Drift on the driver: the current per-partition histograms are
+    O(partitions × bins) rows, so they are collected together with the
+    reference histograms, every statistic AND p-value for a (partition,
+    column) group comes from the numpy kernel ``_drift_from_counts``, and
+    the result is a small local DataFrame. Same output as the
     drift_stats→rebin→numeric_drift→with_drift_pvalues composition (~10
-    stages of windows/joins) with histogram-agg → one grouped UDF — the
-    shape SURVEY.md §2.10 mandates, and the one that scales: shuffled bytes
-    are O(partitions × bins), never O(rows)."""
-    import pandas as pd
-
-    spark = cur_hist.sparkSession
-    ref_map: dict[str, dict] = {}
-    for row in ref_hist.select("col", "bin", "cnt").collect():
-        ref_map.setdefault(row["col"], {})[row["bin"]] = (
-            ref_map.get(row["col"], {}).get(row["bin"], 0) + row["cnt"]
-        )
-    bc = spark.sparkContext.broadcast(ref_map)
-    t = config.thresholds
-    bins = config.drift_bins
-    numeric_cols = set(numeric_cols)
-
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        part_id, col = key if len(key) == 2 else (None, key[0])
-        cur = dict(zip(pdf["bin"], pdf["cnt"]))
-        s = _drift_from_counts(
-            cur, bc.value.get(col, {}), col in numeric_cols, bins
-        )
-        s["part_id"] = part_id
-        s["col"] = col
-        s["psi_drift"] = (
-            "none"
-            if s["psi"] < t.psi_moderate
-            else ("moderate" if s["psi"] < t.psi_large else "large")
-        )
-        s["ks_significant"] = bool(s["ks_pvalue"] < t.ks_alpha)
-        s["chi2_significant"] = bool(s["chi2_pvalue"] < t.chi2_alpha)
-        s["drift_detected"] = bool(
-            s["psi"] >= t.psi_moderate
-            or s["ks_significant"]
-            or s["chi2_significant"]
-        )
-        return pd.DataFrame([s])
-
-    keys = [partition_col, "col"] if partition_col else ["col"]
-    out = cur_hist.groupBy(*keys).applyInPandas(fn, _BROADCAST_SCHEMA)
+    stages of windows/joins), with no Python worker and no stage of its
+    own: the only distributed work is the histogram aggregate that feeds
+    it (SURVEY.md §2.10). Vocabulary-sized histograms (``token_drift``)
+    stay on the distributed ``drift_stats``."""
+    keys = [partition_col] if partition_col else []
+    rows = cur_hist.select(*keys, "col", "bin", "cnt").collect()
+    if not partition_col:
+        rows = [(None, *r) for r in rows]
+    stats = drift_from_histograms(
+        rows, collect_ref_hist(ref_hist), set(numeric_cols), config.drift_bins
+    )
+    out = cur_hist.sparkSession.createDataFrame(stats, _KERNEL_SCHEMA)
+    out = _with_drift_flags(
+        out.withColumn(
+            "psi_drift", psi_classification(F.col("psi"), config.thresholds)
+        ),
+        config,
+    )
     return out if partition_col else out.drop("part_id")
 
 
@@ -363,23 +400,14 @@ def with_drift_pvalues(
             chi2_sf_vec(stat.to_numpy(float), dof.to_numpy(float))
         )
 
-    t = config.thresholds
-    return (
+    return _with_drift_flags(
         drift.withColumn(
             "ks_pvalue", _ks_p(F.col("ks_stat"), F.col("n_cur"), F.col("n_ref"))
-        )
-        .withColumn(
+        ).withColumn(
             "chi2_pvalue",
             _chi2_p(F.col("chi2_stat"), F.col("chi2_dof").cast("double")),
-        )
-        .withColumn("ks_significant", F.col("ks_pvalue") < t.ks_alpha)
-        .withColumn("chi2_significant", F.col("chi2_pvalue") < t.chi2_alpha)
-        .withColumn(
-            "drift_detected",
-            (F.col("psi") >= t.psi_moderate)
-            | F.col("ks_significant")
-            | F.col("chi2_significant"),
-        )
+        ),
+        config,
     )
 
 

@@ -4,13 +4,17 @@ Distributed equivalent of ``POST /check_quality``
 (``quality_check.py:25-191``), which runs missing → duplicates → outliers →
 score sequentially over one in-memory DataFrame. Here (SURVEY.md §3.2):
 
-    scan (partition-pruned by the resume manifest)
+    scan (partition-pruned by the resume manifest) → persisted projection
     → ONE wide groupBy(part_id) agg (stats + length-consistency + sketches)
-    → uniqueness agg on doc_id (second shuffle, key-hash partitioned)
-    → broadcast left-anti referential check (no shuffle)
-    → per-partition histograms → drift vs broadcast reference histograms
-    → optional per-row token-equality invariant vs the reference snapshot
-    → verdict rows (severity when-chains) + violation rows + quality score
+    → uniqueness agg on doc_id (key-hash shuffle), sharing its shuffle with
+      the optional per-row token-equality join vs the reference digests
+    → per-partition histograms (n_tok values, source categories)
+    → the per-part aggregates (O(parts × bins) rows) collected: referential
+      counts and drift (numpy kernel) vs the reference histograms computed
+      on the driver
+    → verdict rows from ONE projection (severity when-chains) over a small
+      per-part DataFrame + quality score
+    → violation rows for the failed (part, check) pairs only
     → write: results table, violations table, manifest rows (lineage)
 
 Verdict row shape: (run_id, part_id, check, column, value, pct, severity,
@@ -24,18 +28,19 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions import verdicts as V
 from ..functions.scoring import overall_score
-from ..functions.verdicts import grade
-from pyspark import StorageLevel
-
-from ..operators.drift import drift_stats_broadcast
+from ..functions.verdicts import grade, psi_classification
+from ..operators.drift import collect_ref_hist, drift_from_histograms
 from ..operators.histogram import categorical_counts, value_histogram
 from ..operators.invariants import (
+    _one_digest_per_key,
     token_digests,
     uniqueness_and_token_equality,
 )
@@ -48,17 +53,6 @@ from ..sources.tables import ParquetTableIO
 RESULTS_TABLE = "check_results"
 VIOLATIONS_TABLE = "violations"
 
-_VERDICT_COLS = [
-    "part_id",
-    "check",
-    "column",
-    "value",
-    "pct",
-    "severity",
-    "recommendation",
-    "passed",
-]
-
 
 @dataclass
 class RunResult:
@@ -66,20 +60,6 @@ class RunResult:
     verdicts: DataFrame
     score: DataFrame
     pruned_partitions: list[int] = field(default_factory=list)
-
-
-def _verdict(df: DataFrame, check: str, column: str, value, pct, severity,
-             recommendation, passed) -> DataFrame:
-    return df.select(
-        F.col("part_id"),
-        F.lit(check).alias("check"),
-        F.lit(column).alias("column"),
-        value.cast("double").alias("value"),
-        pct.cast("double").alias("pct"),
-        severity.alias("severity"),
-        recommendation.alias("recommendation"),
-        passed.alias("passed"),
-    )
 
 
 def prepare_sequences(df: DataFrame, partition_col: str = "part_id") -> DataFrame:
@@ -100,10 +80,11 @@ def prepare_sequences(df: DataFrame, partition_col: str = "part_id") -> DataFram
 
 
 def release_cached(verdicts: DataFrame) -> None:
-    """Unpersist the intermediates build_verdicts cached for this verdict
-    DataFrame. Call once the verdict rows are materialized (written or
-    collected) — a long-running stream invoking build_verdicts per
-    micro-batch would otherwise grow the SQL CacheManager unboundedly."""
+    """Unpersist the projection build_verdicts cached for this verdict
+    DataFrame. The verdict rows are local data and do not need it; call once
+    any violation export over the same input has run — a long-running
+    stream invoking build_verdicts per micro-batch would otherwise grow the
+    SQL CacheManager unboundedly."""
     for c in getattr(verdicts, "_cached_intermediates", ()):
         try:
             c.unpersist()
@@ -112,53 +93,44 @@ def release_cached(verdicts: DataFrame) -> None:
     verdicts._cached_intermediates = ()
 
 
-def build_verdicts(
-    df: DataFrame,
-    ref_stats: DataFrame | None = None,
-    allowed_sources: DataFrame | None = None,
-    ref_sequences: DataFrame | None = None,
-    config: EngineConfig = DEFAULT_CONFIG,
-    ref_digests: DataFrame | None = None,
-    materialize: bool = True,
-) -> DataFrame:
-    """Assemble all per-partition verdict rows (no writes, lazy).
+# the per-part aggregate row build_verdicts emits verdicts from; a NULL
+# check column means that check has no row for the part
+_WIDE_SCHEMA = (
+    "part_id {}, n_rows long, null_doc_id long, null_tokens long, "
+    "null_source long, len_mismatch long, duplicate_rows long, "
+    "duplicate_pct double, ref_violations long, te_rows long, "
+    "token_mismatch long, drift array<struct<col: string, psi: double, "
+    "ks_stat: double, ks_pvalue: double>>"
+)
 
-    ``ref_digests`` (doc_id, tok_digest) is the preferred reference-side
-    artifact for the per-row token-equality invariant; ``ref_sequences``
-    (full arrays) is accepted and digested on the fly.
 
-    Cached intermediates are tracked on the returned DataFrame; callers
-    that materialize the result should pass it to ``release_cached``."""
-    t = config.thresholds
-    _cached: list[DataFrame] = []
-    prepared = prepare_sequences(df, config.partition_col).persist(
-        StorageLevel.MEMORY_AND_DISK
+def _check(check: str, column, value, pct, severity, recommendation, passed):
+    """One verdict as a struct (the verdict row minus part_id)."""
+    return F.struct(
+        F.lit(check).alias("check"),
+        (column if isinstance(column, Column) else F.lit(column)).alias(
+            "column"
+        ),
+        value.cast("double").alias("value"),
+        pct.cast("double").alias("pct"),
+        severity.alias("severity"),
+        recommendation.alias("recommendation"),
+        passed.alias("passed"),
     )
-    _cached.append(prepared)
-    # materialize the projection BEFORE assembling the fan-out: the verdict
-    # union is one job whose first-level stages would otherwise start
-    # concurrently and each recompute the heavy token-array scan while the
-    # cache is still cold (a cache-fill race duplicating the dominant cost).
-    # materialize=False defers this to the caller (benchmark probes that
-    # time plan construction and execution separately must re-persist and
-    # count these intermediates — in _cached order — inside the timed
-    # region after any clearCache).
-    if materialize:
-        prepared.count()
-    seq = sequence_stats_prepared(prepared, config.partition_col).cache()
-    _cached.append(seq)
-    if materialize:
-        seq.count()
 
-    pieces: list[DataFrame] = []
+
+def _verdict_structs(t) -> Column:
+    """Every verdict of one wide per-part row, as an array of ``_check``
+    structs in check order; checks with no row for the part are dropped."""
+    structs = []
 
     # 1. missing values on every column of the contract (A1; severity chain
     #    missing_values.py:63-69)
     for col in ("doc_id", "tokens", "source"):
         pct = F.round(F.col(f"null_{col}") / F.col("n_rows") * 100, 2)
-        pieces.append(
-            _verdict(
-                seq, "missing_values", col,
+        structs.append(
+            _check(
+                "missing_values", col,
                 F.col(f"null_{col}"), pct,
                 V.missing_severity(pct),
                 F.when(pct >= t.missing_error_pct, "drop_column")
@@ -169,161 +141,221 @@ def build_verdicts(
         )
 
     # 2. token-array length consistency (A20 — the contract invariant)
-    lm_pct = F.round(F.col("len_mismatch") / F.col("n_rows") * 100, 2)
-    pieces.append(
-        _verdict(
-            seq, "length_consistency", "tokens",
-            F.col("len_mismatch"), lm_pct,
-            F.when(F.col("len_mismatch") == 0, "none").when(
-                lm_pct < 1, "medium"
-            ).otherwise("high"),
-            F.when(F.col("len_mismatch") == 0, "no_action").otherwise(
-                "repair_n_tok"
+    lm = F.col("len_mismatch")
+    lm_pct = F.round(lm / F.col("n_rows") * 100, 2)
+    structs.append(
+        _check(
+            "length_consistency", "tokens", lm, lm_pct,
+            F.when(lm == 0, "none").when(lm_pct < 1, "medium").otherwise("high"),
+            F.when(lm == 0, "no_action").otherwise("repair_n_tok"),
+            lm == 0,
+        )
+    )
+
+    # 3. uniqueness on doc_id (A14); no row for a part whose doc_ids are all
+    #    NULL (null keys are a missing-value violation, not a duplicate)
+    dup_pct = F.col("duplicate_pct")
+    structs.append(
+        F.when(
+            F.col("duplicate_rows").isNotNull(),
+            _check(
+                "uniqueness", "doc_id", F.col("duplicate_rows"), dup_pct,
+                V.duplicate_severity(dup_pct),
+                V.duplicate_recommendation(dup_pct),
+                F.col("duplicate_rows") == 0,
             ),
-            F.col("len_mismatch") == 0,
         )
     )
 
-    # 3. uniqueness on doc_id (A14; hash-partitioned distinct counts) — and,
-    #    when reference digests exist, the per-row token-equality invariant
-    #    from the SAME doc_id shuffle (one exchange for both checks)
-    if ref_digests is None and ref_sequences is not None:
-        ref_digests = token_digests(ref_sequences)
-    te = None
-    if ref_digests is not None:
-        dup = uniqueness_and_token_equality(
-            prepared, ref_digests, partition_col=config.partition_col
-        ).cache()
-        _cached.append(dup)
-        te = dup
-    else:
-        dup = duplicate_stats(
-            prepared.select(config.partition_col, "doc_id"),
-            keys=["doc_id"],
-            ignore_null_keys=True,
-        )
-    pieces.append(
-        _verdict(
-            dup, "uniqueness", "doc_id",
-            F.col("duplicate_rows"), F.col("duplicate_pct"),
-            V.duplicate_severity(F.col("duplicate_pct")),
-            V.duplicate_recommendation(F.col("duplicate_pct")),
-            F.col("duplicate_rows") == 0,
-        )
-    )
-
-    # per-partition source counts: computed ONCE (salted two-level agg),
-    # shared by the referential check and the drift comparison — shuffled
-    # bytes are O(partitions x sources), never O(rows)
-    src_counts = (
-        categorical_counts(prepared, "source", config=config).cache()
-        if (allowed_sources is not None or ref_stats is not None)
-        else None
-    )
-    if src_counts is not None:
-        _cached.append(src_counts)
-
-    # 4. referential: source ∈ allowed dimension (J3). The dimension is tiny
-    #    by definition, so it collapses to an isin over the histogram bins;
-    #    violations = n_rows - matched (nulls therefore count as violations,
-    #    same as the anti-join in operators.referential).
-    if allowed_sources is not None:
-        allowed = [
-            r["source"]
-            for r in allowed_sources.select("source").distinct().collect()
-        ]
-        matched = (
-            src_counts.filter(F.col("bin").isin(allowed))
-            .groupBy(config.partition_col)
-            .agg(F.sum("cnt").alias("_matched"))
-        )
-        refc = seq.join(matched, on=config.partition_col, how="left").select(
-            config.partition_col,
-            "n_rows",
-            (F.col("n_rows") - F.coalesce(F.col("_matched"), F.lit(0))).alias(
-                "violations"
-            ),
-        ).withColumn(
-            "violation_pct",
-            F.round(F.col("violations") / F.col("n_rows") * 100, 2),
-        )
-        pieces.append(
-            _verdict(
-                refc, "referential", "source",
-                F.col("violations"), F.col("violation_pct"),
-                F.when(F.col("violations") == 0, "none")
-                .when(F.col("violation_pct") < 1, "low")
-                .when(F.col("violation_pct") < 5, "medium")
+    # 4. referential: source ∈ allowed dimension (J3); NULL sources count as
+    #    violations, as in the anti-join of operators.referential
+    rv = F.col("ref_violations")
+    rv_pct = F.round(rv / F.col("n_rows") * 100, 2)
+    structs.append(
+        F.when(
+            rv.isNotNull(),
+            _check(
+                "referential", "source", rv, rv_pct,
+                F.when(rv == 0, "none")
+                .when(rv_pct < 1, "low")
+                .when(rv_pct < 5, "medium")
                 .otherwise("high"),
-                F.when(F.col("violations") == 0, "no_action").otherwise(
+                F.when(rv == 0, "no_action").otherwise(
                     "quarantine_unknown_sources"
                 ),
-                F.col("violations") == 0,
-            )
+                rv == 0,
+            ),
+        )
+    )
+
+    # 5. drift vs reference snapshot, one PSI and one KS verdict per
+    #    (part, column) histogram group
+    def psi(d):
+        return _check(
+            "drift_psi", d["col"], d["psi"], F.lit(None),
+            psi_classification(d["psi"], t),
+            F.when(d["psi"] < t.psi_moderate, "no_action")
+            .when(d["psi"] < t.psi_large, "monitor_drift")
+            .otherwise("retrain_or_investigate"),
+            d["psi"] < t.psi_moderate,
         )
 
-    # 5. drift vs reference snapshot (PSI/KS/JS/chi² from histograms):
-    #    per-partition histograms from the cached projection, then ONE
-    #    applyInPandas stage against the broadcast reference histograms
+    def ks(d):
+        significant = d["ks_pvalue"] < t.ks_alpha
+        return _check(
+            "drift_ks", d["col"], d["ks_stat"], d["ks_pvalue"],
+            F.when(significant, "high").otherwise("none"),
+            F.when(significant, "investigate_distribution_shift").otherwise(
+                "no_action"
+            ),
+            ~significant,
+        )
+
+    # 6. per-row token equality against the reference digests (same doc_id
+    #    pass as uniqueness, so no row for an all-NULL-doc_id part either)
+    tm = F.col("token_mismatch")
+    te_pct = F.round(tm / F.col("te_rows") * 100, 2)
+    te = F.when(
+        tm.isNotNull(),
+        _check(
+            "token_equality", "tokens", tm, te_pct,
+            F.when(tm == 0, "none").otherwise("high"),
+            F.when(tm == 0, "no_action").otherwise("recompute_tokens"),
+            tm == 0,
+        ),
+    )
+
+    every = F.concat(
+        F.array(*structs),
+        F.transform("drift", psi),
+        F.transform("drift", ks),
+        F.array(te),
+    )
+    return F.filter(every, lambda s: s.isNotNull())
+
+
+def build_verdicts(
+    df: DataFrame,
+    ref_stats: DataFrame | None = None,
+    allowed_sources: DataFrame | None = None,
+    ref_sequences: DataFrame | None = None,
+    config: EngineConfig = DEFAULT_CONFIG,
+    ref_digests: DataFrame | None = None,
+) -> DataFrame:
+    """Assemble all per-partition verdict rows (no writes).
+
+    Eager: every check reduces to a per-part aggregate of O(parts × bins)
+    rows, never O(rows) (``n_tok`` bins are bounded). The aggregates are
+    collected from the persisted ``prepare_sequences`` projection, drift
+    (numpy kernel) and referential counts are computed on the driver, and
+    the verdict rows come from ONE projection over a small per-part
+    DataFrame — no union of per-check plans, no Python worker.
+
+    ``ref_digests`` (doc_id, tok_digest) is the preferred reference-side
+    artifact for the per-row token-equality invariant; ``ref_sequences``
+    (full arrays) is accepted and digested on the fly.
+
+    The projection stays cached (tracked on the returned DataFrame) so a
+    violation export over the same input reuses it; pass the result to
+    ``release_cached`` when done."""
+    t = config.thresholds
+    part = config.partition_col
+    prepared = prepare_sequences(df, part).persist(StorageLevel.MEMORY_AND_DISK)
+
+    # 1-2. missing values + length consistency; one row per part
+    wide = {
+        r[part]: {**r.asDict(), "part_id": r[part], "drift": []}
+        for r in sequence_stats_prepared(prepared, part)
+        .select(
+            part, "n_rows", "null_doc_id", "null_tokens", "null_source",
+            "len_mismatch",
+        )
+        .collect()
+    }
+
+    # 3 + 6. uniqueness on doc_id — and, when reference digests exist, the
+    #    per-row token-equality invariant from the SAME doc_id shuffle
+    if ref_digests is None and ref_sequences is not None:
+        ref_digests = token_digests(ref_sequences)
+    if ref_digests is not None:
+        dup = uniqueness_and_token_equality(
+            prepared, ref_digests, partition_col=part
+        ).select(
+            part, "duplicate_rows", "duplicate_pct",
+            F.col("n_rows").alias("te_rows"), "token_mismatch",
+        )
+    else:
+        dup = duplicate_stats(
+            prepared.select(part, "doc_id"),
+            keys=["doc_id"],
+            partition_col=part,
+            ignore_null_keys=True,
+        ).select(part, "duplicate_rows", "duplicate_pct")
+    for r in dup.collect():
+        wide[r[part]].update(r.asDict())
+
+    # per-partition source counts (salted two-level agg), shared by the
+    # referential check and the drift comparison, plus the n_tok per-value
+    # histogram when drift runs
+    if allowed_sources is not None or ref_stats is not None:
+        hist = categorical_counts(prepared, "source", config=config)
+        if ref_stats is not None:
+            hist = value_histogram(prepared, "n_tok").unionByName(hist)
+        hist_rows = hist.select(part, "col", "bin", "cnt").collect()
+
+    # 4. referential: source ∈ allowed dimension (J3). The dimension is tiny
+    #    by definition, so it is an isin over the histogram bins; violations
+    #    = n_rows - matched, so NULL sources count as violations.
+    if allowed_sources is not None:
+        allowed = {r["source"] for r in allowed_sources.select("source").collect()}
+        matched = dict.fromkeys(wide, 0)
+        for p, col, b, cnt in hist_rows:
+            if col == "source" and b in allowed:
+                matched[p] += cnt
+        for p, w in wide.items():
+            w["ref_violations"] = w["n_rows"] - matched[p]
+
+    # 5. drift vs reference snapshot (PSI/KS/JS/chi² from histograms)
     if ref_stats is not None:
-        fine = value_histogram(prepared, "n_tok").unionByName(src_counts)
-        drift = drift_stats_broadcast(
-            fine, ref_stats, numeric_cols={"n_tok"},
-            partition_col=config.partition_col, config=config,
-        )
-        pieces.append(
-            drift.select(
-                F.col("part_id"),
-                F.lit("drift_psi").alias("check"),
-                F.col("col").alias("column"),
-                F.col("psi").cast("double").alias("value"),
-                F.lit(None).cast("double").alias("pct"),
-                F.col("psi_drift").alias("severity"),
-                F.when(F.col("psi") < t.psi_moderate, "no_action")
-                .when(F.col("psi") < t.psi_large, "monitor_drift")
-                .otherwise("retrain_or_investigate")
-                .alias("recommendation"),
-                (F.col("psi") < t.psi_moderate).alias("passed"),
+        for s in drift_from_histograms(
+            hist_rows, collect_ref_hist(ref_stats), {"n_tok"},
+            config.drift_bins,
+        ):
+            wide[s["part_id"]]["drift"].append(
+                (s["col"], s["psi"], s["ks_stat"], s["ks_pvalue"])
             )
-        )
-        pieces.append(
-            drift.select(
-                F.col("part_id"),
-                F.lit("drift_ks").alias("check"),
-                F.col("col").alias("column"),
-                F.col("ks_stat").cast("double").alias("value"),
-                F.col("ks_pvalue").cast("double").alias("pct"),
-                F.when(F.col("ks_significant"), "high").otherwise("none").alias(
-                    "severity"
-                ),
-                F.when(F.col("ks_significant"), "investigate_distribution_shift")
-                .otherwise("no_action")
-                .alias("recommendation"),
-                (~F.col("ks_significant")).alias("passed"),
-            )
-        )
 
-    # 6. per-row token equality (input_hint invariant; digest fast path) —
-    #    already computed in the shared doc_id pass above
-    if te is not None:
-        te_pct = F.round(F.col("token_mismatch") / F.col("n_rows") * 100, 2)
-        pieces.append(
-            _verdict(
-                te, "token_equality", "tokens",
-                F.col("token_mismatch"), te_pct,
-                F.when(F.col("token_mismatch") == 0, "none").otherwise("high"),
-                F.when(F.col("token_mismatch") == 0, "no_action").otherwise(
-                    "recompute_tokens"
-                ),
-                F.col("token_mismatch") == 0,
-            )
-        )
-
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    out._cached_intermediates = _cached
+    # one partition: the rows are few, and every later action on the
+    # verdicts (score, writes) then runs one task, not one per core
+    per_part = df.sparkSession.createDataFrame(
+        list(wide.values()),
+        _WIDE_SCHEMA.format(prepared.schema[part].dataType.simpleString()),
+    ).coalesce(1)
+    out = per_part.select("part_id", F.inline(_verdict_structs(t)))
+    out._cached_intermediates = [prepared]
     return out
+
+
+# check families with row-level violations: per part, each family's
+# violation row count equals its verdict value (missing_values: the doc_id
+# and tokens verdicts together), so a family with value 0 exports no rows
+VIOLATION_CHECKS = (
+    "missing_values", "length_consistency", "uniqueness", "referential",
+    "token_equality",
+)
+
+
+def failed_checks(verdicts: DataFrame) -> set[tuple]:
+    """(part_id, check) pairs of the violation families with a nonzero
+    verdict value — the ``failed`` argument of ``build_violations``."""
+    return {
+        (r["part_id"], r["check"])
+        for r in verdicts.filter(
+            (F.col("value") > 0) & F.col("check").isin(*VIOLATION_CHECKS)
+        )
+        .select("part_id", "check")
+        .collect()
+    }
 
 
 def build_violations(
@@ -331,6 +363,7 @@ def build_violations(
     allowed_sources: DataFrame | None = None,
     ref_digests: DataFrame | None = None,
     config: EngineConfig = DEFAULT_CONFIG,
+    failed: set[tuple] | None = None,
 ) -> DataFrame:
     """Row-level violation export (north_rule: "violation rows"): one row
     per offending sequence with a check tag and a human-readable detail.
@@ -338,8 +371,11 @@ def build_violations(
 
     Separate from the verdict pass by design — verdicts are the always-on
     cheap aggregate; violations re-scan only when a consumer wants the
-    offending rows (and at cluster scale would be partition-pruned to the
-    partitions whose verdicts failed)."""
+    offending rows. ``failed`` (see ``failed_checks``) restricts the export
+    to those (part_id, check) pairs: a family with no failing part is
+    skipped and the others scan only their failing parts. The result is
+    the same as the full export, because per part each family's row count
+    equals its verdict value (uniqueness is per part, like its verdict)."""
     part = config.partition_col
     p = prepare_sequences(df, part)
 
@@ -351,52 +387,66 @@ def build_violations(
             detail.cast("string").alias("detail"),
         )
 
-    pieces = [
-        rows(
-            p.filter(F.col("doc_id").isNull()),
-            "missing_values",
-            F.lit("null doc_id"),
-        ),
-        rows(
-            p.filter(F.col("tok_len").isNull()),
-            "missing_values",
-            F.lit("null tokens"),
-        ),
-        rows(
-            p.filter(
-                F.col("tok_len").isNotNull()
-                & (F.col("tok_len") != F.col("n_tok"))
-            ),
-            "length_consistency",
-            F.concat(
-                F.lit("declared n_tok="),
-                F.col("n_tok"),
-                F.lit(" actual="),
-                F.col("tok_len"),
-            ),
-        ),
-    ]
+    def scope(check: str) -> DataFrame | None:
+        """The rows to search for ``check``'s violations; None to skip."""
+        if failed is None:
+            return p
+        parts = sorted(pid for pid, c in failed if c == check)
+        return p.filter(F.col(part).isin(parts)) if parts else None
 
-    dup = duplicate_violations(
-        p.select(part, "doc_id").filter(F.col("doc_id").isNotNull()),
-        keys=["doc_id"],
-        partition_col=part,
-    )
-    pieces.append(
-        rows(
-            dup,
-            "uniqueness",
-            F.concat(
-                F.lit("group_size="),
-                F.col("group_size"),
-                F.lit(" occurrence="),
-                F.col("occurrence"),
+    pieces = []
+    if (src := scope("missing_values")) is not None:
+        pieces += [
+            rows(
+                src.filter(F.col("doc_id").isNull()),
+                "missing_values",
+                F.lit("null doc_id"),
             ),
+            rows(
+                src.filter(F.col("tok_len").isNull()),
+                "missing_values",
+                F.lit("null tokens"),
+            ),
+        ]
+
+    if (src := scope("length_consistency")) is not None:
+        pieces.append(
+            rows(
+                src.filter(
+                    F.col("tok_len").isNotNull()
+                    & (F.col("tok_len") != F.col("n_tok"))
+                ),
+                "length_consistency",
+                F.concat(
+                    F.lit("declared n_tok="),
+                    F.col("n_tok"),
+                    F.lit(" actual="),
+                    F.col("tok_len"),
+                ),
+            )
         )
-    )
 
-    if allowed_sources is not None:
-        bad = p.join(
+    if (src := scope("uniqueness")) is not None:
+        dup = duplicate_violations(
+            src.select(part, "doc_id").filter(F.col("doc_id").isNotNull()),
+            keys=[part, "doc_id"],
+            partition_col=part,
+        )
+        pieces.append(
+            rows(
+                dup,
+                "uniqueness",
+                F.concat(
+                    F.lit("group_size="),
+                    F.col("group_size"),
+                    F.lit(" occurrence="),
+                    F.col("occurrence"),
+                ),
+            )
+        )
+
+    if allowed_sources is not None and (src := scope("referential")) is not None:
+        bad = src.join(
             F.broadcast(
                 allowed_sources.select("source").distinct()
             ),
@@ -412,12 +462,11 @@ def build_violations(
             )
         )
 
-    if ref_digests is not None:
-        r = ref_digests.select(
-            "doc_id", F.col("tok_digest").alias("_rd")
-        ).filter(F.col("doc_id").isNotNull())
+    if ref_digests is not None and (src := scope("token_equality")) is not None:
+        # one reference digest per doc_id, as in the verdict's join
+        r = _one_digest_per_key(ref_digests, "doc_id")
         mism = (
-            p.filter(F.col("doc_id").isNotNull())
+            src.filter(F.col("doc_id").isNotNull())
             .join(r.hint("shuffle_hash"), on="doc_id", how="inner")
             .filter(F.col("tok_digest") != F.col("_rd"))
         )
@@ -425,10 +474,9 @@ def build_violations(
             rows(mism, "token_equality", F.lit("token digest mismatch"))
         )
 
-    out = pieces[0]
-    for x in pieces[1:]:
-        out = out.unionByName(x)
-    return out
+    if not pieces:
+        return rows(p.filter(F.lit(False)), "missing_values", F.lit(None))
+    return reduce(DataFrame.unionByName, pieces)
 
 
 def score_partitions(
@@ -576,44 +624,43 @@ def run_checks(
         df, ref_stats, allowed_sources, ref_sequences, config,
         ref_digests=ref_digests,
     )
-    verdicts = built.withColumn("run_id", F.lit(run_id)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    score = score_partitions(verdicts.drop("run_id"), config).withColumn(
+    verdicts = built.withColumn("run_id", F.lit(run_id))
+    score = score_partitions(built, config).withColumn(
         "run_id", F.lit(run_id)
     )
-
-    if io is not None:
-        io.append(verdicts, RESULTS_TABLE)
-        io.append(score, RESULTS_TABLE + "_score")
-        if export_violations:
-            if ref_digests is None and ref_sequences is not None:
-                ref_digests = token_digests(ref_sequences)
-            io.append(
-                build_violations(
-                    df, allowed_sources, ref_digests, config
-                ).withColumn("run_id", F.lit(run_id)),
-                VIOLATIONS_TABLE,
-            )
-        digests = M.stats_digests(
-            io.read_appended(RESULTS_TABLE).filter(F.col("run_id") == run_id)
-        )
-        M.record_partitions(
-            spark, io, run_id, sorted(digests), "done", snapshot_id,
-            digests=digests, started_at=started, now=now,
-        )
-        # everything is on disk now; drop the cached plan state so repeated
-        # run_checks calls (or a driver loop) don't accumulate cache entries
+    if io is None:
+        # the verdict rows are local data; only a violation export reads the
+        # cached projection
         release_cached(built)
-        verdicts.unpersist()
-        verdicts = io.read_appended(RESULTS_TABLE).filter(
-            F.col("run_id") == run_id
+        return RunResult(run_id, verdicts, score, pruned)
+
+    io.append(verdicts, RESULTS_TABLE)
+    io.append(score, RESULTS_TABLE + "_score")
+    if export_violations:
+        if ref_digests is None and ref_sequences is not None:
+            ref_digests = token_digests(ref_sequences)
+        io.append(
+            build_violations(
+                df, allowed_sources, ref_digests, config,
+                failed=failed_checks(built),
+            ).withColumn("run_id", F.lit(run_id)),
+            VIOLATIONS_TABLE,
         )
-        # rebind score to the persisted read-back too: the original plan
-        # references the just-unpersisted verdicts, so a later action on
-        # RunResult.score would silently recompute the whole pipeline
-        # (the pruned early-return path above already reads back).
-        score = io.read_appended(RESULTS_TABLE + "_score").filter(
-            F.col("run_id") == run_id
-        )
+    # everything is on disk now; drop the cached projection so repeated
+    # run_checks calls (or a driver loop) don't accumulate cache entries
+    release_cached(built)
+    digests = M.stats_digests(
+        io.read_appended(RESULTS_TABLE).filter(F.col("run_id") == run_id)
+    )
+    M.record_partitions(
+        spark, io, run_id, sorted(digests), "done", snapshot_id,
+        digests=digests, started_at=started, now=now,
+    )
+    # return the persisted read-backs, as the pruned early-return path does
+    verdicts = io.read_appended(RESULTS_TABLE).filter(
+        F.col("run_id") == run_id
+    )
+    score = io.read_appended(RESULTS_TABLE + "_score").filter(
+        F.col("run_id") == run_id
+    )
     return RunResult(run_id, verdicts, score, pruned)

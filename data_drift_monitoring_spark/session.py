@@ -14,6 +14,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_cores() -> str:
+    """Cores for ``local[...]``: ``$SPARK_GRAFT_CPUS`` if set, else the CPUs
+    this process may run on (the affinity mask, which honours taskset and
+    cgroup cpusets where ``os.cpu_count`` reports the whole machine)."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(
+        len(os.sched_getaffinity(0))
+    )
+
+
 def get_spark(
     app_name: str = "data-drift-monitoring-spark",
     master: str | None = None,
@@ -22,19 +31,21 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in the sandbox; under
-    ``spark-submit`` (detected via the gateway the launcher JVM exports) it is
-    left unset so ``--master``/``--deploy-mode`` on the submit command line
-    control deployment instead of being silently overridden here.
+    ``master`` defaults to ``local[<local_cores()>]``; under ``spark-submit``
+    (detected via the gateway the launcher JVM exports) it is left unset so
+    ``--master``/``--deploy-mode`` on the submit command line control
+    deployment instead of being silently overridden here.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cores()
     under_spark_submit = "PYSPARK_GATEWAY_PORT" in os.environ
     if master is None and not under_spark_submit:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         # one shuffle partition per core locally; a real cluster would size
         # this to 2-3x total executor cores or rely on AQE coalescing.
-        shuffle_partitions = int(cpus) if str(cpus).isdigit() else 32
+        shuffle_partitions = (
+            int(cpus) if cpus.isdigit() else len(os.sched_getaffinity(0))
+        )
 
     builder = SparkSession.builder.appName(app_name)
     if master is not None:

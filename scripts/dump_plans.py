@@ -1,6 +1,8 @@
 """Regenerate PLANS.md: formatted physical plans of the flagship pipeline
 pieces + representative entry queries, with the properties each plan is
-expected to exhibit. Usage: python scripts/dump_plans.py"""
+expected to exhibit. Usage: python scripts/dump_plans.py [FIXTURE_DIR]
+(the generated input tables are kept in FIXTURE_DIR, default
+/tmp/_plans_fixture)."""
 
 from __future__ import annotations
 
@@ -24,9 +26,10 @@ plans may further coalesce partitions at runtime). What to look for:
   downstream aggregation without a second row exchange.
 - **Broadcast where small**: the allowed-source dim and reference
   histograms never shuffle the fact side.
-- **WholeStageCodegen** spans cover the hot path; Python appears only in
-  the single `applyInPandas` drift stage (FlatMapGroupsInPandas/
-  ArrowEvalPython nodes).
+- **WholeStageCodegen** spans cover the hot path. The verdict path has no
+  Python worker stage: drift statistics come from a numpy kernel on the
+  driver over the collected histograms, so `drift_stats_broadcast` plans as
+  a scan of driver-side rows (`Scan ExistingRDD`).
 """
 
 
@@ -63,7 +66,7 @@ def main() -> None:
     from data_drift_monitoring_spark.session import get_spark
 
     spark = get_spark(master="local[4]", shuffle_partitions=16)
-    d = "/tmp/_plans_fixture"
+    d = sys.argv[1] if len(sys.argv) > 1 else "/tmp/_plans_fixture"
     if not os.path.exists(d + "/ref/part-0.parquet"):
         generate_sequences(d + "/ref", "ref", rows=20000, num_partitions=8)
         generate_sequences(
@@ -78,6 +81,9 @@ def main() -> None:
     p.count()
     rs = build_ref_stats(ref)
     rd = token_digests(ref)
+    hist = value_histogram(p, "n_tok").unionByName(
+        categorical_counts(p, "source")
+    )
 
     sections = [
         (
@@ -100,17 +106,16 @@ def main() -> None:
             uniqueness_and_token_equality(p, rd),
         ),
         (
-            "drift — histograms + one applyInPandas stage",
-            "Histogram aggregation shuffles O(partitions × bins) rows; "
-            "reference histograms are a broadcast python dict; all "
-            "statistics and p-values in one FlatMapGroupsInPandas.",
-            drift_stats_broadcast(
-                value_histogram(p, "n_tok").unionByName(
-                    categorical_counts(p, "source")
-                ),
-                rs,
-                numeric_cols={"n_tok"},
-            ),
+            "drift — histograms collected, numpy kernel on the driver",
+            "The histogram aggregation below shuffles O(partitions × bins) "
+            "rows and is the only distributed drift work; "
+            "drift_stats_broadcast collects it with the reference "
+            "histograms and computes all statistics and p-values in numpy "
+            "on the driver, so its own plan is a scan of those driver-side "
+            "rows (no FlatMapGroupsInPandas/ArrowEvalPython):\n\n```\n"
+            + fmt(drift_stats_broadcast(hist, rs, numeric_cols={"n_tok"}))
+            + "```",
+            hist,
         ),
         (
             "referential — broadcast anti-join (standalone operator)",

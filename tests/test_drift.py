@@ -133,7 +133,7 @@ def test_salted_categorical_counts_match_plain(spark, cur_drifted_df):
 
 
 def test_broadcast_drift_matches_composition(spark, ref_df, cur_drifted_df):
-    """drift_stats_broadcast (one applyInPandas stage) must reproduce the
+    """drift_stats_broadcast (the numpy kernel on the driver) must reproduce the
     drift_stats→rebin→numeric_drift→with_drift_pvalues composition exactly:
     same universe/clamp/dof conventions, same p-values."""
     from data_drift_monitoring_spark.operators.drift import drift_stats_broadcast
