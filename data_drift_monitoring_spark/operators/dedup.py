@@ -6,10 +6,12 @@ n-gram Jaccard verification, and embedding-cosine near-dup.
 Scale design:
 - exact: hash-groupBy on a content digest (never on raw text) — the shuffle
   moves 16-byte digests, not documents.
-- MinHash+LSH: shingle → 64 minhashes (JVM expression: array_min over a
-  universal-hash transform of xxhash64 shingle hashes) → B bands hashed to
-  buckets → candidate pairs ONLY within buckets (self-join on (band, hash),
-  quadratic only in bucket size) → exact/estimated Jaccard verification.
+- MinHash+LSH: shingle → 64 minhashes (``mapInArrow`` numpy core: word
+  hashes read zero-copy off the Arrow batch, combined into k-word shingle
+  hashes, one segment-min per universal hash a·h+b mod 2³¹-1) → B bands
+  hashed to buckets → candidate pairs ONLY within buckets (self-join on
+  (band, hash), quadratic only in bucket size) → exact/estimated Jaccard
+  verification → star-contraction clustering.
 - SimHash: 64-bit signature via an Arrow pandas UDF (numpy bitcount); near
   dups = identical signatures (or Hamming ≤ d by multi-table split).
 - embedding cosine: random-hyperplane LSH bucket join + exact cosine within
@@ -24,6 +26,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 from pyspark.sql.functions import pandas_udf
 
+from ..cache import (  # release_cached: re-exported for callers
+    cached_intermediates,
+    release_cached,  # noqa: F401
+    release_frame,
+    track_cached,
+)
 from ._tokenize import expr_word_hashes, expr_word_hashes_arrow
 from .similarity import vec_matrix
 
@@ -104,32 +112,18 @@ def minhash_signatures(
     num_hashes: int = 64,
     shingle_k: int = 3,
     seed: int = 42,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Add ``minhash`` (array<bigint>, length num_hashes): per hash i,
     min over shingles of (aᵢ·h + bᵢ mod 2³¹-1). Deterministic in seed.
 
-    ``impl='arrow'`` (default): one vectorized pandas-UDF pass — tokenize
-    and dictionary-encode in pyarrow C, hash only the vocabulary
-    (pandas.util.hash_array, cython siphash, deterministic — see
-    _tokenize.expr_word_hashes), combine word hashes into shingle hashes
-    with flat uint64 slicing (no per-doc loop), then ONE
-    ``np.minimum.reduceat`` segment-min per hash chunk. Measured ~20× the
-    expression variant: Catalyst higher-order-function lambdas
-    (transform/array_min) are evaluated INTERPRETED, ~3 µs per shingle —
-    the expr path costs O(docs · shingles · num_hashes) interpreted evals
-    and dominates the whole LSH pipeline at corpus scale.
-    ``impl='expr'``: the pure-JVM expression variant (no Python workers) —
-    kept for environments where Arrow is unavailable.
-
-    The two impls produce different (both valid) hash families; recall
-    guarantees and the est-Jaccard estimator are identical in
-    distribution, and the verified-pair output is identical wherever the
-    band recall bound holds (oracle-checked in the gate)."""
-    if impl == "expr":
-        return _minhash_signatures_expr(
-            df, text_col, num_hashes, shingle_k, seed
-        )
+    The pandas-UDF twin of :func:`minhash_signature_table`, which is the
+    path every LSH stage uses; this one is kept as the reference that
+    ``test_minhash_signature_table_bit_identical`` holds the mapInArrow
+    core to. One vectorized pass: tokenize and dictionary-encode in
+    pyarrow C, hash only the vocabulary (pandas.util.hash_array, cython
+    siphash, deterministic — see _tokenize.expr_word_hashes), combine
+    word hashes into shingle hashes with flat uint64 slicing (no per-doc
+    loop), then ONE ``np.minimum.reduceat`` segment-min per hash chunk."""
     rng = np.random.default_rng(seed)
     ua = rng.integers(1, _MERSENNE, size=num_hashes, dtype=np.int64).astype(
         np.uint64
@@ -260,7 +254,7 @@ def _doc_shingle_hashes(
     vocabulary is materialized — _tokenize.expr_word_hashes), combined
     into shingle hashes with flat uint64 slicing (no per-doc loop). Docs
     shorter than k words get ONE shingle over all their words (mirror of
-    slice() clamping in the expression variants). Returns (sh uint64
+    slice() clamping in ``_with_shingles``). Returns (sh uint64
     shingle hashes, sdoc int64 doc index per shingle) sorted by doc."""
     # expr-convention word hashes (ASCII \s class only, no trim —
     # round-3 ADVICE parity) via the shared pyarrow dictionary-encode
@@ -315,43 +309,11 @@ def _shingles_from_word_hashes(
     return sh, sdoc
 
 
-def _minhash_signatures_expr(
-    df: DataFrame,
-    text_col: str,
-    num_hashes: int,
-    shingle_k: int,
-    seed: int,
-) -> DataFrame:
-    """Pure-JVM expression variant of ``minhash_signatures`` (no Python
-    workers; interpreted HOF evaluation — see the arrow docstring)."""
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, _MERSENNE, size=num_hashes, dtype=np.int64)
-    b = rng.integers(0, _MERSENNE, size=num_hashes, dtype=np.int64)
-    df = _with_shingles(df, text_col, shingle_k, "_sh")
-
-    def _uhash(ai: int, bi: int):
-        # one-arg closure: F.transform must NOT see a second (index) param.
-        # reduce the 64-bit shingle hash into the field before multiplying.
-        return lambda h: F.pmod(
-            F.lit(ai) * F.pmod(h, F.lit(_MERSENNE)) + F.lit(bi),
-            F.lit(_MERSENNE),
-        )
-
-    sig = F.array(
-        *[
-            F.array_min(F.transform(F.col("_sh"), _uhash(int(a[i]), int(b[i]))))
-            for i in range(num_hashes)
-        ]
-    )
-    return df.withColumn("minhash", sig).drop("_sh")
-
-
 def _salt_oversized(
     d: DataFrame,
     bucket_cols: list[str],
     order_col: str,
     max_bucket_size: int | None,
-    method: str = "census",
 ) -> DataFrame:
     """Append ``_salt``: rows of a bucket larger than ``max_bucket_size``
     are chunked into ~ceil(n/cap) sub-buckets; smaller buckets keep salt 0
@@ -364,24 +326,14 @@ def _salt_oversized(
     missed, but every member of such a bucket is still compared against
     its chunk co-members, which is what dedup connectivity needs.
 
-    ``method='census'`` (default): bucket-size census (map-side-combined
-    count whose output keeps ONLY oversized buckets — tiny) → broadcast
-    join → ``pmod(xxhash64(key), chunks)``. No extra shuffle of the banded
-    rows and no single-task stage: every row salts itself independently.
-    ``method='window'`` (the earlier design, kept as fallback) chunks
-    deterministically by ``row_number`` — but that adds a sort exchange of
-    the banded rows and funnels each oversized bucket through ONE window
-    task before the join is bounded, a latent single-task sort at 100×."""
+    Salting is by census: a bucket-size count (map-side combined, its
+    output keeps ONLY oversized buckets — tiny) → broadcast join →
+    ``pmod(xxhash64(key), chunks)``. No extra shuffle of the banded rows
+    and no single-task stage: every row salts itself independently (a
+    ``row_number`` window would add a sort exchange and funnel each
+    oversized bucket through ONE task before the join is bounded)."""
     if max_bucket_size is None:
         return d.withColumn("_salt", F.lit(0))
-    if method == "window":
-        w = Window.partitionBy(*bucket_cols).orderBy(F.col(order_col).asc())
-        return d.withColumn(
-            "_salt",
-            F.floor(
-                (F.row_number().over(w) - 1) / F.lit(max_bucket_size)
-            ).cast("int"),
-        )
     census = (
         d.groupBy(*bucket_cols)
         .agg(F.count(F.lit(1)).alias("_bn"))
@@ -484,7 +436,7 @@ def lsh_candidate_pairs(
         .dropDuplicates(["a", "b"])
     )
     if not estimate:
-        return _track_cached(pairs, banded_cached)
+        return track_cached(pairs, banded_cached)
     sig_a = sigs.select(
         F.col(key_col).alias("a"), F.col("minhash").alias("sig_a")
     )
@@ -503,7 +455,7 @@ def lsh_candidate_pairs(
         )
         / F.lit(num_hashes)
     )
-    return _track_cached(
+    return track_cached(
         joined.select("a", "b", est.alias("est_jaccard")), banded_cached
     )
 
@@ -553,12 +505,14 @@ def minhash_verified_duplicates(
     # whole LSH pipeline; the verification below references it THREE times
     # (two key-union branches + the pair join). localCheckpoint both
     # truncates that lineage and materializes it once.
-    tracked = getattr(cand, "_cached_intermediates", ())
+    tracked = cached_intermediates(cand)
+    # rebind rather than keep the pre-checkpoint frame referenced beside
+    # the checkpoint: that measured +50 MB JVM peak RSS on the near_dup
+    # benchmark (4-core host)
     cand = cand.localCheckpoint(eager=False)
     # the checkpointed frame itself must be tracked too: its RDD stays
-    # persistent until driver-side GC otherwise, so release_cached left
-    # one RDD behind (flaky leak seen in test_dedup_release_cached)
-    return _track_cached(
+    # persistent until driver-side GC otherwise
+    return track_cached(
         ngram_jaccard(df, cand, key_col, text_col, shingle_k).filter(
             F.col("jaccard") >= threshold
         ),
@@ -668,7 +622,7 @@ def minhash_duplicates_against(
     both = index.select(F.col(key_col), F.col(text_col)).unionByName(
         new.select(F.col(key_col), F.col(text_col))
     )
-    return _track_cached(
+    return track_cached(
         ngram_jaccard(both, cand, key_col, text_col, shingle_k).filter(
             F.col("jaccard") >= threshold
         ),
@@ -770,49 +724,6 @@ def portable_word_hash(w):
     return F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast("bigint")
 
 
-def _track_cached(result: DataFrame, *frames: DataFrame) -> DataFrame:
-    """Record persisted intermediates on the returned DataFrame (same
-    contract as plans.pipeline: callers that materialize the result in a
-    long-lived session pass it to :func:`release_cached`, else the SQL
-    CacheManager grows per call)."""
-    existing = tuple(getattr(result, "_cached_intermediates", ()))
-    result._cached_intermediates = existing + frames
-    return result
-
-
-def _release_one(c: DataFrame) -> None:
-    """Release ONE cached/checkpointed frame's storage. A plain
-    ``DataFrame.unpersist()`` only clears the SQL CacheManager entry —
-    for a localCheckpointed frame the storage belongs to an internal
-    RDD behind a LogicalRDD leaf, which otherwise lives until driver
-    GC collects the plan (measured: ``getPersistentRDDs`` keeps the
-    entry after unpersist()). Unpersisting a checkpointed RDD discards
-    the data irrecoverably (lineage is truncated), so call this only
-    once nothing will read the frame again."""
-    try:
-        c.unpersist()
-    except Exception:
-        pass
-    try:
-        leaves = c._jdf.queryExecution().analyzed().collectLeaves()
-        for i in range(leaves.size()):
-            leaf = leaves.apply(i)
-            if leaf.getClass().getName().endswith(".LogicalRDD"):
-                leaf.rdd().unpersist(False)
-    except Exception:
-        pass
-
-
-def release_cached(df: DataFrame) -> None:
-    """Unpersist the intermediates a dedup operator cached for ``df``
-    (persisted AND localCheckpointed). Call after materializing the
-    result (written / collected); safe to call twice. Mirrors
-    ``plans.pipeline.release_cached``."""
-    for c in getattr(df, "_cached_intermediates", ()):
-        _release_one(c)
-    df._cached_intermediates = ()
-
-
 def simhash(df: DataFrame, text_col: str = "text", word_hash=None) -> DataFrame:
     """Add a 64-bit ``simhash`` column. Word hashes are computed JVM-side
     (xxhash64 per word by default; pass ``word_hash`` e.g.
@@ -900,7 +811,7 @@ def simhash_hamming_duplicates(
         "t", "bv", "_salt",
         F.col("k").alias("b"), F.col("simhash").alias("_sb"),
     )
-    return _track_cached(
+    return track_cached(
         a.join(b, on=["t", "bv", "_salt"])
         .filter(F.col("a") < F.col("b"))
         .select(
@@ -970,7 +881,7 @@ def embedding_near_duplicates(
         .select("a", "b")
         .dropDuplicates(["a", "b"])
     )
-    return _track_cached(_cosine_verify(d, pairs, threshold), banded_cached)
+    return track_cached(_cosine_verify(d, pairs, threshold), banded_cached)
 
 
 def _hyperplane_banded(
@@ -1086,49 +997,37 @@ def embedding_near_duplicates_against(
         .dropDuplicates(["a", "b"])
         .localCheckpoint(eager=False)
     )
-    return _track_cached(
-        _cosine_verify(di.unionByName(dn_), cand, threshold), bi_cached
+    return track_cached(
+        _cosine_verify(di.unionByName(dn_), cand, threshold), bi_cached, cand
     )
 
 
 def duplicate_clusters(
     pairs: DataFrame,
     max_iters: int = 20,
-    algorithm: str = "star",
 ) -> DataFrame:
     """Connected components over near-dup pairs: (key, cluster) where
     ``cluster`` is the minimum key in the component — the step between
     pair mining (MinHash/SimHash/embedding LSH) and corpus dedup (keep
     one representative per cluster).
 
-    ``algorithm='star'`` (default): alternating large-star / small-star
-    contraction (Kiveris et al. 2014, "Connected Components in MapReduce
-    and Beyond") — each round re-points edges at local minima, roughly
-    squaring the contraction, so deep components converge in O(log²)
-    rounds where one-hop label propagation needs O(diameter). Each
-    half-round is one aggregate + one join on the pair-derived edge set,
-    never on the corpus.
-    ``algorithm='label_prop'``: the one-hop min-label propagation
-    fallback (O(diameter) rounds).
+    Alternating large-star / small-star contraction (Kiveris et al.
+    2014, "Connected Components in MapReduce and Beyond") — each round
+    re-points edges at local minima, roughly squaring the contraction, so
+    deep components converge in O(log²) rounds where one-hop label
+    propagation needs O(diameter). Each half-round is one aggregate + one
+    join on the pair-derived edge set, never on the corpus.
 
-    Both raise RuntimeError if ``max_iters`` rounds pass without
+    Raises RuntimeError if ``max_iters`` rounds pass without
     convergence — returning silently would hand the caller *wrong*
     cluster labels with no signal."""
     e = pairs.select("a", "b").filter(F.col("a") != F.col("b"))
-    if algorithm == "star":
-        return _star_clusters(e, max_iters)
-    return _label_prop_clusters(e, max_iters)
-
-
-def _star_clusters(e: DataFrame, max_iters: int) -> DataFrame:
-    """Alternating large-star/small-star rounds until the edge set is a
-    forest of stars rooted at each component's minimum key.
-
-    Edges are kept oriented (a > b). localCheckpoint (not mere persist)
-    per round: an iterative plan that nests join-on-join grows
-    super-linearly in the optimizer and OOMs the driver after ~10 rounds;
-    checkpointing truncates the lineage so each round's plan is
-    constant-size."""
+    # rounds run until the edge set is a forest of stars rooted at each
+    # component's minimum key. Edges are kept oriented (a > b).
+    # localCheckpoint (not mere persist) per round: an iterative plan that
+    # nests join-on-join grows super-linearly in the optimizer and OOMs
+    # the driver after ~10 rounds; checkpointing truncates the lineage so
+    # each round's plan is constant-size.
     nodes = (
         e.select(F.col("a").alias("k"))
         .unionByName(e.select(F.col("b").alias("k")))
@@ -1164,7 +1063,7 @@ def _star_clusters(e: DataFrame, max_iters: int) -> DataFrame:
         # the eager checkpoint above materialized this round from the
         # previous one — release the stale round NOW instead of letting
         # O(rounds) checkpoint RDDs pile up until driver GC
-        _release_one(prev)
+        release_frame(prev)
         # small-star: for each node u, attach u and all its (smaller)
         # neighbours to min(Γ(u) ∪ {u})
         mins = edges.groupBy("a").agg(F.min("b").alias("m"))
@@ -1179,7 +1078,7 @@ def _star_clusters(e: DataFrame, max_iters: int) -> DataFrame:
             .distinct()
             .localCheckpoint()
         )
-        _release_one(edges)
+        release_frame(edges)
         edges = new_edges
         # fixed point ⇔ the edge set is a star forest ⇔ no source node is
         # also a target (edges stay oriented a > b throughout, so a star's
@@ -1197,13 +1096,13 @@ def _star_clusters(e: DataFrame, max_iters: int) -> DataFrame:
             break
     if not converged:
         raise RuntimeError(
-            f"duplicate_clusters(star) did not converge in {max_iters} "
+            f"duplicate_clusters did not converge in {max_iters} "
             "rounds — raise max_iters"
         )
     # nodes + the final edge set back the result's plan (checkpointed,
     # so unpersisting early would lose them) — hand them to the caller's
     # release_cached instead
-    return _track_cached(
+    return track_cached(
         nodes.join(
             edges.select(F.col("a").alias("k"), F.col("b").alias("_c")),
             on="k",
@@ -1211,66 +1110,6 @@ def _star_clusters(e: DataFrame, max_iters: int) -> DataFrame:
         ).select("k", F.coalesce(F.col("_c"), F.col("k")).alias("cluster")),
         nodes,
         edges,
-    )
-
-
-def _label_prop_clusters(e: DataFrame, max_iters: int) -> DataFrame:
-    """One-hop min-label propagation; O(component diameter) rounds."""
-    und = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = (
-        und.select(F.col("a").alias("k"))
-        .distinct()
-        .withColumn("label", F.col("k"))
-        .localCheckpoint()
-    )
-    converged = False
-    for _ in range(max_iters):
-        neigh = (
-            und.join(
-                labels.select(
-                    F.col("k").alias("b"), F.col("label").alias("_nl")
-                ),
-                on="b",
-            )
-            .groupBy(F.col("a").alias("k"))
-            .agg(F.min("_nl").alias("_minn"))
-        )
-        new_labels = (
-            labels.join(neigh, on="k", how="left")
-            .select(
-                "k",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("_minn"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), on="k")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        _release_one(labels)  # stale round, nothing reads it again
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"duplicate_clusters(label_prop) did not converge in "
-            f"{max_iters} rounds (label propagation advances one hop per "
-            "round) — raise max_iters or use algorithm='star'"
-        )
-    return _track_cached(
-        labels.select(F.col("k"), F.col("label").alias("cluster")),
-        und,
-        labels,
     )
 
 
@@ -1288,7 +1127,7 @@ def dedup_by_clusters(
     )
     # chained transforms shed the tracking attribute — forward the
     # cluster pass's checkpointed frames so release_cached reaches them
-    return _track_cached(
+    return track_cached(
         df.join(F.broadcast(drop), on=key_col, how="left_anti"),
-        *getattr(clusters, "_cached_intermediates", ()),
+        *cached_intermediates(clusters),
     )

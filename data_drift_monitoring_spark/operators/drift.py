@@ -34,6 +34,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..cache import cached_intermediates, track_cached
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions.verdicts import psi_classification
 
@@ -126,11 +127,9 @@ def drift_stats(
         F.max("ecdf_gap").alias("ks_stat"),
     )
     out = out.withColumn("psi_drift", psi_classification(F.col("psi")))
-    # same contract as plans.pipeline.build_verdicts: the cached histogram
-    # is tracked on the result so repeated callers (e.g. a long-lived
-    # service's detect_drift) can release it after materialization
-    out._cached_intermediates = [cur]
-    return out
+    # repeated callers (e.g. a long-lived service's detect_drift) release
+    # the cached histogram after materialization
+    return track_cached(out, cur)
 
 
 def quantile_edges_from_hist(
@@ -496,5 +495,4 @@ def token_drift(
         )
     )
     out = stats.drop("ks_stat").join(oov, on="col", how="left")
-    out._cached_intermediates = [cur_h, *getattr(stats, "_cached_intermediates", [])]
-    return out
+    return track_cached(out, cur_h, *cached_intermediates(stats))

@@ -33,6 +33,7 @@ from functools import reduce
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from ..cache import release_cached, track_cached
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions import verdicts as V
 from ..functions.scoring import overall_score
@@ -77,20 +78,6 @@ def prepare_sequences(df: DataFrame, partition_col: str = "part_id") -> DataFram
         F.size("tokens").alias("tok_len"),  # NULL iff tokens is NULL
         F.xxhash64("tokens").alias("tok_digest"),
     )
-
-
-def release_cached(verdicts: DataFrame) -> None:
-    """Unpersist the projection build_verdicts cached for this verdict
-    DataFrame. The verdict rows are local data and do not need it; call once
-    any violation export over the same input has run — a long-running
-    stream invoking build_verdicts per micro-batch would otherwise grow the
-    SQL CacheManager unboundedly."""
-    for c in getattr(verdicts, "_cached_intermediates", ()):
-        try:
-            c.unpersist()
-        except Exception:
-            pass
-    verdicts._cached_intermediates = ()
 
 
 # the per-part aggregate row build_verdicts emits verdicts from; a NULL
@@ -332,8 +319,7 @@ def build_verdicts(
         _WIDE_SCHEMA.format(prepared.schema[part].dataType.simpleString()),
     ).coalesce(1)
     out = per_part.select("part_id", F.inline(_verdict_structs(t)))
-    out._cached_intermediates = [prepared]
-    return out
+    return track_cached(out, prepared)
 
 
 # check families with row-level violations: per part, each family's

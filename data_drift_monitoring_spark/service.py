@@ -348,7 +348,7 @@ class ValidationService:
                 out = out.unionByName(p)
             return out
 
-        from .plans.pipeline import release_cached
+        from .cache import release_cached
 
         stats = drift_stats(hists(df), hists(base), partition_col=None)
         rows = stats.collect()

@@ -151,7 +151,8 @@ def start_monitor(
     topic (kafka_options: bootstrap_servers, topic, ...); everything
     downstream of the readStream is identical.
     """
-    from ..plans.pipeline import build_verdicts, release_cached
+    from ..cache import release_cached
+    from ..plans.pipeline import build_verdicts
 
     if source == "kafka":
         opts = dict(kafka_options or {})

@@ -36,18 +36,13 @@ MIN_OVERLAP = 0.5
 STRIDE = 100          # every 100th base doc becomes a leak source
 
 
-def build_eval(spark, docs, stride, n=None, seed=None):
-    """Deterministic eval set from strided corpus docs, shared by this
-    script AND bench_executor_scaleout.py — the scale-out emulation's
-    ground truth is only comparable to this script's if the two eval
-    sets come from the SAME code path, so keep this the single copy.
-    Returns (eval_df, truth, eval_rows): per-band leak texts (full /
-    mix70 / mix30) built from every ``stride``-th corpus doc plus a
-    same-size clean band; truth maps eval_id -> (band, expected)."""
+def build_eval(spark, docs, stride):
+    """Deterministic eval set from strided corpus docs. Returns
+    (eval_df, truth, eval_rows): per-band leak texts (full / mix70 /
+    mix30) built from every ``stride``-th corpus doc plus a same-size
+    clean band; truth maps eval_id -> (band, expected)."""
     from pyspark.sql import functions as F
 
-    n = N if n is None else n
-    seed = SEED if seed is None else seed
     src = (
         docs.filter(F.col("doc_id") % stride == 0)
         .select("doc_id", "text")
@@ -55,7 +50,7 @@ def build_eval(spark, docs, stride, n=None, seed=None):
         .sort_values("doc_id")
         .reset_index(drop=True)
     )
-    rng = np.random.default_rng(np.random.SeedSequence([seed, 2026]))
+    rng = np.random.default_rng(np.random.SeedSequence([SEED, 2026]))
     vocab_size = 50_000
     bands = ("full", "mix70", "mix30")
     eval_rows = []     # (eval_id, text)
@@ -64,7 +59,7 @@ def build_eval(spark, docs, stride, n=None, seed=None):
         words = row["text"].split(" ")
         band = bands[i % 3]
         frac = {"full": 1.0, "mix70": 0.7, "mix30": 0.3}[band]
-        h = max(int(round(frac * len(words))), n)
+        h = max(int(round(frac * len(words))), N)
         fresh = [
             f"w{w:05d}"
             for w in rng.integers(0, vocab_size, size=len(words) - h)

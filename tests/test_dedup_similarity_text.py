@@ -126,22 +126,6 @@ def test_simhash_hamming_band_parity_with_bruteforce(spark, docs):
         assert got == exact
 
 
-def test_minhash_arrow_and_expr_find_same_verified_pairs(spark, dup_docs):
-    """The two signature implementations are different hash families but
-    must verify to the same exact-Jaccard pair set wherever the band
-    recall bound holds."""
-    def verified(impl):
-        sigs = D.minhash_signatures(dup_docs, "text", 64, 3, impl=impl)
-        cand = D.lsh_candidate_pairs(sigs, "doc_id", 64, 32, estimate=False)
-        out = D.ngram_jaccard(dup_docs, cand, "doc_id")
-        return {
-            (r["a"], r["b"], round(r["jaccard"], 6))
-            for r in out.filter(F.col("jaccard") >= 0.5).collect()
-        }
-
-    assert verified("arrow") == verified("expr")
-
-
 def test_dedup_corpus_generator_truth(spark, tmp_path):
     """generate_dedup_corpus: planted truth matches the engine's own exact
     n-gram verification, ids are unique, kinds behave as documented."""
@@ -483,7 +467,7 @@ def test_embedding_multi_table_lifts_recall(spark, embs01):
 
 
 def test_duplicate_clusters_transitive(spark):
-    """Label propagation must merge across hops: pairs (1,2),(2,3) form
+    """Star contraction must merge across hops: pairs (1,2),(2,3) form
     one cluster {1,2,3} labeled 1; (10,11) stays separate; keep-list
     retains the minimum per cluster plus untouched rows."""
     pairs = spark.createDataFrame(
@@ -512,26 +496,9 @@ def test_duplicate_clusters_long_chain(spark):
     cl = D.duplicate_clusters(pairs, max_iters=4).collect()
     assert {r["cluster"] for r in cl} == {0}
     assert len(cl) == 13
-    # label propagation advances one hop/round: both variants must FLAG
-    # (not silently return) unconverged labels when max_iters is too low
+    # too few rounds must FLAG (not silently return) unconverged labels
     with pytest.raises(RuntimeError, match="did not converge"):
-        D.duplicate_clusters(pairs, max_iters=2, algorithm="label_prop")
-
-
-def test_duplicate_clusters_label_prop_parity(spark):
-    """Both algorithms agree on a mixed component shape."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21)],
-        "a long, b long",
-    )
-    star = {(r["k"], r["cluster"])
-            for r in D.duplicate_clusters(pairs, algorithm="star").collect()}
-    prop = {(r["k"], r["cluster"])
-            for r in D.duplicate_clusters(
-                pairs, algorithm="label_prop"
-            ).collect()}
-    assert star == prop
-    assert {c for _, c in star} == {1, 10, 20}
+        D.duplicate_clusters(pairs, max_iters=2)
 
 
 def test_duplicate_clusters_random_graphs_match_union_find(spark):
@@ -755,6 +722,19 @@ def test_dedup_release_cached(spark, dup_docs):
     D.release_cached(kept)
     D.release_cached(pairs2)
     assert not (rdd_ids() - before2)
+    # a checkpointed INPUT is a LogicalRDD leaf of every tracked frame's
+    # plan: releasing must free only the operators' own frames, never it
+    ck = dup_docs.localCheckpoint()
+    n = ck.count()
+    for out in (
+        D.minhash_verified_duplicates(ck, "doc_id", threshold=0.5),
+        D.minhash_duplicates_against(
+            ck, dup_docs.withColumn("doc_id", F.col("doc_id") + 100), "doc_id"
+        ),
+    ):
+        out.count()
+        D.release_cached(out)
+        assert ck.count() == n
 
 
 def test_kmeans_default_sample_is_bounded(spark, embs):
