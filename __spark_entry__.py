@@ -314,7 +314,7 @@ def q_psi_quantity(spark, sf_dir):
     ref = _hist.value_histogram(
         li.filter("half = 'a'"), "l_quantity", partition_col=None
     )
-    out = _drift.drift_stats(cur, ref, partition_col=None)
+    out = _drift.drift_stats_broadcast(cur, ref, partition_col=None)
     return out.select(
         "col",
         "n_cur",
@@ -336,7 +336,7 @@ def q_chi2_returnflag(spark, sf_dir):
     ref = _hist.categorical_counts(
         li.filter("half = 'a'"), "l_returnflag", partition_col=None, salted=False
     )
-    out = _drift.drift_stats(cur, ref, partition_col=None)
+    out = _drift.drift_stats_broadcast(cur, ref, partition_col=None)
     return out.select(
         "col",
         "n_cur",
@@ -352,8 +352,8 @@ def q_drift_verdict_sources(spark, sf_dir):
     """Categorical drift of documents.source between doc_id halves with the
     PSI severity classification — verdict-shaped output."""
     d = _read(spark, sf_dir, "documents")
-    # median as a broadcast one-row frame → the whole query is ONE job
-    # (no driver round-trip between the quantile and the split)
+    # median as a broadcast one-row frame: the split needs no driver
+    # round-trip of its own between the quantile and the histograms
     med = d.agg(
         F.percentile(F.col("doc_id").cast("double"), F.lit(0.5)).alias("_mid")
     )
@@ -366,7 +366,7 @@ def q_drift_verdict_sources(spark, sf_dir):
         dm.filter(F.col("doc_id") <= F.col("_mid")).drop("_mid"),
         "source", partition_col=None, salted=False,
     )
-    out = _drift.drift_stats(cur, ref, partition_col=None)
+    out = _drift.drift_stats_broadcast(cur, ref, partition_col=None)
     return out.select(
         "col", F.round("psi", 6).alias("psi"), "psi_drift",
         F.round("js_divergence", 6).alias("js_divergence"),

@@ -7,8 +7,8 @@
   Q_KS(λ) = 2 Σ_{j≥1} (-1)^{j-1} exp(-2 j² λ²), with the small-λ
   Jacobi-theta form for accuracy (Marsaglia, Tsang & Wang 2003).
 
-Used by the driver-side drift kernel and by Arrow-vectorized pandas UDFs over
-the tiny per-(partition, column) drift-stat rows — never over raw data.
+Used by the driver-side drift kernel (``operators/drift._drift_from_counts``)
+once per (partition, column) group — never over raw data.
 """
 
 from __future__ import annotations
@@ -104,8 +104,3 @@ def ks_2samp_pvalue(d: float, n1: float, n2: float) -> float:
     ne = n1 * n2 / (n1 + n2)
     sq = np.sqrt(ne)
     return kolmogorov_sf((sq + 0.12 + 0.11 / sq) * d)
-
-
-# vectorized wrappers (for pandas UDFs)
-chi2_sf_vec = np.vectorize(chi2_sf, otypes=[np.float64])
-ks_2samp_pvalue_vec = np.vectorize(ks_2samp_pvalue, otypes=[np.float64])

@@ -266,8 +266,13 @@ class ValidationService:
         edges (combined min/max across both sides); string columns use
         exact category counts; integer-array columns (tokenized sequences)
         use unigram token-id histograms — vocabulary-usage drift. One
-        drift_stats pass covers all columns."""
-        from .operators.drift import drift_stats, token_unigram_histogram
+        drift_stats_broadcast pass covers all columns. A column entirely
+        NULL on either side has no distribution to compare and is reported
+        as 'no_data'."""
+        from .operators.drift import (
+            drift_stats_broadcast,
+            token_unigram_histogram,
+        )
         from .operators.histogram import categorical_counts, numeric_histogram
         from .operators.stats import _is_numeric
 
@@ -348,14 +353,14 @@ class ValidationService:
                 out = out.unionByName(p)
             return out
 
-        from .cache import release_cached
-
-        stats = drift_stats(hists(df), hists(base), partition_col=None)
-        rows = stats.collect()
-        release_cached(stats)  # keep repeated service calls cache-bounded
+        stats = drift_stats_broadcast(
+            hists(df), hists(base), partition_col=None
+        )
         cols = {}
         n_drifted = 0
-        for r in rows:
+        for r in stats.collect():
+            if r["n_ref"] == 0:  # NaN statistics, not drift
+                continue
             drifted = r["psi_drift"] != "none"
             n_drifted += int(drifted)
             cols[r["col"]] = {
@@ -374,8 +379,10 @@ class ValidationService:
                     else "retrain_or_investigate"
                 ),
             }
-        for c in no_data:
-            cols[c] = {"drift_detected": False, "recommendation": "no_data"}
+        for c in [*no_data, *numeric, *categorical, *token_cols]:
+            cols.setdefault(
+                c, {"drift_detected": False, "recommendation": "no_data"}
+            )
         return {
             "baseline_version": version,
             "columns": cols,

@@ -4,7 +4,9 @@ the 40M-row / 5.7B-token bench corpus (ref vs cur snapshots).
 The interesting number is validated tokens/sec THROUGH the unigram path:
 every token occurrence is read and counted, but the one exchange carries
 only |vocab| rows per map task (partial aggregation), so the job is
-scan-bound — the same shape at 10^12 sequences.
+scan-bound — the same shape at 10^12 sequences. The two ≤|vocab|-row
+histograms are then collected and the statistics and OOV counts come from
+the numpy drift kernel on the driver (timed inside each rep).
 
 Usage: python scripts/bench_token_drift.py [rows] [cores]
 """

@@ -1,22 +1,25 @@
 """Drift statistics: closed-form expectations on hand-built histograms
 (FIXTURES.md §5) + behavior on the drifted fixture + p-value functions
-against published table values."""
+against published table values.
 
+``tests/data/drift_frozen.json`` holds the drift rows of the earlier
+distributed column-algebra form (``numeric_drift`` → ``drift_stats`` →
+``with_drift_pvalues``: windows, joins and a pandas UDF, since deleted) on
+the drifted fixture, one row per (part_id, col) with counts, statistics,
+p-values and flags; the numpy kernel must reproduce them."""
+
+import json
 import math
+import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from data_drift_monitoring_spark.functions.pvalues import (
     chi2_sf,
     kolmogorov_sf,
     ks_2samp_pvalue,
 )
-from data_drift_monitoring_spark.operators.drift import (
-    drift_stats,
-    numeric_drift,
-    with_drift_pvalues,
-)
+from data_drift_monitoring_spark.operators.drift import drift_stats_broadcast
 from data_drift_monitoring_spark.operators.histogram import (
     categorical_counts,
     value_histogram,
@@ -33,8 +36,8 @@ def _hist(spark, rows, with_part=False):
 
 def test_psi_zero_for_identical(spark):
     rows = [("x", "a", 100), ("x", "b", 300), ("x", "c", 600)]
-    out = drift_stats(
-        _hist(spark, rows, True), _hist(spark, rows), "part_id"
+    out = drift_stats_broadcast(
+        _hist(spark, rows, True), _hist(spark, rows), partition_col="part_id"
     ).collect()[0]
     assert abs(out["psi"]) < 1e-12
     assert abs(out["js_divergence"]) < 1e-12
@@ -46,7 +49,9 @@ def test_psi_zero_for_identical(spark):
 def test_psi_hand_computed(spark):
     cur = [("x", "a", 50), ("x", "b", 50)]
     ref = [("x", "a", 80), ("x", "b", 20)]
-    out = drift_stats(_hist(spark, cur, True), _hist(spark, ref)).collect()[0]
+    out = drift_stats_broadcast(
+        _hist(spark, cur, True), _hist(spark, ref)
+    ).collect()[0]
     expected = (0.5 - 0.8) * math.log(0.5 / 0.8) + (0.5 - 0.2) * math.log(
         0.5 / 0.2
     )
@@ -69,7 +74,9 @@ def test_psi_hand_computed(spark):
 def test_missing_ref_bin_handled(spark):
     cur = [("x", "a", 90), ("x", "z", 10)]  # z unseen in reference
     ref = [("x", "a", 100), ("x", "b", 0)]
-    out = drift_stats(_hist(spark, cur, True), _hist(spark, ref)).collect()[0]
+    out = drift_stats_broadcast(
+        _hist(spark, cur, True), _hist(spark, ref)
+    ).collect()[0]
     assert out["psi"] > 0  # epsilon-clamped, finite
     assert math.isfinite(out["psi"]) and math.isfinite(out["chi2_stat"])
 
@@ -87,9 +94,13 @@ def test_pvalues_against_tables():
 def test_drifted_fixture_detection(spark, ref_df, cur_drifted_df):
     ref_ntok = value_histogram(ref_df, "n_tok", partition_col=None)
     ref_src = categorical_counts(ref_df, "source", partition_col=None)
-    nd = numeric_drift(value_histogram(cur_drifted_df, "n_tok"), ref_ntok, "n_tok")
-    cd = drift_stats(categorical_counts(cur_drifted_df, "source"), ref_src)
-    out = with_drift_pvalues(nd.unionByName(cd.select(nd.columns)))
+    out = drift_stats_broadcast(
+        value_histogram(cur_drifted_df, "n_tok").unionByName(
+            categorical_counts(cur_drifted_df, "source")
+        ),
+        ref_ntok.unionByName(ref_src),
+        numeric_cols={"n_tok"},
+    )
     rows = {(r["part_id"], r["col"]): r for r in out.collect()}
     # FIXTURES.md: p6/p7 shifted n_tok → PSI > 0.25 and significant KS
     for p in (6, 7):
@@ -112,8 +123,8 @@ def test_drifted_fixture_detection(spark, ref_df, cur_drifted_df):
 
 def test_clean_fixture_no_drift(spark, ref_df, cur_clean_df):
     ref_ntok = value_histogram(ref_df, "n_tok", partition_col=None)
-    nd = with_drift_pvalues(
-        numeric_drift(value_histogram(cur_clean_df, "n_tok"), ref_ntok, "n_tok")
+    nd = drift_stats_broadcast(
+        value_histogram(cur_clean_df, "n_tok"), ref_ntok, numeric_cols={"n_tok"}
     )
     for r in nd.collect():
         assert r["psi"] < 0.1
@@ -133,28 +144,25 @@ def test_salted_categorical_counts_match_plain(spark, cur_drifted_df):
 
 
 def test_broadcast_drift_matches_composition(spark, ref_df, cur_drifted_df):
-    """drift_stats_broadcast (the numpy kernel on the driver) must reproduce the
-    drift_stats→rebin→numeric_drift→with_drift_pvalues composition exactly:
-    same universe/clamp/dof conventions, same p-values."""
-    from data_drift_monitoring_spark.operators.drift import drift_stats_broadcast
+    """drift_stats_broadcast (the numpy kernel on the driver) reproduces the
+    frozen rows of the column-algebra composition exactly: same universe,
+    clamp and dof conventions, same p-values and flags."""
     from data_drift_monitoring_spark.plans.reference import build_ref_stats
 
-    ref_stats = build_ref_stats(ref_df).cache()
-    nh = value_histogram(cur_drifted_df, "n_tok")
-    ch = categorical_counts(cur_drifted_df, "source")
-
-    nd = numeric_drift(nh, ref_stats.filter(F.col("col") == "n_tok"), "n_tok")
-    cd = drift_stats(ch, ref_stats.filter(F.col("col") == "source"))
-    composed = {
-        (r["part_id"], r["col"]): r
-        for r in with_drift_pvalues(nd.unionByName(cd.select(nd.columns)))
-        .collect()
-    }
+    path = os.path.join(os.path.dirname(__file__), "data", "drift_frozen.json")
+    with open(path) as f:
+        frozen = json.load(f)
+    cols = frozen["columns"]
+    composed = {(r[0], r[1]): dict(zip(cols, r)) for r in frozen["rows"]}
 
     grouped = {
         (r["part_id"], r["col"]): r
         for r in drift_stats_broadcast(
-            nh.unionByName(ch), ref_stats, numeric_cols={"n_tok"}
+            value_histogram(cur_drifted_df, "n_tok").unionByName(
+                categorical_counts(cur_drifted_df, "source")
+            ),
+            build_ref_stats(ref_df),
+            numeric_cols={"n_tok"},
         ).collect()
     }
 

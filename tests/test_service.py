@@ -128,6 +128,39 @@ def test_detect_drift_all_null_column_reports_no_data(svc, clean_df, spark):
     assert not rep["summary"]["overall_drift"]
 
 
+def test_detect_drift_column_null_in_baseline_reports_no_data(svc, clean_df):
+    """A shared column with values in the current dataset but entirely NULL
+    in the baseline has no reference distribution (n_ref = 0): it is
+    reported as 'no_data', like the both-sides-NULL case, and is not drift
+    — numeric and categorical alike."""
+    null = {"score": "double", "department": "string"}
+    svc.create_baseline(
+        clean_df.withColumns(
+            {c: F.lit(None).cast(t) for c, t in null.items()}
+        )
+    )
+    rep = svc.detect_drift(clean_df)
+    for c in null:
+        assert rep["columns"][c] == {
+            "drift_detected": False, "recommendation": "no_data"
+        }, c
+    assert "psi" in rep["columns"]["salary"]
+    assert rep["summary"]["n_drifted"] == 0
+    assert not rep["summary"]["overall_drift"]
+
+
+def test_detect_drift_column_null_in_current_reports_no_data(svc, clean_df):
+    """The mirror case: values in the baseline, entirely NULL now."""
+    svc.create_baseline(clean_df)
+    rep = svc.detect_drift(
+        clean_df.withColumn("department", F.lit(None).cast("string"))
+    )
+    assert rep["columns"]["department"] == {
+        "drift_detected": False, "recommendation": "no_data"
+    }
+    assert not rep["summary"]["overall_drift"]
+
+
 def test_detect_drift_token_array_column(svc, spark):
     """An array<int> column (tokenized sequences) gets unigram
     vocabulary-usage drift in the same detect_drift pass: a vocabulary

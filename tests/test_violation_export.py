@@ -11,7 +11,10 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
-from data_drift_monitoring_spark.operators.drift import drift_stats_broadcast
+from data_drift_monitoring_spark.operators.drift import (
+    drift_stats_broadcast,
+    token_drift,
+)
 from data_drift_monitoring_spark.operators.histogram import (
     categorical_counts,
     value_histogram,
@@ -95,14 +98,18 @@ def test_no_failed_checks_exports_nothing(cur_clean_df, allowed_sources_df):
 
 
 def test_drift_runs_on_the_driver(spark, ref_df, cur_drifted_df):
-    """No Python worker stage: the plan of drift_stats_broadcast is local."""
+    """No Python worker stage: the plans of drift_stats_broadcast and of
+    token_drift are local."""
     hist = value_histogram(cur_drifted_df, "n_tok").unionByName(
         categorical_counts(cur_drifted_df, "source")
     )
     out = drift_stats_broadcast(
         hist, build_ref_stats(ref_df), numeric_cols={"n_tok"}
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" not in plan
-    assert "ArrowEvalPython" not in plan
+    tok = token_drift(cur_drifted_df, ref_df)
+    for df in (out, tok):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapGroupsInPandas" not in plan
+        assert "ArrowEvalPython" not in plan
     assert out.count() == 2 * cur_drifted_df.select("part_id").distinct().count()
+    assert tok.count() == 1
