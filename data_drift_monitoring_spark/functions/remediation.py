@@ -21,6 +21,8 @@ import json
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import local_frame
+
 # (check, severity, priority, action, snippet template)
 # Defaults mirror the per-check recommendation chains in
 # functions/verdicts.py so the rules file is an override, not a fork.
@@ -91,8 +93,9 @@ def remediation_plan(
     matching rule fall back to ('medium', 'investigate'). The join is a
     broadcast of the rules table against per-partition verdict rows —
     O(partitions × checks) rows, nothing row-scale."""
-    spark = verdicts.sparkSession
-    rules_df = spark.createDataFrame(rules or DEFAULT_RULES, _RULES_SCHEMA)
+    rules_df = local_frame(
+        verdicts.sparkSession, rules or DEFAULT_RULES, _RULES_SCHEMA
+    )
     failed = verdicts.filter(~F.col("passed"))
     j = failed.join(F.broadcast(rules_df), on=["check", "severity"], how="left")
     prio = F.coalesce(F.col("priority"), F.lit("medium"))

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions.verdicts import psi_classification
+from ..session import local_frame
 
 PSI_EPS = 1e-6
 
@@ -171,9 +172,10 @@ def drift_stats_broadcast(
     O(partitions × bins) rows, so they are collected together with the
     reference histograms, every statistic AND p-value for a (partition,
     column) group comes from the numpy kernel ``_drift_from_counts``, and
-    the result is a small local DataFrame: no Python worker and no stage
-    of its own; the only distributed work is the histogram aggregate that
-    feeds it (SURVEY.md §2.10). Columns in ``numeric_cols`` get PSI/JS/chi²
+    the result is a small local DataFrame built through Arrow
+    (``local_frame``): no Python worker and no stage of its own; the only
+    distributed work is the histogram aggregate that feeds it (SURVEY.md
+    §2.10). Columns in ``numeric_cols`` get PSI/JS/chi²
     on reference-quantile buckets; every other column is compared bin by
     bin. A column absent from the reference gets n_ref = 0 and NaN
     statistics. ``partition_col=None`` takes (col, bin, cnt) histograms and
@@ -188,7 +190,7 @@ def drift_stats_broadcast(
     t = config.thresholds
     psi = F.col("psi")
     out = (
-        cur_hist.sparkSession.createDataFrame(stats, _KERNEL_SCHEMA)
+        local_frame(cur_hist.sparkSession, stats, _KERNEL_SCHEMA)
         .withColumn("psi_drift", psi_classification(psi, t))
         .withColumn("ks_significant", F.col("ks_pvalue") < t.ks_alpha)
         .withColumn("chi2_significant", F.col("chi2_pvalue") < t.chi2_alpha)
@@ -275,7 +277,8 @@ def token_drift(
             st["chi2_stat"], st["chi2_dof"], len(oov),
             100.0 * sum(oov) / st["n_cur"],
         ))
-    out = cur.sparkSession.createDataFrame(
+    out = local_frame(
+        cur.sparkSession,
         rows,
         "col string, n_cur long, n_ref long, psi double, js_divergence double, "
         "chi2_stat double, chi2_dof long, new_tokens long, oov_pct double",

@@ -17,6 +17,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..session import local_frame
+
 try:  # pragma: no cover - not installed in this container
     from PIL import Image  # noqa: F401
 
@@ -60,7 +62,7 @@ def synth_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
         )
         for i in range(n)
     ]
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def _fake_feature(payload: bytes, dim: int = 8) -> np.ndarray:

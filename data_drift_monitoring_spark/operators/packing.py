@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
+
 
 def _bucketed_cumsum(
     df: DataFrame,
@@ -88,10 +90,10 @@ def _bucketed_cumsum(
         p = r[part_col]
         offsets.append((p, r["__p_bucket"], running.get(p, 0)))
         running[p] = running.get(p, 0) + r["__p_sum"]
-    spark = df.sparkSession
     from pyspark.sql.types import LongType, StructField, StructType
 
-    off_df = spark.createDataFrame(
+    off_df = local_frame(
+        df.sparkSession,
         offsets,
         StructType(
             [

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import local_frame
 from .dedup import portable_word_hash
 
 SAMPLE_DENOM = 1_000_000
@@ -125,7 +126,8 @@ def stratified_sample(
     from pyspark.sql.types import LongType, StructField, StructType
 
     strata_type = df.schema[strata_col].dataType
-    rate_df = spark.createDataFrame(
+    rate_df = local_frame(
+        spark,
         thresholds,
         StructType(
             [

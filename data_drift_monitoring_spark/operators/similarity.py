@@ -17,6 +17,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import local_frame
+
 
 def vec_matrix(col) -> np.ndarray:
     """Stack an Arrow-delivered batch of array<float> values (a pandas
@@ -193,9 +195,10 @@ def ivf_topk(
             probe_rows.append(
                 (int(qid), int(c), [float(x) for x in qpdf[vec_col][i]])
             )
-    spark = index.sparkSession
-    probes = spark.createDataFrame(
-        probe_rows, f"{query_key} long, cell int, _qv array<float>"
+    probes = local_frame(
+        index.sparkSession,
+        probe_rows,
+        f"{query_key} long, cell int, _qv array<float>",
     )
     scored = index.join(F.broadcast(probes), on="cell").select(
         query_key,

@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import local_frame
+
 # the host must START and END alphanumeric: with '.'/'-' allowed at the
 # edge, a sentence-terminating period after a bare URL ("see
 # https://spam.example.") would be absorbed into the host, and the
@@ -83,8 +85,8 @@ def _blocked_col(
     C4/RefinedWeb list is trivially bypassed by subdomains otherwise;
     round-3 ADVICE). Cost stays O(labels) per host against the
     broadcast set, never O(|blocklist|) per doc."""
-    bl = spark.createDataFrame(
-        [(sorted({d.lower() for d in blocklist}),)], "bl array<string>"
+    bl = local_frame(
+        spark, [(sorted({d.lower() for d in blocklist}),)], "bl array<string>"
     )
     sufs = F.array_distinct(
         F.flatten(F.transform(F.col("domains"), _dot_suffixes))

@@ -13,9 +13,13 @@ score sequentially over one in-memory DataFrame. Here (SURVEY.md §3.2):
       counts and drift (numpy kernel) vs the reference histograms computed
       on the driver
     → verdict rows from ONE projection (severity when-chains) over a small
-      per-part DataFrame + quality score
+      per-part DataFrame + quality score; that frame is built on the driver
+      through Arrow (``session.local_frame``), so it plans as a local scan
+      and no action on the verdicts starts a Python worker
     → violation rows for the failed (part, check) pairs only
-    → write: results table, violations table, manifest rows (lineage)
+    → write: results table, violations table, manifest rows (lineage); the
+      manifest digests come from the in-memory verdict frame, not a
+      read-back of the results table
 
 Verdict row shape: (run_id, part_id, check, column, value, pct, severity,
 recommendation, passed) — the per-partition generalization of the
@@ -48,6 +52,7 @@ from ..operators.invariants import (
 from ..operators.stats import sequence_stats_prepared
 from ..operators.uniqueness import duplicate_stats, duplicate_violations
 from ..schema import SEQUENCES_SCHEMA, validate_schema
+from ..session import local_frame
 from ..sources import manifest as M
 from ..sources.tables import ParquetTableIO
 
@@ -236,7 +241,9 @@ def build_verdicts(
     collected from the persisted ``prepare_sequences`` projection, drift
     (numpy kernel) and referential counts are computed on the driver, and
     the verdict rows come from ONE projection over a small per-part
-    DataFrame — no union of per-check plans, no Python worker.
+    DataFrame — no union of per-check plans. That frame is built with
+    ``local_frame`` (Arrow, a local scan), so the verdicts, the score and
+    every action on them run without a Python worker.
 
     ``ref_digests`` (doc_id, tok_digest) is the preferred reference-side
     artifact for the per-row token-equality invariant; ``ref_sequences``
@@ -308,14 +315,13 @@ def build_verdicts(
             hist_rows, collect_ref_hist(ref_stats), {"n_tok"},
             config.drift_bins,
         ):
-            wide[s["part_id"]]["drift"].append(
-                (s["col"], s["psi"], s["ks_stat"], s["ks_pvalue"])
-            )
+            wide[s["part_id"]]["drift"].append(s)
 
     # one partition: the rows are few, and every later action on the
     # verdicts (score, writes) then runs one task, not one per core
-    per_part = df.sparkSession.createDataFrame(
-        list(wide.values()),
+    per_part = local_frame(
+        df.sparkSession,
+        wide.values(),
         _WIDE_SCHEMA.format(prepared.schema[part].dataType.simpleString()),
     ).coalesce(1)
     out = per_part.select("part_id", F.inline(_verdict_structs(t)))
@@ -578,11 +584,11 @@ def run_checks(
     sv = validate_schema(df.schema, SEQUENCES_SCHEMA)
     if not sv.is_valid:
         raise ValueError(f"schema validation failed: {sv.errors}")
-    t = config.thresholds
-    n = df.limit((min_rows or t.min_rows)).count()
-    if n < (min_rows or t.min_rows):
+    floor = config.thresholds.min_rows if min_rows is None else min_rows
+    n = df.limit(floor).count()
+    if n < floor:
         raise ValueError(
-            f"dataset has {n} rows; minimum is {min_rows or t.min_rows} "
+            f"dataset has {n} rows; minimum is {floor} "
             "(reference MIN_ROWS gate, config/settings.py:58)"
         )
 
@@ -633,20 +639,13 @@ def run_checks(
             VIOLATIONS_TABLE,
         )
     # everything is on disk now; drop the cached projection so repeated
-    # run_checks calls (or a driver loop) don't accumulate cache entries
+    # run_checks calls (or a driver loop) don't accumulate cache entries.
+    # The verdict and score frames are local data: digesting and returning
+    # them reads nothing back.
     release_cached(built)
-    digests = M.stats_digests(
-        io.read_appended(RESULTS_TABLE).filter(F.col("run_id") == run_id)
-    )
+    digests = M.stats_digests(verdicts)
     M.record_partitions(
         spark, io, run_id, sorted(digests), "done", snapshot_id,
         digests=digests, started_at=started, now=now,
-    )
-    # return the persisted read-backs, as the pruned early-return path does
-    verdicts = io.read_appended(RESULTS_TABLE).filter(
-        F.col("run_id") == run_id
-    )
-    score = io.read_appended(RESULTS_TABLE + "_score").filter(
-        F.col("run_id") == run_id
     )
     return RunResult(run_id, verdicts, score, pruned)

@@ -33,6 +33,7 @@ from .config import DEFAULT_CONFIG, EngineConfig
 from .operators.stats import column_profile, missing_patterns
 from .operators.uniqueness import duplicate_stats
 from .plans.compare import compare_metadata, no_baseline
+from .session import local_frame
 from .sources.ingest import (
     dataset_metadata,
     read_dataset,
@@ -115,8 +116,8 @@ class ValidationService:
             dup_of = prior[0]["file_id"] if prior else None
         snap = self.io.write(df, "uploads", now=now)
         self.io.append(
-            self.spark.createDataFrame(
-                [(digest, snap)], "digest string, file_id string"
+            local_frame(
+                self.spark, [(digest, snap)], "digest string, file_id string"
             ),
             DIGEST_TABLE,
         )
@@ -149,8 +150,10 @@ class ValidationService:
         meta = meta or dataset_metadata(df, self.config)
         now = now or datetime.now(timezone.utc)
         snap = self.io.write(df, BASELINE_TABLE, now=now)
-        side = self.spark.createDataFrame(
-            [(snap, json.dumps(meta))], "version_id string, metadata string"
+        side = local_frame(
+            self.spark,
+            [(snap, json.dumps(meta))],
+            "version_id string, metadata string",
         )
         self.io.append(side, BASELINE_META_TABLE)
         return snap
@@ -243,7 +246,8 @@ class ValidationService:
             t,
         )
         if persist:
-            row = self.spark.createDataFrame(
+            row = local_frame(
+                self.spark,
                 [(report["report_id"], json.dumps(report, default=str))],
                 "report_id string, report string",
             )

@@ -5,13 +5,19 @@ The reference has no session concept (eager pandas in one uvicorn worker,
 execution; the factory encodes the scale-oriented defaults the engine relies
 on: AQE (runtime coalescing + skew-join handling), Arrow for the pandas-UDF
 boundary, and an explicit shuffle-partition count sized to the cluster.
+``local_frame`` is the one way the engine turns driver-side rows into a
+DataFrame.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
 
 
 def local_cores() -> str:
@@ -69,3 +75,26 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: Iterable[tuple | dict],
+    schema: StructType | str,
+) -> DataFrame:
+    """A DataFrame over rows built on the driver (tuples in schema order, or
+    dicts keyed by field name; extra keys are ignored), with ``schema`` a
+    ``StructType`` or a DDL string.
+
+    The rows cross to the JVM once, as an Arrow table, and the frame plans
+    as a ``LocalTableScan``. ``createDataFrame`` over a Python list instead
+    pickles the rows into a ``PythonRDD``, and every action on that frame
+    runs them through Python workers again."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    names = schema.fieldNames()
+    table = pa.Table.from_pylist(
+        [r if isinstance(r, dict) else dict(zip(names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema)

@@ -20,6 +20,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..schema import MANIFEST_SCHEMA
+from ..session import local_frame
 from .tables import ParquetTableIO
 
 MANIFEST_TABLE = "_manifest"
@@ -81,8 +82,7 @@ def record_partitions(
         )
         for p in part_ids
     ]
-    df = spark.createDataFrame(rows, schema=MANIFEST_SCHEMA)
-    io.append(df, MANIFEST_TABLE)
+    io.append(local_frame(spark, rows, MANIFEST_SCHEMA), MANIFEST_TABLE)
 
 
 def stats_digests(verdicts: DataFrame, partition_col: str = "part_id") -> dict[int, str]:

@@ -27,6 +27,7 @@ from ..operators.repetition import repetition_flags
 from ..operators.span_dedup import ngram_occurrences, span_dedup_stats_against_grams
 from ..operators.text_analysis import tokenize_words
 from ..operators.urls import with_urls
+from ..session import local_frame
 
 DOCS_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
@@ -136,7 +137,7 @@ def start_curation(
             except AnalysisException:  # first batch: no index yet; any
                 # other failure (corrupt index, permissions) must raise —
                 # silently treating it as empty would skip dedup quietly
-                idx = spark.createDataFrame([], "gram bigint")
+                idx = local_frame(spark, [], "gram bigint")
             stats = span_dedup_stats_against_grams(idx, tok, k=span_k)
             dup_ids = stats.filter(
                 (F.col("n_tok") > 0)

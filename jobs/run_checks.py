@@ -40,7 +40,7 @@ def main(argv: list[str] | None = None) -> int:
     from data_drift_monitoring_spark.config import ALLOWED_SOURCES
     from data_drift_monitoring_spark.plans import reference as R
     from data_drift_monitoring_spark.plans.pipeline import run_checks
-    from data_drift_monitoring_spark.session import get_spark
+    from data_drift_monitoring_spark.session import get_spark, local_frame
     from data_drift_monitoring_spark.sources.tables import ParquetTableIO
 
     spark = get_spark(app_name="run-checks", master=args.master)
@@ -55,8 +55,8 @@ def main(argv: list[str] | None = None) -> int:
     if args.allowed_sources:
         dim = spark.read.parquet(args.allowed_sources)
     else:
-        dim = spark.createDataFrame(
-            [(s,) for s in ALLOWED_SOURCES], "source string"
+        dim = local_frame(
+            spark, [(s,) for s in ALLOWED_SOURCES], "source string"
         )
 
     result = run_checks(

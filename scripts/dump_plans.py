@@ -28,8 +28,12 @@ plans may further coalesce partitions at runtime). What to look for:
   histograms never shuffle the fact side.
 - **WholeStageCodegen** spans cover the hot path. The verdict path has no
   Python worker stage: drift statistics come from a numpy kernel on the
-  driver over the collected histograms, so `drift_stats_broadcast` plans as
-  a scan of driver-side rows (`Scan ExistingRDD`).
+  driver over the collected histograms. Every frame the engine builds on
+  the driver (the `drift_stats_broadcast` result, the per-part verdict
+  frame, the manifest rows) crosses to the JVM once as an Arrow table
+  (`session.local_frame`) and plans as a `LocalTableScan`, not as a
+  `Scan ExistingRDD` over a PythonRDD that every action re-runs through
+  Python workers.
 """
 
 
@@ -111,8 +115,9 @@ def main() -> None:
             "rows and is the only distributed drift work; "
             "drift_stats_broadcast collects it with the reference "
             "histograms and computes all statistics and p-values in numpy "
-            "on the driver, so its own plan is a scan of those driver-side "
-            "rows (no FlatMapGroupsInPandas/ArrowEvalPython):\n\n```\n"
+            "on the driver, so its own plan is a local scan of those "
+            "driver-side rows (LocalTableScan; no FlatMapGroupsInPandas/"
+            "ArrowEvalPython):\n\n```\n"
             + fmt(drift_stats_broadcast(hist, rs, numeric_cols={"n_tok"}))
             + "```",
             hist,

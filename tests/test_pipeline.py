@@ -6,7 +6,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from data_drift_monitoring_spark.plans.pipeline import run_checks
+from data_drift_monitoring_spark.plans.pipeline import RESULTS_TABLE, run_checks
 from data_drift_monitoring_spark.plans.reference import (
     init_reference,
     load_ref_stats,
@@ -92,6 +92,11 @@ def test_min_rows_gate(spark, data_dir):
     df = spark.read.parquet(os.path.join(data_dir, "invalid"))
     with pytest.raises(ValueError, match="minimum"):
         run_checks(spark, df)
+    with pytest.raises(ValueError, match="minimum is 4"):
+        run_checks(spark, df, min_rows=4)
+    # an explicit 0 turns the gate off; it is not the default floor of 10
+    res = run_checks(spark, df, min_rows=0)
+    assert res.verdicts.count() > 0
 
 
 def test_schema_gate(spark):
@@ -133,6 +138,41 @@ def test_digest_idempotency(spark, warehouse, cur_drifted_df, allowed_sources_df
     for r in rows:
         by_run.setdefault(r["run_id"], {})[r["part_id"]] = r["stats_digest"]
     assert by_run["run_dg_a"] == by_run["run_dg_b"]
+
+
+def test_returned_frames_equal_the_appended_rows(
+    spark, warehouse, cur_drifted_df, allowed_sources_df
+):
+    """run_checks returns its in-memory verdict and score frames and digests
+    them in memory; both must equal what it appended for the run."""
+    io, snap = warehouse
+    res = run_checks(
+        spark, cur_drifted_df, io, "run_frames",
+        load_ref_stats(io), allowed_sources_df, None, snapshot_id=snap,
+    )
+
+    def rows(df, cols):
+        # repr: NaN drift statistics compare equal by representation
+        return sorted(repr(tuple(r)) for r in df.select(cols).collect())
+
+    back = {}
+    for got, table in (
+        (res.verdicts, RESULTS_TABLE), (res.score, RESULTS_TABLE + "_score")
+    ):
+        back[table] = io.read_appended(table).filter(
+            F.col("run_id") == "run_frames"
+        )
+        assert back[table].columns == got.columns
+        assert rows(got, got.columns) == rows(back[table], got.columns)
+    recorded = {
+        r["part_id"]: r["stats_digest"]
+        for r in io.read_appended(M.MANIFEST_TABLE)
+        .filter((F.col("run_id") == "run_frames") & (F.col("status") == "done"))
+        .collect()
+    }
+    assert recorded == M.stats_digests(back[RESULTS_TABLE])
+    assert recorded == M.stats_digests(res.verdicts)
+    assert sorted(recorded) == list(range(8))
 
 
 def test_violation_rows_match_verdict_counts(

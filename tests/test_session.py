@@ -1,8 +1,15 @@
-"""Host-fit defaults of the SparkSession factory."""
+"""Host-fit defaults of the SparkSession factory, and ``local_frame``."""
 
+import ast
+import math
 import os
+from pathlib import Path
 
-from data_drift_monitoring_spark.session import local_cores
+from pyspark.sql import types as T
+
+from data_drift_monitoring_spark.session import local_cores, local_frame
+
+ROOT = Path(__file__).resolve().parent.parent
 
 
 def test_local_cores_defaults_to_affinity_mask(monkeypatch):
@@ -14,3 +21,57 @@ def test_local_cores_env_override(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     assert local_cores() == "3"
 
+
+def test_local_frame_rows_schema_and_plan(spark):
+    ddl = "k int, x double, tags array<string>, s struct<a: string, b: long>"
+    df = local_frame(
+        spark,
+        [
+            (1, float("nan"), ["a"], {"a": "p", "b": 2}),
+            {"k": 2, "x": 1.5, "extra": "ignored"},
+        ],
+        ddl,
+    )
+    assert df.schema == T.DataType.fromDDL(ddl)
+    rows = df.orderBy("k").collect()
+    assert math.isnan(rows[0]["x"]) and rows[0]["tags"] == ["a"]
+    assert rows[0]["s"]["b"] == 2
+    assert rows[1]["tags"] is None and rows[1]["x"] == 1.5
+    assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+
+    empty = local_frame(spark, [], T.StructType([T.StructField("g", T.LongType())]))
+    assert empty.count() == 0 and empty.columns == ["g"]
+
+
+class _CreateDataFrameCalls(ast.NodeVisitor):
+    """(innermost enclosing function, or None) of each ``createDataFrame``
+    call in a module."""
+
+    def __init__(self):
+        self.stack, self.found = [], []
+
+    def visit_FunctionDef(self, node):
+        self.stack.append(node.name)
+        self.generic_visit(node)
+        self.stack.pop()
+
+    visit_AsyncFunctionDef = visit_FunctionDef
+
+    def visit_Call(self, node):
+        f = node.func
+        if isinstance(f, ast.Attribute) and f.attr == "createDataFrame":
+            self.found.append(self.stack[-1] if self.stack else None)
+        self.generic_visit(node)
+
+
+def test_create_dataframe_only_inside_local_frame():
+    """Every driver-built frame in the engine and the jobs goes through
+    ``local_frame``: a list-built ``createDataFrame`` is pickled into a
+    PythonRDD that every action re-runs through Python workers."""
+    calls = []
+    for top in ("data_drift_monitoring_spark", "jobs"):
+        for path in sorted((ROOT / top).rglob("*.py")):
+            v = _CreateDataFrameCalls()
+            v.visit(ast.parse(path.read_text(), str(path)))
+            calls += [(path.relative_to(ROOT).as_posix(), fn) for fn in v.found]
+    assert calls == [("data_drift_monitoring_spark/session.py", "local_frame")]

@@ -29,6 +29,7 @@ from data_drift_monitoring_spark.plans.pipeline import (
     run_checks,
 )
 from data_drift_monitoring_spark.plans.reference import build_ref_stats
+from data_drift_monitoring_spark.sources.manifest import record_partitions
 from data_drift_monitoring_spark.sources.tables import ParquetTableIO
 
 COLS = ["part_id", "doc_id", "check", "detail"]
@@ -97,9 +98,21 @@ def test_no_failed_checks_exports_nothing(cur_clean_df, allowed_sources_df):
     assert out.count() == 0
 
 
-def test_drift_runs_on_the_driver(spark, ref_df, cur_drifted_df):
-    """No Python worker stage: the plans of drift_stats_broadcast and of
-    token_drift are local."""
+class _CaptureIO:
+    """Stands in for a table IO and keeps the frames appended to it."""
+
+    def __init__(self):
+        self.frames = []
+
+    def append(self, df, table):
+        self.frames.append(df)
+
+
+def test_drift_runs_on_the_driver(spark, ref_df, cur_drifted_df, refs,
+                                  allowed_sources_df):
+    """No Python worker stage: drift_stats_broadcast, token_drift, the
+    verdict frame and the manifest rows are driver-built local frames —
+    no pandas operator in their plans and no PythonRDD under them."""
     hist = value_histogram(cur_drifted_df, "n_tok").unionByName(
         categorical_counts(cur_drifted_df, "source")
     )
@@ -107,9 +120,22 @@ def test_drift_runs_on_the_driver(spark, ref_df, cur_drifted_df):
         hist, build_ref_stats(ref_df), numeric_cols={"n_tok"}
     )
     tok = token_drift(cur_drifted_df, ref_df)
-    for df in (out, tok):
+    ref_stats, rd = refs
+    verdicts = build_verdicts(
+        cur_drifted_df, ref_stats, allowed_sources_df, ref_digests=rd
+    )
+    io = _CaptureIO()
+    record_partitions(spark, io, "r", [0, 1], "done", digests={0: "ab"})
+    for df in (out, tok, verdicts, *io.frames):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "FlatMapGroupsInPandas" not in plan
         assert "ArrowEvalPython" not in plan
+        assert "PythonRDD" not in (
+            df._jdf.queryExecution().toRdd().toDebugString()
+        )
     assert out.count() == 2 * cur_drifted_df.select("part_id").distinct().count()
     assert tok.count() == 1
+    assert [r["stats_digest"] for r in io.frames[0].orderBy("part_id").collect()] == [
+        "ab", None,
+    ]
+    release_cached(verdicts)
