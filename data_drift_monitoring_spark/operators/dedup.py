@@ -682,7 +682,8 @@ def _simhash64(words_hashes: pd.Series) -> pd.Series:
     (np.add.reduceat over the flattened row boundaries), and the 64 sign
     bits packed with one shift-dot. No per-row or per-bit Python loops:
     measured 5.5× the per-row-numpy variant on 200k short docs and 1.4×
-    on 50k long docs (scripts/bench_simhash.py)."""
+    on 50k long docs (measured once on the round-3 32-core host; no
+    script in the repo reproduces it)."""
     n = len(words_hashes)
     out = np.zeros(n, dtype=np.int64)
     lens = np.fromiter(
