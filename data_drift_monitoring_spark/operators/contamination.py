@@ -19,8 +19,8 @@ Scale shape (the part that matters at 100 TB):
   strings; pass ``dedup.portable_word_hash`` for a hash an external SQL
   engine can reproduce bit-exactly (the oracle gate does).
 
-Normalization mirrors ``dedup._with_shingles`` (lowercase, whitespace
-collapse, k-word windows, one whole-doc gram for docs shorter than k) so
+Grams are ``dedup._with_shingles``'s (lowercase, whitespace collapse,
+k-word windows, one whole-doc gram for docs shorter than k) so
 contamination and near-dup dedup agree on what "the same text" means.
 """
 
@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from data_drift_monitoring_spark.operators.dedup import (
     _doc_shingle_hashes_arrow,
     _mix_constants,
+    _with_shingles,
 )
 
 
@@ -117,29 +118,14 @@ def _gram_table(
     Default ``gram_hash=None`` takes the vectorized zero-copy Arrow path
     (:func:`_gram_rows_arrow`). Pass a string hash (e.g.
     ``dedup.portable_word_hash``) for cross-engine-reproducible grams via
-    JVM expressions — there the words array is projected as a REAL column
-    before the window transform: interpreted HOF lambdas have no common-
-    subexpression elimination, so an inline split() referenced from the
-    lambda body would re-evaluate PER WINDOW — O(words²) per doc (8.8×
-    measured at n=8).
+    the JVM shingle expression ``dedup._with_shingles``.
     """
-    kid = F.col(key_col).alias(f"{side}_id")
     if gram_hash is None:
         return _gram_rows_arrow(df, text_col, key_col, n, side)
-    else:
-        words = F.split(
-            F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "), " "
-        )
-        body = lambda i: gram_hash(
-            F.concat_ws(" ", F.slice(F.col("_w"), i + 1, n))
-        )
-        cnt = F.greatest(F.size("_w") - F.lit(n - 1), F.lit(1))
-        grams = F.array_distinct(
-            F.transform(F.sequence(F.lit(0), cnt - 1), body)
-        )
-        staged = df.select(kid, words.alias("_w")).select(
-            f"{side}_id", grams.alias("_gs")
-        )
+    staged = _with_shingles(
+        df.select(F.col(key_col).alias(f"{side}_id"), text_col),
+        text_col, n, "_gs", gram_hash,
+    ).select(f"{side}_id", F.array_distinct("_gs").alias("_gs"))
     return (
         staged.withColumn(f"n_{side}_grams", F.size("_gs"))
         .select(f"{side}_id", f"n_{side}_grams", F.explode("_gs").alias("g"))

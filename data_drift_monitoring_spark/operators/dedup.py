@@ -17,6 +17,12 @@ Scale design:
 - embedding cosine: random-hyperplane LSH bucket join + exact cosine within
   bucket (brute force cross-join is the small-scale baseline in
   similarity.py).
+
+Every banded finder turns bucket rows into candidate pairs through one of
+two helpers, which also own the finder's persisted frame:
+``_bucket_self_join`` (corpus self-join, lossy chunk-salting of oversized
+buckets) and ``_bucket_pairs_against`` (index × new batch, exact
+replication salting).
 """
 
 from __future__ import annotations
@@ -32,7 +38,7 @@ from ..cache import (  # release_cached: re-exported for callers
     release_frame,
     track_cached,
 )
-from ._tokenize import expr_word_hashes, expr_word_hashes_arrow
+from ._tokenize import expr_word_hashes_arrow
 from .similarity import vec_matrix
 
 # Mersenne prime 2^31-1: universal hashing a*x+b mod p. The 31-bit field
@@ -82,10 +88,13 @@ def dedup_exact_content(
 
 
 def _with_shingles(
-    df: DataFrame, text_col: str, k: int, out_col: str = "_sh"
+    df: DataFrame, text_col: str, k: int, out_col: str = "_sh",
+    gram_hash=F.xxhash64,
 ) -> DataFrame:
     """Add ``out_col``: k-word shingle hash array (split → slide window →
-    xxhash64). All JVM higher-order functions; no Python in the row path.
+    ``gram_hash`` of the space-joined window, xxhash64 by default). All
+    JVM higher-order functions; no Python in the row path. Docs shorter
+    than k words get ONE shingle over all their words.
 
     The words array is projected as a REAL column before the window
     transform: HOF lambdas are interpreted with no common-subexpression
@@ -97,49 +106,13 @@ def _with_shingles(
     n = F.greatest(F.size(F.col("_words")) - F.lit(k - 1), F.lit(1))
     sh = F.transform(
         F.sequence(F.lit(0), n - 1),
-        lambda i: F.xxhash64(F.concat_ws(" ", F.slice(F.col("_words"), i + 1, k))),
+        lambda i: gram_hash(F.concat_ws(" ", F.slice(F.col("_words"), i + 1, k))),
     )
     return (
         df.withColumn("_words", words)
         .withColumn(out_col, sh)
         .drop("_words")
     )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = 64,
-    shingle_k: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """Add ``minhash`` (array<bigint>, length num_hashes): per hash i,
-    min over shingles of (aᵢ·h + bᵢ mod 2³¹-1). Deterministic in seed.
-
-    The pandas-UDF twin of :func:`minhash_signature_table`, which is the
-    path every LSH stage uses; this one is kept as the reference that
-    ``test_minhash_signature_table_bit_identical`` holds the mapInArrow
-    core to. One vectorized pass: tokenize and dictionary-encode in
-    pyarrow C, hash only the vocabulary (pandas.util.hash_array, cython
-    siphash, deterministic — see _tokenize.expr_word_hashes), combine
-    word hashes into shingle hashes with flat uint64 slicing (no per-doc
-    loop), then ONE ``np.minimum.reduceat`` segment-min per hash chunk."""
-    rng = np.random.default_rng(seed)
-    ua = rng.integers(1, _MERSENNE, size=num_hashes, dtype=np.int64).astype(
-        np.uint64
-    )
-    ub = rng.integers(0, _MERSENNE, size=num_hashes, dtype=np.int64).astype(
-        np.uint64
-    )
-    mix = _mix_constants(shingle_k)
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def _mh(texts: pd.Series) -> pd.Series:
-        sh, sdoc = _doc_shingle_hashes(texts, shingle_k, mix)
-        out = _minhash_matrix(sh, sdoc, len(texts), ua, ub, num_hashes)
-        return pd.Series(list(out))
-
-    return df.withColumn("minhash", _mh(F.col(text_col)))
 
 
 def _minhash_matrix(
@@ -177,20 +150,16 @@ def minhash_signature_table(
     shingle_k: int = 3,
     seed: int = 42,
 ) -> DataFrame:
-    """(key_col, minhash) — the signature table every LSH stage actually
-    consumes — via ``mapInArrow`` instead of a pandas UDF.
+    """(key_col, minhash) — the signature table every LSH stage consumes:
+    ``minhash`` (array<bigint>, length num_hashes) holds, per hash i, the
+    min over shingles of (aᵢ·h + bᵢ mod 2³¹-1); deterministic in seed.
 
-    Why this beats :func:`minhash_signatures`'s pandas-UDF path on a
-    memory-bandwidth-bound host: the pandas UDF makes Spark materialize
-    every text as a Python str object (one allocation + copy per doc on
-    the arrow→pandas edge) and rebuilds the result list array from a
-    Series of per-row ndarrays; here the text column is consumed
-    ZERO-COPY off the Arrow IPC batch (``expr_word_hashes_arrow``), the
-    key column is forwarded untouched, and the signature list array is
-    assembled from one flat int64 buffer. Signatures are bit-identical
-    to ``minhash_signatures(df, ...)`` for the same seed
-    (tested: test_dedup_similarity_text). Text is deliberately NOT in
-    the output schema, so it is never re-serialized to the JVM."""
+    Built by ``mapInArrow``: the text column is consumed ZERO-COPY off
+    the Arrow IPC batch (``_doc_shingle_hashes_arrow``), the key column
+    is forwarded untouched, and the signature list array is assembled
+    from one flat int64 buffer. Text is deliberately NOT in the output
+    schema, so it is never re-serialized to the JVM. Signatures are
+    pinned by ``tests/data/minhash_frozen.json``."""
     import pyarrow as pa
 
     rng = np.random.default_rng(seed)
@@ -246,31 +215,17 @@ def _mix_constants(k: int) -> "np.ndarray":
     return mix
 
 
-def _doc_shingle_hashes(
-    texts: "pd.Series", k: int, mix: "np.ndarray"
-) -> tuple:
-    """Vectorized per-doc k-word shingle hashes for Arrow UDFs: word
-    hashes from the shared pyarrow dictionary-encode path (only the
-    vocabulary is materialized — _tokenize.expr_word_hashes), combined
-    into shingle hashes with flat uint64 slicing (no per-doc loop). Docs
-    shorter than k words get ONE shingle over all their words (mirror of
-    slice() clamping in ``_with_shingles``). Returns (sh uint64
-    shingle hashes, sdoc int64 doc index per shingle) sorted by doc."""
-    # expr-convention word hashes (ASCII \s class only, no trim —
-    # round-3 ADVICE parity) via the shared pyarrow dictionary-encode
-    # path: only the vocabulary is materialized as Python objects,
-    # hashes bit-identical to flattening every instance, measured 2.9×
-    # on 200k corpus docs / 16M words — the former flatten list-comp
-    # and per-instance object creation were the memory-traffic hot
-    # spot the pinned ladders exposed (see _tokenize.expr_word_hashes).
-    lens, hw = expr_word_hashes(texts, trim=False)
-    return _shingles_from_word_hashes(lens, hw, len(texts), k, mix)
-
-
 def _doc_shingle_hashes_arrow(arr, k: int, mix: "np.ndarray") -> tuple:
-    """`_doc_shingle_hashes` over a pyarrow string Array/ChunkedArray —
-    the zero-copy ``mapInArrow`` entry point (no pandas object Series
-    ever materialized for the text). Bit-identical output."""
+    """Vectorized per-doc k-word shingle hashes over a pyarrow string
+    Array/ChunkedArray — the zero-copy ``mapInArrow`` entry point (no
+    pandas object Series is ever materialized for the text). Word hashes
+    follow the expr convention (ASCII \\s class only, no trim —
+    _tokenize.expr_word_hashes_arrow; only the vocabulary is
+    materialized), combined into shingle hashes with flat uint64 slicing
+    (no per-doc loop). Docs shorter than k words get ONE shingle over all
+    their words (mirror of slice() clamping in ``_with_shingles``).
+    Returns (sh uint64 shingle hashes, sdoc int64 doc index per shingle)
+    sorted by doc."""
     lens, hw = expr_word_hashes_arrow(arr, trim=False)
     return _shingles_from_word_hashes(lens, hw, len(arr), k, mix)
 
@@ -309,52 +264,74 @@ def _shingles_from_word_hashes(
     return sh, sdoc
 
 
-def _salt_oversized(
-    d: DataFrame,
+def _bucket_self_join(
+    banded: DataFrame,
     bucket_cols: list[str],
-    order_col: str,
     max_bucket_size: int | None,
-) -> DataFrame:
-    """Append ``_salt``: rows of a bucket larger than ``max_bucket_size``
-    are chunked into ~ceil(n/cap) sub-buckets; smaller buckets keep salt 0
-    and are unaffected.
+    carry: tuple = (),
+) -> tuple[DataFrame, DataFrame]:
+    """Self-join banded rows ``(k, *bucket_cols, *carry)`` on their bucket:
+    returns ``(joined, persisted)``, where ``joined`` holds every pair
+    ``(a, b, *{c}_a, *{c}_b)`` with ``a < b`` sharing a bucket (a pair
+    sharing several buckets appears once per bucket) and ``persisted`` is
+    the cached ``banded`` frame, for the caller to track on its result.
 
-    This bounds every within-bucket self-join task at ~cap² comparisons —
-    a degenerate bucket (near-identical content all hashing together) can
-    no longer produce a runaway quadratic task at scale. The documented
-    recall bound: pairs spanning two chunks of an oversized bucket are
-    missed, but every member of such a bucket is still compared against
-    its chunk co-members, which is what dedup connectivity needs.
+    ``banded`` is persisted (MEMORY_AND_DISK) unconditionally: both join
+    sides and the census read it, and uncached each would re-run the
+    signature UDF that produced it (plan-counted as 3 ArrowEvalPython
+    evaluations). Banded rows are ~20-28 B per (doc, band), a small
+    fraction of corpus bytes; eviction degrades to recompute, never to
+    wrong answers.
 
-    Salting is by census: a bucket-size count (map-side combined, its
-    output keeps ONLY oversized buckets — tiny) → broadcast join →
-    ``pmod(xxhash64(key), chunks)``. No extra shuffle of the banded rows
-    and no single-task stage: every row salts itself independently (a
-    ``row_number`` window would add a sort exchange and funnel each
-    oversized bucket through ONE task before the join is bounded)."""
+    Skew guard: rows of a bucket larger than ``max_bucket_size`` get a
+    ``_salt`` chunk ~ceil(n/cap) (smaller buckets keep salt 0), bounding
+    every within-bucket task at ~cap² comparisons so a degenerate bucket
+    (near-identical content all hashing together) cannot produce a
+    runaway quadratic task. The documented recall bound: pairs spanning
+    two chunks of an oversized bucket are missed, but every member is
+    still compared against its chunk co-members, which is what dedup
+    connectivity needs. Salting is by census: a bucket-size count
+    (map-side combined, keeping ONLY oversized buckets — tiny) →
+    broadcast join → ``pmod(xxhash64(k), chunks)``. No extra shuffle of
+    the banded rows and no single-task stage (a ``row_number`` window
+    would add a sort exchange and funnel each oversized bucket through
+    ONE task)."""
+    persisted = banded.persist()
     if max_bucket_size is None:
-        return d.withColumn("_salt", F.lit(0))
-    census = (
-        d.groupBy(*bucket_cols)
-        .agg(F.count(F.lit(1)).alias("_bn"))
-        .filter(F.col("_bn") > max_bucket_size)
-        .select(
-            *bucket_cols,
-            F.ceil(F.col("_bn") / F.lit(max_bucket_size))
-            .cast("int")
-            .alias("_chunks"),
+        salted = persisted.withColumn("_salt", F.lit(0))
+    else:
+        census = (
+            persisted.groupBy(*bucket_cols)
+            .agg(F.count(F.lit(1)).alias("_bn"))
+            .filter(F.col("_bn") > max_bucket_size)
+            .select(
+                *bucket_cols,
+                F.ceil(F.col("_bn") / F.lit(max_bucket_size))
+                .cast("int")
+                .alias("_chunks"),
+            )
         )
-    )
-    return (
-        d.join(F.broadcast(census), on=bucket_cols, how="left")
-        .withColumn(
-            "_salt",
-            F.when(F.col("_chunks").isNull(), F.lit(0))
-            .otherwise(F.pmod(F.xxhash64(F.col(order_col)), F.col("_chunks")))
-            .cast("int"),
+        salted = (
+            persisted.join(F.broadcast(census), on=bucket_cols, how="left")
+            .withColumn(
+                "_salt",
+                F.when(F.col("_chunks").isNull(), F.lit(0))
+                .otherwise(F.pmod(F.xxhash64(F.col("k")), F.col("_chunks")))
+                .cast("int"),
+            )
+            .drop("_chunks")
         )
-        .drop("_chunks")
-    )
+    on = [*bucket_cols, "_salt"]
+    sides = [
+        salted.select(
+            *on,
+            F.col("k").alias(s),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+        for s in ("a", "b")
+    ]
+    joined = sides[0].join(sides[1], on=on).filter(F.col("a") < F.col("b"))
+    return joined, persisted
 
 
 def _band_rows(
@@ -363,7 +340,13 @@ def _band_rows(
     """Explode minhash signatures to narrow (k, band, bh) rows — one
     xxhash64 per band over its signature slice. ~24 B/row through any
     downstream shuffle; shared by the self-join and the incremental
-    against-index paths."""
+    against-index paths. Every band must cover the same number of
+    hashes, so ``bands`` must divide ``num_hashes``."""
+    if not 1 <= bands <= num_hashes or num_hashes % bands:
+        raise ValueError(
+            f"bands={bands} must be between 1 and num_hashes={num_hashes} "
+            "and divide it evenly"
+        )
     rows = num_hashes // bands
     return sigs.select(
         F.col(key_col).alias("k"),
@@ -404,46 +387,28 @@ def lsh_candidate_pairs(
     — ~24 B/row — through the self-join shuffle; the full signatures
     (num_hashes × 8 B) are joined back to the (small) deduplicated
     candidate set afterwards, never multiplied by the band fan-out.
-    Oversized buckets are chunk-salted (see ``_salt_oversized``).
+    Oversized buckets are chunk-salted and the banded frame is persisted
+    (``_bucket_self_join``); it is tracked on the result.
     ``estimate=False`` skips that signature join-back entirely (returns
     bare (a, b)) — the right call when candidates go straight to exact
     verification, as the signature table is then scanned ONCE instead of
     three times. Callers that keep ``estimate=True`` and iterate over the
-    same signature table should persist ``sigs``.
-
-    When census salting is active (``max_bucket_size``), the banded frame
-    is persisted (MEMORY_AND_DISK): the census aggregate and the two join
-    sides otherwise each recompute the banding subplan INCLUDING the
-    signature UDF — plan-counted as 3 ArrowEvalPython evaluations of the
-    most expensive stage. The banded rows are ~24 B × bands per doc
-    (~0.3% of corpus bytes), so the cache is cheap relative to one
-    recompute; eviction under pressure degrades to recompute, never to
-    wrong answers."""
-    banded = _band_rows(sigs, key_col, num_hashes, bands)
-    # unconditional: even without census salting both self-join sides
-    # reference this frame, so uncached the banding subplan (including the
-    # signature UDF) runs twice; salting adds the census as a third reader
-    banded_cached = banded.persist()
-    banded = banded_cached
-    banded = _salt_oversized(banded, ["band", "bh"], "k", max_bucket_size)
-
-    left = banded.select("band", "bh", "_salt", F.col("k").alias("a"))
-    right = banded.select("band", "bh", "_salt", F.col("k").alias("b"))
-    pairs = (
-        left.join(right, on=["band", "bh", "_salt"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .dropDuplicates(["a", "b"])
+    same signature table should persist ``sigs``."""
+    joined, banded = _bucket_self_join(
+        _band_rows(sigs, key_col, num_hashes, bands),
+        ["band", "bh"],
+        max_bucket_size,
     )
+    pairs = joined.select("a", "b").dropDuplicates(["a", "b"])
     if not estimate:
-        return track_cached(pairs, banded_cached)
+        return track_cached(pairs, banded)
     sig_a = sigs.select(
         F.col(key_col).alias("a"), F.col("minhash").alias("sig_a")
     )
     sig_b = sigs.select(
         F.col(key_col).alias("b"), F.col("minhash").alias("sig_b")
     )
-    joined = pairs.join(sig_a.hint("shuffle_hash"), on="a").join(
+    with_sigs = pairs.join(sig_a.hint("shuffle_hash"), on="a").join(
         sig_b.hint("shuffle_hash"), on="b"
     )
     est = (
@@ -456,7 +421,7 @@ def lsh_candidate_pairs(
         / F.lit(num_hashes)
     )
     return track_cached(
-        joined.select("a", "b", est.alias("est_jaccard")), banded_cached
+        with_sigs.select("a", "b", est.alias("est_jaccard")), banded
     )
 
 
@@ -475,7 +440,10 @@ def minhash_lsh_duplicates(
         df, key_col, text_col, num_hashes, shingle_k, seed
     )
     pairs = lsh_candidate_pairs(sigs, key_col, num_hashes, bands)
-    return pairs.filter(F.col("est_jaccard") >= threshold)
+    return track_cached(
+        pairs.filter(F.col("est_jaccard") >= threshold),
+        *cached_intermediates(pairs),
+    )
 
 
 def minhash_verified_duplicates(
@@ -521,55 +489,66 @@ def minhash_verified_duplicates(
     )
 
 
-def _cross_salt(
+def _bucket_pairs_against(
     bi: DataFrame,
     bn: DataFrame,
     bucket_cols: list[str],
-    a_name: str,
-    b_name: str,
     max_bucket_size: int | None,
 ) -> tuple[DataFrame, DataFrame]:
-    """EXACT skew guard for an index-side × new-side bucket join: census
-    the index side, hash-split buckets above ``max_bucket_size`` into
-    chunks, and replicate the (small) new side across the chunks. Unlike
-    the self-join chunk-salt (`_salt_oversized`) no cross-chunk pairs are
-    lost — the new side meets every chunk — while each task is bounded at
-    cap × batch-bucket comparisons. Both frames come back as
-    (*bucket_cols, _salt, key) ready to join on bucket_cols + _salt."""
+    """Join index-side banded rows ``bi`` against new-side ``bn`` (both
+    ``(k, *bucket_cols)``) on their bucket: returns ``(cand, persisted)``,
+    the deduplicated, localCheckpointed ``(a, b)`` candidates (``a`` from
+    the index, ``b`` from the new side) and the persisted index side —
+    track both on the result.
+
+    EXACT skew guard: census the index side, hash-split buckets above
+    ``max_bucket_size`` into chunks, and replicate the (small) new side
+    across the chunks. Unlike the self-join chunk-salt
+    (``_bucket_self_join``) no cross-chunk pairs are lost — the new side
+    meets every chunk — while each task is bounded at cap × batch-bucket
+    comparisons."""
+    persisted = bi.persist()
     if max_bucket_size is None:
-        return (
-            bi.select(
-                *bucket_cols, F.lit(0).alias("_salt"), F.col("k").alias(a_name)
-            ),
-            bn.select(
-                *bucket_cols, F.lit(0).alias("_salt"), F.col("k").alias(b_name)
-            ),
+        bi = persisted.select(
+            *bucket_cols, F.lit(0).alias("_salt"), F.col("k").alias("a")
         )
-    census = (
-        bi.groupBy(*bucket_cols)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > max_bucket_size)
-        .select(
+        bn = bn.select(
+            *bucket_cols, F.lit(0).alias("_salt"), F.col("k").alias("b")
+        )
+    else:
+        census = (
+            persisted.groupBy(*bucket_cols)
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .filter(F.col("_n") > max_bucket_size)
+            .select(
+                *bucket_cols,
+                F.ceil(F.col("_n") / max_bucket_size).cast("int").alias("_ch"),
+            )
+        )
+        bi = persisted.join(
+            F.broadcast(census), on=bucket_cols, how="left"
+        ).select(
             *bucket_cols,
-            F.ceil(F.col("_n") / max_bucket_size).cast("int").alias("_ch"),
+            F.coalesce(
+                F.pmod(F.xxhash64(F.col("k")), F.col("_ch")).cast("int"),
+                F.lit(0),
+            ).alias("_salt"),
+            F.col("k").alias("a"),
         )
+        bn = bn.join(F.broadcast(census), on=bucket_cols, how="left").select(
+            *bucket_cols,
+            F.explode(
+                F.sequence(F.lit(0), F.coalesce(F.col("_ch"), F.lit(1)) - 1)
+            ).alias("_salt"),
+            F.col("k").alias("b"),
+        )
+    cand = (
+        bi.join(bn, on=[*bucket_cols, "_salt"])
+        .select("a", "b")
+        .dropDuplicates(["a", "b"])
+        .localCheckpoint(eager=False)
     )
-    bi2 = bi.join(F.broadcast(census), on=bucket_cols, how="left").select(
-        *bucket_cols,
-        F.coalesce(
-            F.pmod(F.xxhash64(F.col("k")), F.col("_ch")).cast("int"),
-            F.lit(0),
-        ).alias("_salt"),
-        F.col("k").alias(a_name),
-    )
-    bn2 = bn.join(F.broadcast(census), on=bucket_cols, how="left").select(
-        *bucket_cols,
-        F.explode(
-            F.sequence(F.lit(0), F.coalesce(F.col("_ch"), F.lit(1)) - 1)
-        ).alias("_salt"),
-        F.col("k").alias(b_name),
-    )
-    return bi2, bn2
+    return cand, persisted
 
 
 def minhash_duplicates_against(
@@ -596,28 +575,19 @@ def minhash_duplicates_against(
     Scale shape: both sides explode to ~24 B (band, bh, key) rows
     (`_band_rows`); the join is index-banded × new-banded on the band
     key, so cost is O(corpus bands + batch bands + collisions), never the
-    corpus self-join. Skew guard is EXACT here (unlike the self-join
-    chunk-salt): oversized index-side buckets are hash-split into chunks
-    and the (small) new side is replicated across the chunks —
-    no cross-chunk pairs are lost, each task is bounded at
-    cap × batch-bucket comparisons."""
+    corpus self-join. The skew guard is EXACT here
+    (``_bucket_pairs_against``): no cross-chunk pairs are lost."""
     sig_i = minhash_signature_table(
         index, key_col, text_col, num_hashes, shingle_k, seed
     )
     sig_n = minhash_signature_table(
         new, key_col, text_col, num_hashes, shingle_k, seed
     )
-    bi_cached = _band_rows(sig_i, key_col, num_hashes, bands).persist()
-    bi = bi_cached
-    bn = _band_rows(sig_n, key_col, num_hashes, bands)
-
-    bi, bn = _cross_salt(bi, bn, ["band", "bh"], "a", "b", max_bucket_size)
-
-    cand = (
-        bi.join(bn, on=["band", "bh", "_salt"])
-        .select("a", "b")
-        .dropDuplicates(["a", "b"])
-        .localCheckpoint(eager=False)
+    cand, bi = _bucket_pairs_against(
+        _band_rows(sig_i, key_col, num_hashes, bands),
+        _band_rows(sig_n, key_col, num_hashes, bands),
+        ["band", "bh"],
+        max_bucket_size,
     )
     both = index.select(F.col(key_col), F.col(text_col)).unionByName(
         new.select(F.col(key_col), F.col(text_col))
@@ -626,7 +596,7 @@ def minhash_duplicates_against(
         ngram_jaccard(both, cand, key_col, text_col, shingle_k).filter(
             F.col("jaccard") >= threshold
         ),
-        bi_cached,
+        bi,
         cand,
     )
 
@@ -772,7 +742,7 @@ def simhash_hamming_duplicates(
     (band, band_value, key, sig) ≈ 28 B through the shuffle — never the
     documents — both join sides hash-partition on the same band key (one
     reusable exchange), and buckets above ``max_bucket_size`` are
-    census-salted (``_salt_oversized``) so a degenerate band value cannot
+    census-salted (``_bucket_self_join``) so a degenerate band value cannot
     produce a runaway quadratic task. Verification is a single JVM
     bit_count per candidate — no second pass over text."""
     nb = k + 1
@@ -797,33 +767,19 @@ def simhash_hamming_duplicates(
     banded = s.select(
         "k", "simhash", F.explode(F.array(*pieces)).alias("_b")
     ).select("k", "simhash", F.col("_b.t").alias("t"), F.col("_b.bv").alias("bv"))
-    # persist: the census aggregate and BOTH self-join sides reference
-    # this frame — uncached, the SimHash Arrow UDF (the expensive stage)
-    # is re-evaluated once per reference (3x, plan-verified). ~28 B x
-    # (k+1) rows/doc, same tradeoff as the MinHash banded cache above.
-    banded_cached = banded.persist()
-    banded = banded_cached
-    banded = _salt_oversized(banded, ["t", "bv"], "k", max_bucket_size)
-    a = banded.select(
-        "t", "bv", "_salt",
-        F.col("k").alias("a"), F.col("simhash").alias("_sa"),
-    )
-    b = banded.select(
-        "t", "bv", "_salt",
-        F.col("k").alias("b"), F.col("simhash").alias("_sb"),
+    joined, banded = _bucket_self_join(
+        banded, ["t", "bv"], max_bucket_size, carry=("simhash",)
     )
     return track_cached(
-        a.join(b, on=["t", "bv", "_salt"])
-        .filter(F.col("a") < F.col("b"))
-        .select(
+        joined.select(
             "a", "b",
-            F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
             .cast("long")
             .alias("hamming"),
         )
         .filter(F.col("hamming") <= k)
         .distinct(),
-        banded_cached,
+        banded,
     )
 
 
@@ -855,7 +811,7 @@ def embedding_near_duplicates(
     Skew guard: a degenerate bucket (e.g. near-zero vectors all landing on
     one sign pattern) would make the within-bucket self-join quadratic in
     that bucket's size; buckets above ``max_bucket_size`` are chunk-salted
-    (``_salt_oversized``), bounding every task at cap² comparisons at the
+    (``_bucket_self_join``), bounding every task at cap² comparisons at the
     cost of missing cross-chunk pairs inside the oversized bucket."""
     if dim is None:
         # refuse to infer: a df.first() here would be a driver action in
@@ -867,22 +823,13 @@ def embedding_near_duplicates(
         )
 
     d = df.select(F.col(key_col).alias("k"), F.col(vec_col).alias("v"))
-    banded = _hyperplane_banded(d, planes, tables, seed, dim)
-    # persist: census + both self-join sides otherwise each re-run the
-    # codes matmul UDF over every vector (3x, plan-verified); the cached
-    # frame is (key, t, code) ~20 B x tables/vector.
-    banded_cached = banded.persist()
-    banded = banded_cached
-    banded = _salt_oversized(banded, ["t", "code"], "k", max_bucket_size)
-    a = banded.select("t", "code", "_salt", F.col("k").alias("a"))
-    b = banded.select("t", "code", "_salt", F.col("k").alias("b"))
-    pairs = (
-        a.join(b, on=["t", "code", "_salt"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .dropDuplicates(["a", "b"])
+    joined, banded = _bucket_self_join(
+        _hyperplane_banded(d, planes, tables, seed, dim),
+        ["t", "code"],
+        max_bucket_size,
     )
-    return track_cached(_cosine_verify(d, pairs, threshold), banded_cached)
+    pairs = joined.select("a", "b").dropDuplicates(["a", "b"])
+    return track_cached(_cosine_verify(d, pairs, threshold), banded)
 
 
 def _hyperplane_banded(
@@ -977,7 +924,7 @@ def embedding_near_duplicates_against(
     seeds seed..seed+tables-1), so a pair collides exactly as it would in
     the self-join form — recall math is identical. The join is
     index-banded × new-banded on (t, code); the skew guard is EXACT
-    (`_cross_salt`): oversized index buckets are hash-chunked and the
+    (`_bucket_pairs_against`): oversized index buckets are hash-chunked and the
     (small) new side is replicated across the chunks, so no cross-side
     pair is lost. Candidates get the same exact cosine verification."""
     if dim is None:
@@ -988,18 +935,14 @@ def embedding_near_duplicates_against(
         )
     di = index.select(F.col(key_col).alias("k"), F.col(vec_col).alias("v"))
     dn_ = new.select(F.col(key_col).alias("k"), F.col(vec_col).alias("v"))
-    bi_cached = _hyperplane_banded(di, planes, tables, seed, dim).persist()
-    bi = bi_cached
-    bn = _hyperplane_banded(dn_, planes, tables, seed, dim)
-    bi, bn = _cross_salt(bi, bn, ["t", "code"], "a", "b", max_bucket_size)
-    cand = (
-        bi.join(bn, on=["t", "code", "_salt"])
-        .select("a", "b")
-        .dropDuplicates(["a", "b"])
-        .localCheckpoint(eager=False)
+    cand, bi = _bucket_pairs_against(
+        _hyperplane_banded(di, planes, tables, seed, dim),
+        _hyperplane_banded(dn_, planes, tables, seed, dim),
+        ["t", "code"],
+        max_bucket_size,
     )
     return track_cached(
-        _cosine_verify(di.unionByName(dn_), cand, threshold), bi_cached, cand
+        _cosine_verify(di.unionByName(dn_), cand, threshold), bi, cand
     )
 
 

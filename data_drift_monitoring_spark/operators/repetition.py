@@ -22,7 +22,7 @@ needs per-doc state; it runs as a linear ``aggregate`` HOF over the
 sorted word array (max run length), avoiding an explode + per-doc-word
 groupBy that would shuffle the corpus's full word stream. The HOF is
 interpreted per element; if profiling ever shows it dominating, the
-vectorized Arrow shingle core (``dedup._doc_shingle_hashes``) computes
+vectorized Arrow shingle core (``dedup._doc_shingle_hashes_arrow``) computes
 the same segment-max with ``np.maximum.reduceat`` — the expression path
 is preferred while it stays off the critical path because it keeps the
 whole signal block inside WholeStageCodegen's one projection.
@@ -86,7 +86,7 @@ def _counts_arrow_udf():
     (pandas.util.hash_array, deterministic siphash), n-gram hashes by
     flat uint64 slicing, per-doc distinct/top via one lexsort + run
     boundaries — no per-doc Python loop (the same vectorization strategy
-    as dedup._doc_shingle_hashes). Word identity is by 64-bit hash: a
+    as dedup._doc_shingle_hashes_arrow). Word identity is by 64-bit hash: a
     collision inside one document would alter a count; at ≤10^4 words
     per doc the per-doc probability is ~1e-12 and the expression path
     (use_arrow=False) is the collision-free mirror, equality-tested on

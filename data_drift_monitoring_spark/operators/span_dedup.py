@@ -209,30 +209,17 @@ def duplicated_span_occurrences(
     )
 
 
-def _removed_starts(
-    df: DataFrame, k: int, tokens_col: str, id_col: str, portable: bool,
-    use_arrow: bool | None,
-) -> DataFrame:
-    """Per-doc sorted start positions of non-canonical duplicated grams."""
-    return (
-        duplicated_span_occurrences(df, k, tokens_col, id_col, portable, use_arrow)
-        .filter(~F.col("is_canonical"))
-        .groupBy(id_col)
-        .agg(
-            F.array_sort(F.collect_list("pos")).alias("_dup_starts"),
-            F.count(F.lit(1)).alias("removed_occurrences"),
-        )
-    )
-
-
 def _with_coverage(
-    df: DataFrame, k: int, tokens_col: str, id_col: str, portable: bool,
-    use_arrow: bool | None,
+    df: DataFrame, removed: DataFrame, k: int, id_col: str
 ) -> DataFrame:
     """df + _dup_starts / removed_occurrences / _cov (sorted covered
-    token indices); docs with no duplication get empties, not nulls."""
-    removed = _removed_starts(df, k, tokens_col, id_col, portable, use_arrow)
-    out = df.join(removed, id_col, "left")
+    token indices), from the ``removed`` gram occurrences (id_col, pos);
+    docs with no removed occurrence get empties, not nulls."""
+    per_doc = removed.groupBy(id_col).agg(
+        F.array_sort(F.collect_list("pos")).alias("_dup_starts"),
+        F.count(F.lit(1)).alias("removed_occurrences"),
+    )
+    out = df.join(per_doc, id_col, "left")
     starts = F.coalesce(F.col("_dup_starts"), F.array().cast("array<int>"))
     cov = F.array_sort(
         F.array_distinct(
@@ -242,6 +229,28 @@ def _with_coverage(
     return out.withColumn(
         "removed_occurrences", F.coalesce("removed_occurrences", F.lit(0))
     ).withColumn("_cov", cov)
+
+
+def _doc_stats(covered: DataFrame, tokens_col: str, id_col: str) -> DataFrame:
+    """The per-doc ``span_dedup_stats`` projection of a ``_with_coverage``
+    frame."""
+    toks = F.col(tokens_col)
+    covered_sum = F.aggregate(
+        F.col("_cov"),
+        F.lit(0).cast("bigint"),
+        lambda acc, i: acc + F.element_at(toks, i + 1).cast("bigint"),
+    )
+    total_sum = F.aggregate(
+        toks, F.lit(0).cast("bigint"), lambda acc, t: acc + t.cast("bigint")
+    )
+    return covered.select(
+        F.col(id_col),
+        F.size(toks).cast("bigint").alias("n_tok"),
+        F.col("removed_occurrences").cast("bigint").alias("removed_occurrences"),
+        F.size("_cov").cast("bigint").alias("covered_tokens"),
+        (F.size(toks) - F.size("_cov")).cast("bigint").alias("kept_n_tok"),
+        (total_sum - covered_sum).alias("kept_token_sum"),
+    )
 
 
 def span_dedup_stats(
@@ -259,22 +268,11 @@ def span_dedup_stats(
     kept_token_sum (sum of surviving token ids — pins the exact kept
     set without shipping the arrays).
     """
-    toks = F.col(tokens_col)
-    covered_sum = F.aggregate(
-        F.col("_cov"),
-        F.lit(0).cast("bigint"),
-        lambda acc, i: acc + F.element_at(toks, i + 1).cast("bigint"),
-    )
-    total_sum = F.aggregate(
-        toks, F.lit(0).cast("bigint"), lambda acc, t: acc + t.cast("bigint")
-    )
-    return _with_coverage(df, k, tokens_col, id_col, portable, use_arrow).select(
-        F.col(id_col),
-        F.size(toks).cast("bigint").alias("n_tok"),
-        F.col("removed_occurrences").cast("bigint").alias("removed_occurrences"),
-        F.size("_cov").cast("bigint").alias("covered_tokens"),
-        (F.size(toks) - F.size("_cov")).cast("bigint").alias("kept_n_tok"),
-        (total_sum - covered_sum).alias("kept_token_sum"),
+    removed = duplicated_span_occurrences(
+        df, k, tokens_col, id_col, portable, use_arrow
+    ).filter(~F.col("is_canonical"))
+    return _doc_stats(
+        _with_coverage(df, removed, k, id_col), tokens_col, id_col
     )
 
 
@@ -290,7 +288,10 @@ def remove_duplicate_spans(
     non-canonical duplicated span (first corpus-wide occurrence kept),
     plus ``covered_tokens``. Schema otherwise preserved; ``n_tok``-style
     derived columns are the caller's to refresh."""
-    covered = _with_coverage(df, k, tokens_col, id_col, portable, use_arrow)
+    removed = duplicated_span_occurrences(
+        df, k, tokens_col, id_col, portable, use_arrow
+    ).filter(~F.col("is_canonical"))
+    covered = _with_coverage(df, removed, k, id_col)
     kept = F.filter(
         F.col(tokens_col), lambda t, i: ~F.array_contains(F.col("_cov"), i)
     )
@@ -394,39 +395,9 @@ def span_dedup_stats_against_grams(
     instead of re-derived from the corpus each time. ``index_grams``
     must be deduplicated (duplicate gram rows would fan out the join and
     inflate removed_occurrences)."""
-    new_occ = ngram_occurrences(new, k, tokens_col, id_col, portable, use_arrow)
-    removed = (
-        new_occ.join(index_grams, "gram")
-        .groupBy(id_col)
-        .agg(
-            F.array_sort(F.collect_list("pos")).alias("_dup_starts"),
-            F.count(F.lit(1)).alias("removed_occurrences"),
-        )
-    )
-    out = new.join(removed, id_col, "left")
-    starts = F.coalesce(F.col("_dup_starts"), F.array().cast("array<int>"))
-    cov = F.array_sort(
-        F.array_distinct(
-            F.flatten(F.transform(starts, lambda p: F.sequence(p, p + k - 1)))
-        )
-    )
-    toks = F.col(tokens_col)
-    out = out.withColumn(
-        "removed_occurrences", F.coalesce("removed_occurrences", F.lit(0))
-    ).withColumn("_cov", cov)
-    covered_sum = F.aggregate(
-        F.col("_cov"),
-        F.lit(0).cast("bigint"),
-        lambda acc, i: acc + F.element_at(toks, i + 1).cast("bigint"),
-    )
-    total_sum = F.aggregate(
-        toks, F.lit(0).cast("bigint"), lambda acc, t: acc + t.cast("bigint")
-    )
-    return out.select(
-        F.col(id_col),
-        F.size(toks).cast("bigint").alias("n_tok"),
-        F.col("removed_occurrences").cast("bigint").alias("removed_occurrences"),
-        F.size("_cov").cast("bigint").alias("covered_tokens"),
-        (F.size(toks) - F.size("_cov")).cast("bigint").alias("kept_n_tok"),
-        (total_sum - covered_sum).alias("kept_token_sum"),
+    removed = ngram_occurrences(
+        new, k, tokens_col, id_col, portable, use_arrow
+    ).join(index_grams, "gram")
+    return _doc_stats(
+        _with_coverage(new, removed, k, id_col), tokens_col, id_col
     )

@@ -44,8 +44,9 @@ def main(argv: list[str] | None = None) -> int:
                     help="exact n-gram Jaccard decision line")
     ap.add_argument("--num-hashes", type=int, default=64)
     ap.add_argument("--bands", type=int, default=16,
-                    help="raise toward num-hashes/2 for recall near "
-                         "threshold 0.5 (64/32 : miss prob <= 1e-4 at J=0.5)")
+                    help="must divide --num-hashes evenly; raise toward "
+                         "num-hashes/2 for recall near threshold 0.5 "
+                         "(64/32 : miss prob <= 1e-4 at J=0.5)")
     ap.add_argument("--shingle-k", type=int, default=3)
     ap.add_argument("--max-bucket-size", type=int, default=2000)
     ap.add_argument("--text-col", default="text")

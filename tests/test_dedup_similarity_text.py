@@ -1,6 +1,7 @@
 """Training-data pipeline operators: dedup family, ANN, text analysis,
 multimodal plumbing — over the driver testdata tables + synthetic cases."""
 
+import json
 import os
 from collections import Counter
 
@@ -442,7 +443,7 @@ def test_minhash_estimate_mae_vs_exact(spark):
     d = spark.read.parquet(f"{SF01}/documents.parquet").filter(
         F.col("doc_id") < 300
     )
-    sigs = D.minhash_signatures(d, "text", 64, 3)
+    sigs = D.minhash_signature_table(d, "doc_id", "text", 64, 3)
     cand = D.lsh_candidate_pairs(sigs, "doc_id", 64, 32)
     exact = D.ngram_jaccard(d, cand.select("a", "b"), "doc_id")
     rows = cand.join(exact, on=["a", "b"]).collect()
@@ -722,18 +723,38 @@ def test_dedup_release_cached(spark, dup_docs):
     D.release_cached(kept)
     D.release_cached(pairs2)
     assert not (rdd_ids() - before2)
-    # a checkpointed INPUT is a LogicalRDD leaf of every tracked frame's
-    # plan: releasing must free only the operators' own frames, never it
+    # every finder owns the frames it persists or checkpoints: nothing it
+    # adds may survive release_cached. A checkpointed INPUT is a
+    # LogicalRDD leaf of every tracked frame's plan: releasing must free
+    # only the operators' own frames, never it
     ck = dup_docs.localCheckpoint()
     n = ck.count()
-    for out in (
-        D.minhash_verified_duplicates(ck, "doc_id", threshold=0.5),
-        D.minhash_duplicates_against(
+    rng = np.random.default_rng(0)
+    base = rng.standard_normal(16)
+    vecs = spark.createDataFrame(
+        [(i, (base * (1 + i / 1000)).tolist()) for i in range(6)]
+        + [(10 + i, rng.standard_normal(16).tolist()) for i in range(4)],
+        "vec_id long, embedding array<double>",
+    )
+    new_vecs = vecs.withColumn("vec_id", F.col("vec_id") + 100)
+    for make in (
+        lambda: D.minhash_verified_duplicates(ck, "doc_id", threshold=0.5),
+        lambda: D.minhash_duplicates_against(
             ck, dup_docs.withColumn("doc_id", F.col("doc_id") + 100), "doc_id"
         ),
+        lambda: D.minhash_lsh_duplicates(ck, "doc_id", threshold=0.5),
+        lambda: D.simhash_hamming_duplicates(ck, "doc_id"),
+        lambda: D.embedding_near_duplicates(vecs, threshold=0.9, dim=16),
+        lambda: D.embedding_near_duplicates_against(
+            vecs, new_vecs, threshold=0.9, dim=16
+        ),
     ):
-        out.count()
+        before3 = rdd_ids()
+        out = make()
+        assert out.count() > 0
+        assert rdd_ids() - before3
         D.release_cached(out)
+        assert not (rdd_ids() - before3)
         assert ck.count() == n
 
 
@@ -769,9 +790,12 @@ def test_ivf_topk_caps_driver_side_queries(spark, embs):
 
 
 def test_minhash_signature_table_bit_identical(spark):
-    """The mapInArrow signature table (zero-copy text path) must produce
-    BIT-IDENTICAL signatures to the pandas-UDF arrow impl for the same
-    seed — same hash family, same shingle core, different transport."""
+    """The mapInArrow signature table must stay BIT-IDENTICAL to
+    ``tests/data/minhash_frozen.json`` (doc_id -> 64 signatures, seed 42,
+    shingle k=3) on edge texts: empty, blank, NULL, tab/NBSP/vertical-tab
+    whitespace and non-ASCII case folding. The file was written from the
+    since-deleted pandas-UDF signature path, which agreed with
+    ``minhash_signature_table`` on this table bit for bit."""
     rows = [
         ("d1", "Hello world hello world"),
         ("d2", ""),
@@ -784,18 +808,30 @@ def test_minhash_signature_table_bit_identical(spark):
         ("d9", "a\x0bb\x0cc\rd\n"),
     ]
     df = spark.createDataFrame(rows, "doc_id string, text string")
-    old = {
-        r["doc_id"]: r["minhash"]
-        for r in D.minhash_signatures(df, "text", 64, 3)
-        .select("doc_id", "minhash")
-        .collect()
-    }
+    path = os.path.join(os.path.dirname(__file__), "data", "minhash_frozen.json")
+    with open(path) as f:
+        frozen = json.load(f)
     new = {
-        r["doc_id"]: r["minhash"]
+        r["doc_id"]: list(r["minhash"])
         for r in D.minhash_signature_table(df, "doc_id", "text", 64, 3)
         .collect()
     }
-    assert old == new
+    assert new == frozen
+
+
+def test_band_rows_rejects_uneven_banding(spark, dup_docs):
+    """Banding must split the signature into equal bands: bands above
+    num_hashes would make every band hash the empty slice (every pair a
+    candidate), and a non-divisor would silently drop trailing hashes."""
+    for bands in (128, 24, 0):
+        with pytest.raises(ValueError, match=f"bands={bands}.*num_hashes=64"):
+            D.minhash_lsh_duplicates(
+                dup_docs, "doc_id", num_hashes=64, bands=bands
+            )
+        with pytest.raises(ValueError, match=f"bands={bands}.*num_hashes=64"):
+            D.minhash_verified_duplicates(
+                dup_docs, "doc_id", num_hashes=64, bands=bands
+            )
 
 
 def test_gram_rows_arrow_matches_portable_convention(spark):
