@@ -23,7 +23,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from data_drift_monitoring_spark.config import DEFAULT_CONFIG
 from data_drift_monitoring_spark.operators import contamination as _contam
 from data_drift_monitoring_spark.operators import dedup as _dedup
 from data_drift_monitoring_spark.operators import drift as _drift
@@ -41,8 +40,6 @@ from data_drift_monitoring_spark.operators.referential import (
     referential_stats,
     referential_violations,
 )
-
-_T = DEFAULT_CONFIG.thresholds
 
 # documents.source values src0..src9 are "allowed"; src10+ violate
 ALLOWED_DOC_SOURCES = [f"src{i}" for i in range(10)]

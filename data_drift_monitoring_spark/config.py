@@ -1,4 +1,5 @@
-"""Engine thresholds and constants.
+"""Engine thresholds and constants, one module-level name per value, as in
+the reference's ``config/settings.py``.
 
 Values mirror the reference's published semantics so verdict rows match:
 
@@ -17,62 +18,50 @@ Values mirror the reference's published semantics so verdict rows match:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+# missing values (percent)
+MISSING_WARN_PCT = 10.0
+MISSING_ERROR_PCT = 50.0
+# duplicates (percent) — severity: 0 none, <1 low, <5 medium, else high
+DUP_LOW_PCT = 1.0
+DUP_MEDIUM_PCT = 5.0
+DUP_MAJOR_PCT = 20.0
+# outliers
+IQR_MULTIPLIER = 1.5
+Z_SCORE_THRESHOLD = 3.0
+OUTLIER_LOW_PCT = 1.0
+OUTLIER_MEDIUM_PCT = 5.0
+OUTLIER_CLIP_PCT = 10.0
+SKEW_TRANSFORM_THRESHOLD = 1.0
+# drift
+PSI_MODERATE = 0.10
+PSI_LARGE = 0.25
+KS_ALPHA = 0.05
+CHI2_ALPHA = 0.05
+# validation gates
+MIN_ROWS = 10
+MIN_COLUMNS = 1
+# scoring weights; they sum to 100
+MISSING_WEIGHT = 30.0
+DUPLICATE_WEIGHT = 25.0
+OUTLIER_WEIGHT = 25.0
+SCHEMA_WEIGHT = 20.0
+# score → grade, first band whose floor the score reaches; below all:
+# "Critical"
+GRADE_BANDS = (
+    (90, "Excellent"), (80, "Very Good"), (70, "Good"), (60, "Fair"),
+    (50, "Poor"),
+)
 
+# distributed-engine constants (no reference analogue — the reference is
+# single-threaded pandas)
+# salt fan-out for skewed groupBy keys (two-level aggregation)
+SKEW_SALT_BUCKETS = 16
+# histogram binning for drift on numeric columns
+DRIFT_BINS = 32
+# top-k caps, mirroring the reference's sampling caps
+TOPK_VALUES = 5            # file_handler.py:307
+SAMPLE_DUP_GROUPS = 5      # duplicates.py:92-123
+SAMPLE_ROWS_PER_GROUP = 3  # duplicates.py:119
 
-@dataclass(frozen=True)
-class Thresholds:
-    # missing values (percent)
-    missing_warn_pct: float = 10.0
-    missing_error_pct: float = 50.0
-    # duplicates (percent) — severity: 0 none, <1 low, <5 medium, else high
-    dup_low_pct: float = 1.0
-    dup_medium_pct: float = 5.0
-    dup_major_pct: float = 20.0
-    # outliers
-    iqr_multiplier: float = 1.5
-    z_score_threshold: float = 3.0
-    outlier_low_pct: float = 1.0
-    outlier_medium_pct: float = 5.0
-    outlier_clip_pct: float = 10.0
-    skew_transform_threshold: float = 1.0
-    # drift
-    psi_moderate: float = 0.10
-    psi_large: float = 0.25
-    ks_alpha: float = 0.05
-    js_moderate: float = 0.05
-    js_large: float = 0.15
-    chi2_alpha: float = 0.05
-    # validation gates
-    min_rows: int = 10
-    min_columns: int = 1
-    # scoring weights (normalized to 100 if they don't sum to 100,
-    # mirroring quality_scorer.py:35-42)
-    missing_weight: float = 30.0
-    duplicate_weight: float = 25.0
-    outlier_weight: float = 25.0
-    schema_weight: float = 20.0
-
-
-@dataclass(frozen=True)
-class EngineConfig:
-    """Run-scoped knobs for the distributed engine (no reference analogue —
-    the reference is single-threaded pandas)."""
-
-    partition_col: str = "part_id"
-    shuffle_partitions: int = 32
-    # salt fan-out for skewed groupBy keys (two-level aggregation)
-    skew_salt_buckets: int = 16
-    # histogram binning for drift on numeric columns
-    drift_bins: int = 32
-    # top-k caps, mirroring the reference's sampling caps
-    topk_values: int = 5            # file_handler.py:307
-    sample_dup_groups: int = 5      # duplicates.py:92-123
-    sample_rows_per_group: int = 3  # duplicates.py:119
-    sample_outliers: int = 5        # outliers.py:147-149
-    thresholds: Thresholds = field(default_factory=Thresholds)
-
-
-DEFAULT_CONFIG = EngineConfig()
 ALLOWED_SOURCES = ("web", "books", "code", "wiki", "news")
 TOKEN_VOCAB_SIZE = 50257

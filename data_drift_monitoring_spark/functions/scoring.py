@@ -5,27 +5,16 @@ component scores (0-100, each "100 = clean"):
   duplicate_score = max(0, 100 - duplicate_pct)              (:66-68)
   outlier_score   = max(0, 100 - min(outlier_pct, 100))      (:70-72)
   schema_score    = (cols - inconsistencies)/cols * 100       (:124-143)
-weights 30/25/25/20, normalized if they don't sum to 100 (:19-44);
+weights 30/25/25/20 (:19-44);
 overall = Σ scoreᵢ·wᵢ/100, rounded 2dp (:80-88); quick score variant
 ``100 - (miss_pct*0.3 + dup_pct*0.7)`` (quality_check.py:282).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
-from ..config import DEFAULT_CONFIG, Thresholds
-from .verdicts import grade
-
-_T = DEFAULT_CONFIG.thresholds
-
-
-def _normalized_weights(t: Thresholds) -> tuple[float, float, float, float]:
-    ws = (t.missing_weight, t.duplicate_weight, t.outlier_weight, t.schema_weight)
-    total = sum(ws)
-    if abs(total - 100.0) > 0.01:  # quality_scorer.py:35-42
-        ws = tuple(w / total * 100 for w in ws)
-    return ws  # type: ignore[return-value]
+from ..config import DUPLICATE_WEIGHT, MISSING_WEIGHT, OUTLIER_WEIGHT, SCHEMA_WEIGHT
 
 
 def component_scores(
@@ -52,15 +41,13 @@ def overall_score(
     duplicate_pct: Column,
     outlier_pct: Column,
     schema_score: Column | None = None,
-    t: Thresholds = _T,
 ) -> Column:
-    mw, dw, ow, sw = _normalized_weights(t)
     s = component_scores(missing_pct, duplicate_pct, outlier_pct, schema_score)
     return F.round(
-        s["missing_score"] * mw / 100
-        + s["duplicate_score"] * dw / 100
-        + s["outlier_score"] * ow / 100
-        + s["schema_score"] * sw / 100,
+        s["missing_score"] * MISSING_WEIGHT / 100
+        + s["duplicate_score"] * DUPLICATE_WEIGHT / 100
+        + s["outlier_score"] * OUTLIER_WEIGHT / 100
+        + s["schema_score"] * SCHEMA_WEIGHT / 100,
         2,
     )
 
@@ -72,22 +59,3 @@ def quick_score(missing_pct: Column, duplicate_pct: Column) -> Column:
         F.round(F.lit(100.0) - (missing_pct * 0.3 + duplicate_pct * 0.7), 2),
     )
 
-
-def with_score_and_grade(
-    df: DataFrame,
-    missing_pct: str = "missing_pct",
-    duplicate_pct: str = "duplicate_pct",
-    outlier_pct: str = "outlier_pct",
-    schema_score: str | None = None,
-    t: Thresholds = _T,
-) -> DataFrame:
-    sc = overall_score(
-        F.col(missing_pct),
-        F.col(duplicate_pct),
-        F.col(outlier_pct),
-        F.col(schema_score) if schema_score else None,
-        t,
-    )
-    return df.withColumn("overall_score", sc).withColumn(
-        "grade", grade(F.col("overall_score"))
-    )

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..config import DEFAULT_CONFIG, EngineConfig
+from ..config import CHI2_ALPHA, DRIFT_BINS, KS_ALPHA, PSI_MODERATE
 from ..functions.verdicts import psi_classification
 from ..session import local_frame
 
@@ -166,7 +166,6 @@ def drift_stats_broadcast(
     ref_hist: DataFrame,
     numeric_cols: frozenset | set = frozenset(),
     partition_col: str = "part_id",
-    config: EngineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
     """Drift on the driver: the current per-partition histograms are
     O(partitions × bins) rows, so they are collected together with the
@@ -185,19 +184,18 @@ def drift_stats_broadcast(
     if not partition_col:
         rows = [(None, *r) for r in rows]
     stats = drift_from_histograms(
-        rows, collect_ref_hist(ref_hist), set(numeric_cols), config.drift_bins
+        rows, collect_ref_hist(ref_hist), set(numeric_cols), DRIFT_BINS
     )
-    t = config.thresholds
     psi = F.col("psi")
     out = (
         local_frame(cur_hist.sparkSession, stats, _KERNEL_SCHEMA)
-        .withColumn("psi_drift", psi_classification(psi, t))
-        .withColumn("ks_significant", F.col("ks_pvalue") < t.ks_alpha)
-        .withColumn("chi2_significant", F.col("chi2_pvalue") < t.chi2_alpha)
+        .withColumn("psi_drift", psi_classification(psi))
+        .withColumn("ks_significant", F.col("ks_pvalue") < KS_ALPHA)
+        .withColumn("chi2_significant", F.col("chi2_pvalue") < CHI2_ALPHA)
         # a NaN PSI (column absent from the reference) is not drift by itself
         .withColumn(
             "drift_detected",
-            ((psi >= t.psi_moderate) & ~F.isnan(psi))
+            ((psi >= PSI_MODERATE) & ~F.isnan(psi))
             | F.col("ks_significant")
             | F.col("chi2_significant"),
         )
@@ -244,7 +242,6 @@ def token_drift(
     cur: DataFrame,
     ref: DataFrame,
     tokens_col: str = "tokens",
-    config: EngineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
     """Unigram-distribution drift between two token-sequence tables.
 
@@ -270,7 +267,7 @@ def token_drift(
     )
     rows = []
     if cur_map:
-        st = _drift_from_counts(cur_map, ref_map, False, config.drift_bins)
+        st = _drift_from_counts(cur_map, ref_map, False, DRIFT_BINS)
         oov = [c for b, c in cur_map.items() if b not in ref_map]
         rows.append((
             name, st["n_cur"], st["n_ref"], st["psi"], st["js_divergence"],
@@ -285,7 +282,7 @@ def token_drift(
     )
     return out.select(
         *out.columns[:7],
-        psi_classification(F.col("psi"), config.thresholds).alias("psi_drift"),
+        psi_classification(F.col("psi")).alias("psi_drift"),
         "new_tokens",
         "oov_pct",
     )

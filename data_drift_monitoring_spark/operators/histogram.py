@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..config import DEFAULT_CONFIG, EngineConfig
+from ..config import SKEW_SALT_BUCKETS, TOPK_VALUES
 
 
 def numeric_histogram(
@@ -55,7 +55,6 @@ def categorical_counts(
     df: DataFrame,
     column: str,
     partition_col: str | None = "part_id",
-    config: EngineConfig = DEFAULT_CONFIG,
     salted: bool = True,
 ) -> DataFrame:
     """Per-partition category counts: (part_id?, col, bin, cnt) with bin =
@@ -67,7 +66,7 @@ def categorical_counts(
     if salted:
         salt = F.pmod(
             F.xxhash64(F.monotonically_increasing_id()),
-            F.lit(config.skew_salt_buckets),
+            F.lit(SKEW_SALT_BUCKETS),
         ).alias("_salt")
         partial = base.select(*keys, "bin", salt).groupBy(
             *keys, "bin", "_salt"
@@ -109,7 +108,7 @@ def value_histogram(
 def top_k_values(
     df: DataFrame,
     column: str,
-    k: int = DEFAULT_CONFIG.topk_values,
+    k: int = TOPK_VALUES,
 ) -> DataFrame:
     """Top-k value counts (A13, file_handler.py:307): global aggregate then
     TakeOrdered top-k; ties broken by value for determinism."""

@@ -15,42 +15,28 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..config import DEFAULT_CONFIG, EngineConfig
+from ..config import IQR_MULTIPLIER, Z_SCORE_THRESHOLD
 from .stats import _is_numeric, column_profile
 
 
-def outlier_bounds(
-    profile: DataFrame, config: EngineConfig = DEFAULT_CONFIG
-) -> DataFrame:
+def outlier_bounds(profile: DataFrame) -> DataFrame:
     """Derive IQR and z-score bounds from a ``column_profile`` result.
     Pure arithmetic on the tiny stats DF (outliers.py:189-196, 227-228)."""
-    t = config.thresholds
     iqr = F.col("q3") - F.col("q1")
     sd_ok = F.col("stddev").isNotNull() & (F.col("stddev") > 0)
     return profile.filter(F.col("q1").isNotNull()).select(
         "part_id",
         "column",
-        (F.col("q1") - t.iqr_multiplier * iqr).alias("iqr_lo"),
-        (F.col("q3") + t.iqr_multiplier * iqr).alias("iqr_hi"),
+        (F.col("q1") - IQR_MULTIPLIER * iqr).alias("iqr_lo"),
+        (F.col("q3") + IQR_MULTIPLIER * iqr).alias("iqr_hi"),
         # σ=0 guard (outliers.py:220-225): degenerate bounds that never fire
-        F.when(sd_ok, F.col("mean") - t.z_score_threshold * F.col("stddev"))
+        F.when(sd_ok, F.col("mean") - Z_SCORE_THRESHOLD * F.col("stddev"))
         .otherwise(F.col("min"))
         .alias("z_lo"),
-        F.when(sd_ok, F.col("mean") + t.z_score_threshold * F.col("stddev"))
+        F.when(sd_ok, F.col("mean") + Z_SCORE_THRESHOLD * F.col("stddev"))
         .otherwise(F.col("max"))
         .alias("z_hi"),
         "skewness",
-    )
-
-
-def _bounds_map(bounds: DataFrame) -> DataFrame:
-    return bounds.select(
-        "part_id",
-        "column",
-        F.col("iqr_lo"),
-        F.col("iqr_hi"),
-        F.col("z_lo"),
-        F.col("z_hi"),
     )
 
 
@@ -58,7 +44,6 @@ def outlier_stats(
     df: DataFrame,
     columns: list[str] | None = None,
     partition_col: str = "part_id",
-    config: EngineConfig = DEFAULT_CONFIG,
     profile: DataFrame | None = None,
     exact_quantiles: bool = False,
 ) -> DataFrame:
@@ -74,9 +59,9 @@ def outlier_stats(
     ]
     if profile is None:
         profile = column_profile(
-            df, partition_col, cols, config, exact_quantiles=exact_quantiles
+            df, partition_col, cols, exact_quantiles=exact_quantiles
         )
-    bounds = outlier_bounds(profile, config)
+    bounds = outlier_bounds(profile)
 
     # pass 2: one scan, counting per column against broadcast bounds.
     # Rather than a join per column, pivot bounds to a per-partition map and

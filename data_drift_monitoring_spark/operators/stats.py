@@ -17,8 +17,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..config import DEFAULT_CONFIG, EngineConfig
-
 _NUMERIC = {"tinyint", "smallint", "int", "bigint", "float", "double", "decimal"}
 
 
@@ -30,7 +28,6 @@ def column_profile(
     df: DataFrame,
     partition_col: str = "part_id",
     columns: list[str] | None = None,
-    config: EngineConfig = DEFAULT_CONFIG,
     exact_quantiles: bool = False,
 ) -> DataFrame:
     """Long-format per-(partition, column) profile.
@@ -108,11 +105,7 @@ def column_profile(
     ).select(partition_col, "n_rows", "s.*")
 
 
-def sequence_stats(
-    df: DataFrame,
-    partition_col: str = "part_id",
-    config: EngineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
+def sequence_stats(df: DataFrame, partition_col: str = "part_id") -> DataFrame:
     """The flagship per-partition contract check over the tokenized-sequence
     table (north_rule): null rates, n_tok summary, token-array
     length-consistency (A20), uniqueness sketch, total token throughput —
@@ -138,9 +131,7 @@ def sequence_stats(
 
 
 def sequence_stats_prepared(
-    p: DataFrame,
-    partition_col: str = "part_id",
-    config: EngineConfig = DEFAULT_CONFIG,
+    p: DataFrame, partition_col: str = "part_id"
 ) -> DataFrame:
     """``sequence_stats`` over the narrow ``prepare_sequences`` projection
     (``tok_len``/``tok_digest`` instead of the raw arrays) — identical output

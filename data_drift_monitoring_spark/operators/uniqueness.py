@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..config import DEFAULT_CONFIG, EngineConfig
+from ..config import SAMPLE_DUP_GROUPS, SAMPLE_ROWS_PER_GROUP
 
 
 def duplicate_stats(
@@ -86,7 +86,6 @@ def sample_duplicate_groups(
     df: DataFrame,
     keys: list[str],
     partition_col: str = "part_id",
-    config: EngineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
     """Reference's capped duplicate samples (duplicates.py:92-123: ≤5 groups,
     ≤3 rows each) as a single aggregation — no driver iteration.
@@ -99,14 +98,14 @@ def sample_duplicate_groups(
             F.slice(
                 F.sort_array(F.collect_list(F.struct(*[F.col(c) for c in other]))),
                 1,
-                config.sample_rows_per_group,
+                SAMPLE_ROWS_PER_GROUP,
             ).alias("sample_rows"),
         )
         .filter(F.col("group_size") > 1)
     )
     return grouped.orderBy(
         F.desc("group_size"), *[F.col(k).asc_nulls_last() for k in keys]
-    ).limit(config.sample_dup_groups)
+    ).limit(SAMPLE_DUP_GROUPS)
 
 
 def dedup_exact(

@@ -38,7 +38,14 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..cache import release_cached, track_cached
-from ..config import DEFAULT_CONFIG, EngineConfig
+from ..config import (
+    DRIFT_BINS,
+    KS_ALPHA,
+    MIN_ROWS,
+    MISSING_ERROR_PCT,
+    PSI_LARGE,
+    PSI_MODERATE,
+)
 from ..functions import verdicts as V
 from ..functions.scoring import overall_score
 from ..functions.verdicts import grade, psi_classification
@@ -68,7 +75,7 @@ class RunResult:
     pruned_partitions: list[int] = field(default_factory=list)
 
 
-def prepare_sequences(df: DataFrame, partition_col: str = "part_id") -> DataFrame:
+def prepare_sequences(df: DataFrame) -> DataFrame:
     """ONE heavy scan of the sequence table → a narrow per-row projection
     (doc_id, n_tok, source, tok_len, tok_digest): the token arrays — the
     bulk of the bytes at 10^12 scale — are read exactly once; every check
@@ -76,7 +83,7 @@ def prepare_sequences(df: DataFrame, partition_col: str = "part_id") -> DataFram
     join) works off this ~40-byte/row projection. Persisted MEMORY_AND_DISK
     by ``build_verdicts`` so the multiple groupBy shuffles don't re-scan."""
     return df.select(
-        F.col(partition_col),
+        "part_id",
         "doc_id",
         "n_tok",
         "source",
@@ -111,7 +118,7 @@ def _check(check: str, column, value, pct, severity, recommendation, passed):
     )
 
 
-def _verdict_structs(t) -> Column:
+def _verdict_structs() -> Column:
     """Every verdict of one wide per-part row, as an array of ``_check``
     structs in check order; checks with no row for the part are dropped."""
     structs = []
@@ -125,7 +132,7 @@ def _verdict_structs(t) -> Column:
                 "missing_values", col,
                 F.col(f"null_{col}"), pct,
                 V.missing_severity(pct),
-                F.when(pct >= t.missing_error_pct, "drop_column")
+                F.when(pct >= MISSING_ERROR_PCT, "drop_column")
                 .when(pct > 0, "impute_mode" if col != "tokens" else "investigate")
                 .otherwise("no_action"),
                 pct == 0,
@@ -185,15 +192,15 @@ def _verdict_structs(t) -> Column:
     def psi(d):
         return _check(
             "drift_psi", d["col"], d["psi"], F.lit(None),
-            psi_classification(d["psi"], t),
-            F.when(d["psi"] < t.psi_moderate, "no_action")
-            .when(d["psi"] < t.psi_large, "monitor_drift")
+            psi_classification(d["psi"]),
+            F.when(d["psi"] < PSI_MODERATE, "no_action")
+            .when(d["psi"] < PSI_LARGE, "monitor_drift")
             .otherwise("retrain_or_investigate"),
-            d["psi"] < t.psi_moderate,
+            d["psi"] < PSI_MODERATE,
         )
 
     def ks(d):
-        significant = d["ks_pvalue"] < t.ks_alpha
+        significant = d["ks_pvalue"] < KS_ALPHA
         return _check(
             "drift_ks", d["col"], d["ks_stat"], d["ks_pvalue"],
             F.when(significant, "high").otherwise("none"),
@@ -231,7 +238,6 @@ def build_verdicts(
     ref_stats: DataFrame | None = None,
     allowed_sources: DataFrame | None = None,
     ref_sequences: DataFrame | None = None,
-    config: EngineConfig = DEFAULT_CONFIG,
     ref_digests: DataFrame | None = None,
 ) -> DataFrame:
     """Assemble all per-partition verdict rows (no writes).
@@ -252,16 +258,14 @@ def build_verdicts(
     The projection stays cached (tracked on the returned DataFrame) so a
     violation export over the same input reuses it; pass the result to
     ``release_cached`` when done."""
-    t = config.thresholds
-    part = config.partition_col
-    prepared = prepare_sequences(df, part).persist(StorageLevel.MEMORY_AND_DISK)
+    prepared = prepare_sequences(df).persist(StorageLevel.MEMORY_AND_DISK)
 
     # 1-2. missing values + length consistency; one row per part
     wide = {
-        r[part]: {**r.asDict(), "part_id": r[part], "drift": []}
-        for r in sequence_stats_prepared(prepared, part)
+        r["part_id"]: {**r.asDict(), "drift": []}
+        for r in sequence_stats_prepared(prepared)
         .select(
-            part, "n_rows", "null_doc_id", "null_tokens", "null_source",
+            "part_id", "n_rows", "null_doc_id", "null_tokens", "null_source",
             "len_mismatch",
         )
         .collect()
@@ -272,30 +276,27 @@ def build_verdicts(
     if ref_digests is None and ref_sequences is not None:
         ref_digests = token_digests(ref_sequences)
     if ref_digests is not None:
-        dup = uniqueness_and_token_equality(
-            prepared, ref_digests, partition_col=part
-        ).select(
-            part, "duplicate_rows", "duplicate_pct",
+        dup = uniqueness_and_token_equality(prepared, ref_digests).select(
+            "part_id", "duplicate_rows", "duplicate_pct",
             F.col("n_rows").alias("te_rows"), "token_mismatch",
         )
     else:
         dup = duplicate_stats(
-            prepared.select(part, "doc_id"),
+            prepared.select("part_id", "doc_id"),
             keys=["doc_id"],
-            partition_col=part,
             ignore_null_keys=True,
-        ).select(part, "duplicate_rows", "duplicate_pct")
+        ).select("part_id", "duplicate_rows", "duplicate_pct")
     for r in dup.collect():
-        wide[r[part]].update(r.asDict())
+        wide[r["part_id"]].update(r.asDict())
 
     # per-partition source counts (salted two-level agg), shared by the
     # referential check and the drift comparison, plus the n_tok per-value
     # histogram when drift runs
     if allowed_sources is not None or ref_stats is not None:
-        hist = categorical_counts(prepared, "source", config=config)
+        hist = categorical_counts(prepared, "source")
         if ref_stats is not None:
             hist = value_histogram(prepared, "n_tok").unionByName(hist)
-        hist_rows = hist.select(part, "col", "bin", "cnt").collect()
+        hist_rows = hist.select("part_id", "col", "bin", "cnt").collect()
 
     # 4. referential: source ∈ allowed dimension (J3). The dimension is tiny
     #    by definition, so it is an isin over the histogram bins; violations
@@ -312,8 +313,7 @@ def build_verdicts(
     # 5. drift vs reference snapshot (PSI/KS/JS/chi² from histograms)
     if ref_stats is not None:
         for s in drift_from_histograms(
-            hist_rows, collect_ref_hist(ref_stats), {"n_tok"},
-            config.drift_bins,
+            hist_rows, collect_ref_hist(ref_stats), {"n_tok"}, DRIFT_BINS
         ):
             wide[s["part_id"]]["drift"].append(s)
 
@@ -322,9 +322,9 @@ def build_verdicts(
     per_part = local_frame(
         df.sparkSession,
         wide.values(),
-        _WIDE_SCHEMA.format(prepared.schema[part].dataType.simpleString()),
+        _WIDE_SCHEMA.format(prepared.schema["part_id"].dataType.simpleString()),
     ).coalesce(1)
-    out = per_part.select("part_id", F.inline(_verdict_structs(t)))
+    out = per_part.select("part_id", F.inline(_verdict_structs()))
     return track_cached(out, prepared)
 
 
@@ -354,7 +354,6 @@ def build_violations(
     df: DataFrame,
     allowed_sources: DataFrame | None = None,
     ref_digests: DataFrame | None = None,
-    config: EngineConfig = DEFAULT_CONFIG,
     failed: set[tuple] | None = None,
 ) -> DataFrame:
     """Row-level violation export (north_rule: "violation rows"): one row
@@ -368,12 +367,11 @@ def build_violations(
     skipped and the others scan only their failing parts. The result is
     the same as the full export, because per part each family's row count
     equals its verdict value (uniqueness is per part, like its verdict)."""
-    part = config.partition_col
-    p = prepare_sequences(df, part)
+    p = prepare_sequences(df)
 
     def rows(src: DataFrame, check: str, detail) -> DataFrame:
         return src.select(
-            F.col(part),
+            F.col("part_id"),
             F.col("doc_id"),
             F.lit(check).alias("check"),
             detail.cast("string").alias("detail"),
@@ -384,7 +382,7 @@ def build_violations(
         if failed is None:
             return p
         parts = sorted(pid for pid, c in failed if c == check)
-        return p.filter(F.col(part).isin(parts)) if parts else None
+        return p.filter(F.col("part_id").isin(parts)) if parts else None
 
     pieces = []
     if (src := scope("missing_values")) is not None:
@@ -420,9 +418,8 @@ def build_violations(
 
     if (src := scope("uniqueness")) is not None:
         dup = duplicate_violations(
-            src.select(part, "doc_id").filter(F.col("doc_id").isNotNull()),
-            keys=[part, "doc_id"],
-            partition_col=part,
+            src.select("part_id", "doc_id").filter(F.col("doc_id").isNotNull()),
+            keys=["part_id", "doc_id"],
         )
         pieces.append(
             rows(
@@ -471,9 +468,7 @@ def build_violations(
     return reduce(DataFrame.unionByName, pieces)
 
 
-def score_partitions(
-    verdicts: DataFrame, config: EngineConfig = DEFAULT_CONFIG
-) -> DataFrame:
+def score_partitions(verdicts: DataFrame) -> DataFrame:
     """Per-partition weighted quality score + grade (quality_scorer.py:46-122
     generalized: dataset → partition). Components: missing = worst null pct,
     duplicate = doc_id dup pct, outlier(slot) = contract-violation pct
@@ -497,7 +492,7 @@ def score_partitions(
         + F.coalesce(F.col("length_consistency"), z)
         + F.coalesce(F.col("token_equality"), z),
     )
-    sc = overall_score(missing, dup, contract, None, config.thresholds)
+    sc = overall_score(missing, dup, contract)
     return p.select(
         "part_id",
         F.round(missing, 2).alias("missing_pct"),
@@ -572,10 +567,8 @@ def run_checks(
     ref_sequences: DataFrame | None = None,
     ref_digests: DataFrame | None = None,
     snapshot_id: str | None = None,
-    config: EngineConfig = DEFAULT_CONFIG,
     min_rows: int | None = None,
     now: datetime | None = None,
-    export_violations: bool = True,
 ) -> RunResult:
     """Full pipeline with schema gate, resume pruning, and persistence.
 
@@ -584,7 +577,7 @@ def run_checks(
     sv = validate_schema(df.schema, SEQUENCES_SCHEMA)
     if not sv.is_valid:
         raise ValueError(f"schema validation failed: {sv.errors}")
-    floor = config.thresholds.min_rows if min_rows is None else min_rows
+    floor = MIN_ROWS if min_rows is None else min_rows
     n = df.limit(floor).count()
     if n < floor:
         raise ValueError(
@@ -595,11 +588,8 @@ def run_checks(
     pruned: list[int] = []
     started = (now or datetime.now(timezone.utc)).isoformat()
     if io is not None:
-        df, pruned = M.prune_completed(df, io, run_id, config.partition_col)
-        todo = [
-            r["part_id"]
-            for r in df.select(config.partition_col).distinct().collect()
-        ]
+        df, pruned = M.prune_completed(df, io, run_id)
+        todo = [r["part_id"] for r in df.select("part_id").distinct().collect()]
         if not todo:  # fully resumed: nothing to recompute
             verdicts = io.read_appended(RESULTS_TABLE).filter(
                 F.col("run_id") == run_id
@@ -613,13 +603,10 @@ def run_checks(
         )
 
     built = build_verdicts(
-        df, ref_stats, allowed_sources, ref_sequences, config,
-        ref_digests=ref_digests,
+        df, ref_stats, allowed_sources, ref_sequences, ref_digests=ref_digests
     )
     verdicts = built.withColumn("run_id", F.lit(run_id))
-    score = score_partitions(built, config).withColumn(
-        "run_id", F.lit(run_id)
-    )
+    score = score_partitions(built).withColumn("run_id", F.lit(run_id))
     if io is None:
         # the verdict rows are local data; only a violation export reads the
         # cached projection
@@ -628,16 +615,14 @@ def run_checks(
 
     io.append(verdicts, RESULTS_TABLE)
     io.append(score, RESULTS_TABLE + "_score")
-    if export_violations:
-        if ref_digests is None and ref_sequences is not None:
-            ref_digests = token_digests(ref_sequences)
-        io.append(
-            build_violations(
-                df, allowed_sources, ref_digests, config,
-                failed=failed_checks(built),
-            ).withColumn("run_id", F.lit(run_id)),
-            VIOLATIONS_TABLE,
-        )
+    if ref_digests is None and ref_sequences is not None:
+        ref_digests = token_digests(ref_sequences)
+    io.append(
+        build_violations(
+            df, allowed_sources, ref_digests, failed=failed_checks(built)
+        ).withColumn("run_id", F.lit(run_id)),
+        VIOLATIONS_TABLE,
+    )
     # everything is on disk now; drop the cached projection so repeated
     # run_checks calls (or a driver loop) don't accumulate cache entries.
     # The verdict and score frames are local data: digesting and returning

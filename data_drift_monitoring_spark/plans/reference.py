@@ -13,7 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..config import DEFAULT_CONFIG, EngineConfig
 from ..operators.histogram import categorical_counts, value_histogram
 from ..sources.tables import ParquetTableIO
 
@@ -22,15 +21,11 @@ REF_SEQUENCES_TABLE = "ref_sequences"
 REF_DIGESTS_TABLE = "ref_digests"
 
 
-def build_ref_stats(
-    ref_df: DataFrame, config: EngineConfig = DEFAULT_CONFIG
-) -> DataFrame:
+def build_ref_stats(ref_df: DataFrame) -> DataFrame:
     """Global (not per-partition) histograms of the reference snapshot:
     (col, bin, cnt). One aggregate pass over the reference table."""
     n_tok_hist = value_histogram(ref_df, "n_tok", partition_col=None)
-    source_hist = categorical_counts(
-        ref_df, "source", partition_col=None, config=config
-    )
+    source_hist = categorical_counts(ref_df, "source", partition_col=None)
     return n_tok_hist.unionByName(source_hist)
 
 

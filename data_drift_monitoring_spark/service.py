@@ -17,9 +17,11 @@ distributed operators:
 ``check_quality`` returns a dict with the golden report's top-level keys
 (``data/drift_reports/quality_report_20251023_*.json``): report_id,
 dataset_info, missing_values, missing_patterns, duplicates, outliers,
-quality_score, recommendations, summary. Values come from 3 Spark jobs
-over the table regardless of column count (the reference runs 4 + N
-pandas passes).
+quality_score, recommendations, summary. Values come from four aggregate
+passes over the table (five with ``key_columns``) regardless of column
+count: the column profile, the per-row missing patterns, the duplicate
+counts and one outlier-count pass that reuses the profile's quantiles (the
+reference runs 4 + N pandas passes).
 """
 
 from __future__ import annotations
@@ -29,7 +31,19 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .config import DEFAULT_CONFIG, EngineConfig
+from .config import (
+    DUP_LOW_PCT,
+    DUP_MEDIUM_PCT,
+    DUPLICATE_WEIGHT,
+    GRADE_BANDS,
+    MISSING_ERROR_PCT,
+    MISSING_WARN_PCT,
+    MISSING_WEIGHT,
+    OUTLIER_LOW_PCT,
+    OUTLIER_MEDIUM_PCT,
+    OUTLIER_WEIGHT,
+    SCHEMA_WEIGHT,
+)
 from .operators.stats import column_profile, missing_patterns
 from .operators.uniqueness import duplicate_stats
 from .plans.compare import compare_metadata, no_baseline
@@ -54,10 +68,7 @@ _GRADE_EMOJI = {  # quality_scorer.py:168-186
 
 def _grade_py(score: float) -> str:
     """Driver-side twin of functions.verdicts.grade (quality_scorer.py:145-166)."""
-    for cut, name in (
-        (90, "Excellent"), (80, "Very Good"), (70, "Good"),
-        (60, "Fair"), (50, "Poor"),
-    ):
+    for cut, name in GRADE_BANDS:
         if score >= cut:
             return name
     return "Critical"
@@ -68,15 +79,9 @@ DIGEST_TABLE = "upload_digests"
 
 
 class ValidationService:
-    def __init__(
-        self,
-        spark: SparkSession,
-        warehouse: str,
-        config: EngineConfig = DEFAULT_CONFIG,
-    ):
+    def __init__(self, spark: SparkSession, warehouse: str):
         self.spark = spark
         self.io = ParquetTableIO(spark, warehouse)
-        self.config = config
 
     # -- upload / baseline (data_upload.py:24-192) -----------------------
 
@@ -91,14 +96,14 @@ class ValidationService:
         → optional baseline → metadata comparison vs current baseline."""
         fmt = validate_format(path)
         df = read_dataset(self.spark, path, fmt)
-        validation = validate_dataset(df, expected_schema, self.config)
+        validation = validate_dataset(df, expected_schema)
         if not validation.is_valid:
             return {
                 "success": False,
                 "errors": list(validation.errors),
                 "warnings": list(validation.warnings),
             }
-        meta = dataset_metadata(df, self.config)
+        meta = dataset_metadata(df)
         # duplicate-upload detection (file_handler.py:366-394 semantics,
         # content-level instead of file-byte-level): one distributed
         # digest pass vs the tiny digest registry
@@ -147,7 +152,7 @@ class ValidationService:
         append-only table keyed by the baseline's own snapshot id, so a
         pinned-version read never depends on two writes minting the same
         timestamp)."""
-        meta = meta or dataset_metadata(df, self.config)
+        meta = meta or dataset_metadata(df)
         now = now or datetime.now(timezone.utc)
         snap = self.io.write(df, BASELINE_TABLE, now=now)
         side = local_frame(
@@ -197,7 +202,6 @@ class ValidationService:
         now: datetime | None = None,
         persist: bool = True,
     ) -> dict:
-        t = self.config.thresholds
         ts = now or datetime.now(timezone.utc)
         if isinstance(df_or_path, str):
             df = read_dataset(self.spark, df_or_path)
@@ -209,10 +213,9 @@ class ValidationService:
         cols = df.columns
 
         # job 1: wide profile (nulls + numeric stats for every column)
-        prof = {
-            r["column"]: r
-            for r in column_profile(tagged, partition_col="part_id").collect()
-        }
+        pf = column_profile(tagged, partition_col="part_id")
+        prof_rows = pf.collect()
+        prof = {r["column"]: r for r in prof_rows}
         n_rows = next(iter(prof.values()))["n_rows"] if prof else 0
 
         # job 2: per-row patterns + full-row/key duplicates in one pass set
@@ -229,7 +232,9 @@ class ValidationService:
         # job 3: outlier counts for all numeric columns (reuses profile)
         from .operators.outliers import outlier_stats
 
-        out_rows = outlier_stats(tagged, profile=None).collect()
+        out_rows = outlier_stats(
+            tagged, profile=local_frame(self.spark, prof_rows, pf.schema)
+        ).collect()
 
         report = _assemble_report(
             report_id or f"quality_report_{ts.strftime('%Y%m%d_%H%M%S')}",
@@ -243,7 +248,6 @@ class ValidationService:
             key_dup,
             key_columns,
             out_rows,
-            t,
         )
         if persist:
             row = local_frame(
@@ -407,7 +411,6 @@ class ValidationService:
         from .functions.remediation import DEFAULT_RULES
 
         rl = {(c, s): (p, a, sn) for c, s, p, a, sn in (rules or DEFAULT_RULES)}
-        t = self.config.thresholds
         actions: list[dict] = []
 
         def add(check: str, column: str | None, severity: str) -> None:
@@ -439,8 +442,8 @@ class ValidationService:
                 d["column"],
                 _severity(
                     float(d["outlier_percentage"]),
-                    t.outlier_low_pct,
-                    t.outlier_medium_pct,
+                    OUTLIER_LOW_PCT,
+                    OUTLIER_MEDIUM_PCT,
                 ),
             )
         _prio = {"high": 0, "medium": 1, "low": 2}
@@ -481,7 +484,7 @@ def _severity(pct: float, low: float, high: float) -> str:
 
 def _assemble_report(
     report_id, filename, ts, df, n_rows, prof, pat, dup, key_dup,
-    key_columns, out_rows, t,
+    key_columns, out_rows,
 ) -> dict:
     cols = df.columns
     n_cols = len(cols)
@@ -501,7 +504,7 @@ def _assemble_report(
             "missing_percentage": float(r["null_pct"]),
             "dtype": r["dtype"],
             "severity": _severity(
-                float(r["null_pct"]), t.missing_warn_pct, t.missing_error_pct
+                float(r["null_pct"]), MISSING_WARN_PCT, MISSING_ERROR_PCT
             ),
         }
         for c, r in sorted(
@@ -548,7 +551,7 @@ def _assemble_report(
             if key_dup is not None
             else None
         ),
-        "severity": _severity(dup_pct, t.dup_low_pct, t.dup_medium_pct),
+        "severity": _severity(dup_pct, DUP_LOW_PCT, DUP_MEDIUM_PCT),
     }
 
     total_outliers = sum(int(r["outlier_count"]) for r in out_rows)
@@ -574,19 +577,18 @@ def _assemble_report(
             }
             for r in sorted(out_rows, key=lambda r: -r["outlier_pct"])
         ],
-        "severity": _severity(out_pct, t.outlier_low_pct, t.outlier_medium_pct),
+        "severity": _severity(out_pct, OUTLIER_LOW_PCT, OUTLIER_MEDIUM_PCT),
     }
 
-    from .functions.scoring import _normalized_weights
-
-    mw, dw, ow, sw = _normalized_weights(t)
     m_score = max(0.0, 100 - missing_values["overall_missing_percentage"])
     d_score = max(0.0, 100 - dup_pct)
     o_score = max(0.0, 100 - min(out_pct, 100.0))
     s_score = 100.0
     overall = round(
-        m_score * mw / 100 + d_score * dw / 100 + o_score * ow / 100
-        + s_score * sw / 100,
+        m_score * MISSING_WEIGHT / 100
+        + d_score * DUPLICATE_WEIGHT / 100
+        + o_score * OUTLIER_WEIGHT / 100
+        + s_score * SCHEMA_WEIGHT / 100,
         2,
     )
     grade = _grade_py(overall)
@@ -600,7 +602,7 @@ def _assemble_report(
                     "column": d["column"],
                     "priority": d["severity"],
                     "action": "drop_column"
-                    if d["missing_percentage"] >= t.missing_error_pct
+                    if d["missing_percentage"] >= MISSING_ERROR_PCT
                     else "impute",
                 }
             )
@@ -613,7 +615,7 @@ def _assemble_report(
             }
         )
     for d in outliers["details"]:
-        if d["outlier_percentage"] >= t.outlier_medium_pct:
+        if d["outlier_percentage"] >= OUTLIER_MEDIUM_PCT:
             recommendations.append(
                 {
                     "category": "outliers",
@@ -674,10 +676,10 @@ def _assemble_report(
                 "outlier_score": round(o_score, 2),
                 "schema_score": s_score,
                 "weights": {
-                    "missing": mw,
-                    "duplicates": dw,
-                    "outliers": ow,
-                    "schema": sw,
+                    "missing": MISSING_WEIGHT,
+                    "duplicates": DUPLICATE_WEIGHT,
+                    "outliers": OUTLIER_WEIGHT,
+                    "schema": SCHEMA_WEIGHT,
                 },
             },
         },

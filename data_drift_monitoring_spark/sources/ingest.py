@@ -32,7 +32,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from ..config import DEFAULT_CONFIG, EngineConfig
+from ..config import MIN_COLUMNS, MIN_ROWS, TOPK_VALUES
 from ..schema import SchemaValidationResult, validate_schema
 
 # reference allows csv/json/parquet (config/settings.py:31); orc added —
@@ -92,26 +92,22 @@ class DatasetValidation:
 def validate_dataset(
     df: DataFrame,
     expected_schema: T.StructType | None = None,
-    config: EngineConfig = DEFAULT_CONFIG,
 ) -> DatasetValidation:
     """The reference's 7-check DataFrame validation
     (file_handler.py:136-245): hard errors for empty / min rows / min
     columns, warnings for schema drift. One bounded `limit().count()` job
     — never a full count just to check a floor."""
-    t = config.thresholds
     errors: list[str] = []
     warnings: list[str] = []
     n_cols = len(df.columns)
     # bounded count: reads at most min_rows+1 rows, not the whole table
-    n = df.limit(t.min_rows + 1).count()
+    n = df.limit(MIN_ROWS + 1).count()
     if n == 0:
         errors.append("dataset is empty")
-    elif n < t.min_rows:
-        errors.append(f"dataset has {n} rows; minimum is {t.min_rows}")
-    if n_cols < t.min_columns:
-        errors.append(
-            f"dataset has {n_cols} columns; minimum is {t.min_columns}"
-        )
+    elif n < MIN_ROWS:
+        errors.append(f"dataset has {n} rows; minimum is {MIN_ROWS}")
+    if n_cols < MIN_COLUMNS:
+        errors.append(f"dataset has {n_cols} columns; minimum is {MIN_COLUMNS}")
     sr = None
     if expected_schema is not None:
         sr = validate_schema(df.schema, expected_schema)
@@ -145,7 +141,6 @@ def content_digest(df: DataFrame) -> str:
 
 def dataset_metadata(
     df: DataFrame,
-    config: EngineConfig = DEFAULT_CONFIG,
     max_numeric: int = 10,
     max_categorical: int = 10,
 ) -> dict:
@@ -196,7 +191,7 @@ def dataset_metadata(
             pairs.groupBy("col", "value")
             .agg(F.count(F.lit(1)).alias("cnt"))
             .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= config.topk_values)
+            .filter(F.col("_rn") <= TOPK_VALUES)
             .collect()
         )
         for r in sorted(topk, key=lambda r: (r["col"], r["_rn"])):

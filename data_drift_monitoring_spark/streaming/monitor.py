@@ -27,7 +27,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from ..config import DEFAULT_CONFIG, EngineConfig
 from ..schema import SEQUENCES_SCHEMA
 
 # severity → rank for alert filtering; covers the quality chains
@@ -131,7 +130,6 @@ def start_monitor(
     ref_stats: DataFrame | None = None,
     allowed_sources: DataFrame | None = None,
     ref_digests: DataFrame | None = None,
-    config: EngineConfig = DEFAULT_CONFIG,
     available_now: bool = True,
     source: str = "files",
     kafka_options: dict | None = None,
@@ -178,7 +176,6 @@ def start_monitor(
             ref_stats=ref_stats,
             allowed_sources=allowed_sources,
             ref_digests=ref_digests,
-            config=config,
         )
         try:
             verdicts = built.withColumn("batch_id", F.lit(batch_id))

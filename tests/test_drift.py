@@ -187,10 +187,10 @@ def test_salted_agg_avoids_hot_partition(spark, cur_drifted_df):
     the hot key contributes."""
     from pyspark.sql import functions as F
 
-    from data_drift_monitoring_spark.config import DEFAULT_CONFIG
+    from data_drift_monitoring_spark.config import SKEW_SALT_BUCKETS
 
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    k = DEFAULT_CONFIG.skew_salt_buckets
+    k = SKEW_SALT_BUCKETS
     base = cur_drifted_df.filter(F.col("source").isNotNull()).select(
         F.col("source").alias("bin"),
         F.pmod(

@@ -78,6 +78,27 @@ def test_check_quality_report_shape(svc, current_df):
     assert rep["report_id"] in svc.list_reports()
 
 
+def test_check_quality_profiles_once(svc, current_df, monkeypatch):
+    """The outlier counts take their bounds from the profile check_quality
+    already collected: the percentile_approx profile runs once per call."""
+    from data_drift_monitoring_spark import service
+    from data_drift_monitoring_spark.operators import outliers, stats
+
+    calls = []
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return stats.column_profile(*args, **kwargs)
+
+    monkeypatch.setattr(service, "column_profile", counted)
+    monkeypatch.setattr(outliers, "column_profile", counted)
+    rep = svc.check_quality(current_df, persist=False)
+    assert len(calls) == 1
+    assert {d["column"] for d in rep["outliers"]["details"]} == {
+        "id", "age", "salary", "score"
+    }
+
+
 def test_baseline_comparison_via_service(svc, current_df):
     from data_drift_monitoring_spark.sources.ingest import dataset_metadata
 

@@ -75,3 +75,23 @@ def test_create_dataframe_only_inside_local_frame():
             v.visit(ast.parse(path.read_text(), str(path)))
             calls += [(path.relative_to(ROOT).as_posix(), fn) for fn in v.found]
     assert calls == [("data_drift_monitoring_spark/session.py", "local_frame")]
+
+
+def test_thresholds_are_module_constants():
+    """Thresholds live as module constants in ``config.py``: no engine or job
+    function takes a ``config`` or ``t`` parameter, and ``config.py``
+    defines no class to carry one."""
+    params = []
+    for top in ("data_drift_monitoring_spark", "jobs"):
+        for path in sorted((ROOT / top).rglob("*.py")):
+            for node in ast.walk(ast.parse(path.read_text(), str(path))):
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    a = node.args
+                    params += [
+                        (path.relative_to(ROOT).as_posix(), node.name, p.arg)
+                        for p in a.posonlyargs + a.args + a.kwonlyargs
+                        if p.arg in ("config", "t")
+                    ]
+    assert params == []
+    config = ast.parse((ROOT / "data_drift_monitoring_spark/config.py").read_text())
+    assert not any(isinstance(n, ast.ClassDef) for n in ast.walk(config))
