@@ -1,7 +1,8 @@
-"""Arrow-side tokenization mirror of the JVM expression convention.
+"""The one text-normalization convention, on the JVM and the Arrow side.
 
 The expression twins (and every DuckDB oracle) tokenize as
-``split(regexp_replace(lower([trim](text)), '\\s+', ' '), ' ')`` where
+``split(regexp_replace(lower([trim](text)), '\\s+', ' '), ' ')`` — the
+normalization written once as :func:`normalized_text` — where
 
 * ``trim()`` strips ONLY space characters (0x20), never tabs/newlines;
 * Java/RE2 ``\\s`` is the ASCII class ``[ \\t\\n\\x0b\\f\\r]`` — it does
@@ -19,9 +20,16 @@ ASCII class.
 from __future__ import annotations
 
 import pandas as pd
+from pyspark.sql import Column, functions as F
 
 # Java \s == RE2 \s == [ \t\n\x0b\f\r]; \x0b is vertical tab.
 _ASCII_WS = r"[ \t\n\x0b\f\r]+"
+
+
+def normalized_text(text: "Column | str", trim: bool = False) -> Column:
+    """JVM side of the convention; ``trim`` as in :func:`expr_words`."""
+    t = F.col(text) if isinstance(text, str) else text
+    return F.regexp_replace(F.lower(F.trim(t) if trim else t), r"\s+", " ")
 
 
 def expr_words(texts: "pd.Series", trim: bool = False) -> "pd.Series":

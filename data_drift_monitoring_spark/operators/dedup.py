@@ -38,7 +38,7 @@ from ..cache import (  # release_cached: re-exported for callers
     release_frame,
     track_cached,
 )
-from ._tokenize import expr_word_hashes_arrow
+from ._tokenize import expr_word_hashes_arrow, normalized_text
 from .similarity import vec_matrix
 
 # Mersenne prime 2^31-1: universal hashing a*x+b mod p. The 31-bit field
@@ -53,7 +53,7 @@ def content_digest(df: DataFrame, text_col: str = "text", normalized: bool = Tru
     whitespace, the usual exact-dedup canonicalization."""
     t = F.col(text_col)
     if normalized:
-        t = F.regexp_replace(F.lower(t), r"\s+", " ")
+        t = normalized_text(t)
     return df.withColumn("digest", F.md5(t))
 
 
@@ -102,7 +102,7 @@ def _with_shingles(
     re-evaluated PER WINDOW — O(words²) per doc, measured 8.8× slower at
     k=8 on a 50k-doc corpus. CollapseProject keeps the projection because
     the alias is non-cheap and referenced twice (size + slice)."""
-    words = F.split(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "), " ")
+    words = F.split(normalized_text(text_col), " ")
     n = F.greatest(F.size(F.col("_words")) - F.lit(k - 1), F.lit(1))
     sh = F.transform(
         F.sequence(F.lit(0), n - 1),
@@ -700,7 +700,7 @@ def simhash(df: DataFrame, text_col: str = "text", word_hash=None) -> DataFrame:
     (xxhash64 per word by default; pass ``word_hash`` e.g.
     ``portable_word_hash`` for a cross-engine-reproducible signature);
     only the bit-vote crosses to Arrow."""
-    words = F.split(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "), " ")
+    words = F.split(normalized_text(text_col), " ")
     wh = F.transform(words, word_hash or (lambda w: F.xxhash64(w)))
     return df.withColumn("simhash", _simhash64(wh))
 

@@ -3,9 +3,10 @@
 The mandated per-row check: token-array equality against a reference copy.
 The scale-safe shape is digest-first:
 
-1. JVM fast path — compare ``xxhash64(tokens)`` digests after the doc_id
-   join; equality of 64-bit digests is computed entirely in whole-stage
-   codegen, no Python touches the 10^12 rows.
+1. JVM fast path — ``digest_join`` compares ``xxhash64(tokens)`` digests
+   after the doc_id join; equality of 64-bit digests is computed entirely
+   in whole-stage codegen, no Python touches the 10^12 rows. The verdict,
+   ``token_equality_stats`` and the violation export all use this one join.
 2. Arrow slow path — only digest-MISMATCHED rows (tiny by construction) go
    through a vectorized pandas UDF that pinpoints the first differing
    element and the count of differing positions.
@@ -18,8 +19,10 @@ co-located zero-shuffle join — the API takes pre-partitioned inputs as-is.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 from pyspark.sql.functions import pandas_udf
+
+from .uniqueness import rollup_key_groups
 
 _DIFF_SCHEMA = T.StructType(
     [
@@ -122,32 +125,30 @@ def _one_digest_per_key(ref_digests: DataFrame, key: str) -> DataFrame:
     )
 
 
-def token_equality_stats_from_digests(
+def digest_join(
     cur_digests: DataFrame,
     ref_digests: DataFrame,
     key: str = "doc_id",
     partition_col: str = "part_id",
 ) -> DataFrame:
-    """``token_equality_stats`` over precomputed digest projections (cur:
-    (part_id, key, tok_digest); ref: (key, tok_digest)) — the single
-    unavoidable shuffle is the key equi-join of two narrow tables."""
+    """Current digests with a non-null key LEFT-joined to one reference
+    digest per key: (key, partition, ``_cd``, ``_rd``), ``_rd`` NULL when
+    the key is missing from the reference. Filtering on ``token_mismatch()``
+    rejects NULLs, so Catalyst turns that join back into an inner one."""
     c = cur_digests.select(
         partition_col, key, F.col("tok_digest").alias("_cd")
     ).filter(F.col(key).isNotNull())
     r = _one_digest_per_key(ref_digests, key)
-    j = c.join(r.hint("shuffle_hash"), on=key, how="left")
-    return j.groupBy(partition_col).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("_rd").isNull().cast("long")).alias("missing_in_ref"),
-        F.sum(
-            (F.col("_rd").isNotNull() & (F.col("_cd") != F.col("_rd"))).cast(
-                "long"
-            )
-        ).alias("token_mismatch"),
-        F.sum(
-            (F.col("_cd") == F.col("_rd")).cast("long")
-        ).alias("token_match"),
-    )
+    # digest equi-join needs no sort order: force shuffled-hash (the
+    # planner still picks SortMergeJoin here otherwise, paying two
+    # O(rows log rows) sorts)
+    return c.join(r.hint("shuffle_hash"), on=key, how="left")
+
+
+def token_mismatch() -> Column:
+    """A ``digest_join`` row whose key is in the reference with a different
+    token digest — one token-equality violation."""
+    return F.col("_rd").isNotNull() & (F.col("_cd") != F.col("_rd"))
 
 
 def uniqueness_and_token_equality(
@@ -157,47 +158,26 @@ def uniqueness_and_token_equality(
     partition_col: str = "part_id",
 ) -> DataFrame:
     """Both key-uniqueness AND per-row token equality from ONE ``key``-hash
-    shuffle: the left join's HashPartitioning(key) already satisfies the
-    clustering the (partition, key) aggregation needs, so Catalyst inserts
-    no second exchange for the current side — at 10^12 rows this halves the
-    row-volume shuffles of the verdict pipeline. Null keys are excluded
-    (they are a missing-value violation, not a duplicate group — see
-    ``uniqueness.duplicate_stats``).
+    shuffle: the ``digest_join``'s HashPartitioning(key) already satisfies
+    the clustering the (partition, key) aggregation needs, so Catalyst
+    inserts no second exchange for the current side — at 10^12 rows this
+    halves the row-volume shuffles of the verdict pipeline. Null keys are
+    excluded (they are a missing-value violation, not a duplicate group —
+    see ``uniqueness.duplicate_stats``).
 
     Output per partition: n_rows, duplicate_rows, duplicate_groups,
     duplicate_pct, unique_keys, token_mismatch, token_match, missing_in_ref.
     """
-    c = cur_digests.select(
-        partition_col, key, F.col("tok_digest").alias("_cd")
-    ).filter(F.col(key).isNotNull())
-    r = _one_digest_per_key(ref_digests, key)
-    # digest equi-join needs no sort order: force shuffled-hash (the
-    # planner still picks SortMergeJoin here otherwise, paying two
-    # O(rows log rows) sorts)
-    j = c.join(r.hint("shuffle_hash"), on=key, how="left")
+    j = digest_join(cur_digests, ref_digests, key, partition_col)
     per_key = j.groupBy(partition_col, key).agg(
         F.count(F.lit(1)).alias("_n"),
-        F.sum(
-            (F.col("_rd").isNotNull() & (F.col("_cd") != F.col("_rd"))).cast(
-                "long"
-            )
-        ).alias("_mm"),
+        F.sum(token_mismatch().cast("long")).alias("_mm"),
         F.sum(F.col("_rd").isNull().cast("long")).alias("_mi"),
         F.sum((F.col("_cd") == F.col("_rd")).cast("long")).alias("_ma"),
     )
-    return per_key.groupBy(partition_col).agg(
-        F.sum("_n").alias("n_rows"),
-        F.sum(F.when(F.col("_n") > 1, F.col("_n")).otherwise(0)).alias(
-            "duplicate_rows"
-        ),
-        F.sum((F.col("_n") > 1).cast("long")).alias("duplicate_groups"),
-        F.round(
-            F.sum(F.when(F.col("_n") > 1, F.col("_n")).otherwise(0))
-            / F.sum("_n")
-            * 100,
-            2,
-        ).alias("duplicate_pct"),
-        F.count(F.lit(1)).alias("unique_keys"),
+    return rollup_key_groups(
+        per_key,
+        partition_col,
         F.sum("_mm").alias("token_mismatch"),
         F.sum("_ma").alias("token_match"),
         F.sum("_mi").alias("missing_in_ref"),
@@ -212,10 +192,13 @@ def token_equality_stats(
     partition_col: str = "part_id",
 ) -> DataFrame:
     """Per-partition counts: matched / mismatched / missing-in-reference —
-    digest comparison only (pure JVM)."""
-    return token_equality_stats_from_digests(
+    digest comparison only (pure JVM); the token-equality columns of
+    ``uniqueness_and_token_equality`` over both tables' digests."""
+    return uniqueness_and_token_equality(
         cur.select(partition_col, key, F.xxhash64(tokens_col).alias("tok_digest")),
         token_digests(ref, key, tokens_col),
         key,
         partition_col,
+    ).select(
+        partition_col, "n_rows", "missing_in_ref", "token_mismatch", "token_match"
     )

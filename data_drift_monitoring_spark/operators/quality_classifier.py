@@ -37,6 +37,7 @@ from dataclasses import dataclass, field
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from ._tokenize import normalized_text
 from .text_analysis import STOPWORDS_EN, _ASCII_PUNCT
 
 FEATURES = ("log_chars", "chars_per_word", "stopword_frac", "punct_ratio")
@@ -51,7 +52,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     of the q_quality_scores oracle."""
     t = F.col(text_col)
     stop_pat = "(?<= )(" + "|".join(STOPWORDS_EN) + ")(?= )"
-    norm = F.regexp_replace(F.lower(F.trim(t)), r"\s+", " ")
+    norm = normalized_text(t, trim=True)
     staged = (
         df.withColumn("__qc_chars", F.length(t))
         .withColumn("__qc_norm", norm)

@@ -38,7 +38,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ._tokenize import expr_word_hashes
+from ._tokenize import expr_word_hashes, normalized_text
 
 # Thresholds from Gopher §A1.1 (dup-line/word fractions) adapted to the
 # word-level signals computed here.
@@ -202,11 +202,7 @@ def with_repetition_signals(
             )
             .drop("__r_c")
         )
-    norm = F.regexp_replace(
-        F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))),
-        r"\s+",
-        " ",
-    )
+    norm = normalized_text(F.coalesce(F.col(text_col), F.lit("")), trim=True)
     staged = df.withColumn("__r_words", F.split(norm, " "))
     nw = F.size("__r_words")
     n2 = F.greatest(nw - 1, F.lit(0))

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ._tokenize import normalized_text
+
 # per-language marker lexicons (high-frequency function words) for the
 # stopword-hit heuristic; single lowercase tokens only. This dict is the
 # single source of truth: the gate oracle SQL is generated from it
@@ -36,9 +38,7 @@ _ASCII_PUNCT = "!\"#$%&'()*+,-./:;<=>?@[\\]^_`{|}~"
 
 
 def _words(text_col: str):
-    return F.split(
-        F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " "
-    )
+    return F.split(normalized_text(text_col, trim=True), " ")
 
 
 # BPE-ish lexer: runs of ASCII word chars OR single non-word non-space
@@ -115,7 +115,7 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     #    — the dominant cost: regex-deleting ~100% of the corpus to
     #    length a rebuilt string was 76.9 s by itself.
     stop_pat = "(?<= )(" + "|".join(STOPWORDS_EN) + ")(?= )"
-    norm = F.regexp_replace(F.lower(F.trim(t)), r"\s+", " ")
+    norm = normalized_text(t, trim=True)
     staged = (
         df.withColumn("__q_norm", norm)
         .withColumn("__q_chars", F.length(t))
@@ -219,10 +219,7 @@ def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     norm = F.col("__fp_norm")
     tail_pos = F.greatest(F.length(norm) - F.lit(63), F.lit(1))
     return (
-        df.withColumn(
-            "__fp_norm",
-            F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "),
-        )
+        df.withColumn("__fp_norm", normalized_text(text_col))
         .withColumn("fingerprint", F.md5(norm))
         .withColumn(
             "rough_key",

@@ -7,15 +7,15 @@ Reference semantics (``backend/app/core/quality/duplicates.py``):
 - key-column variant (:125-144), sample groups capped 5x3 (:92-123).
 
 Spark shape: ``groupBy(keys).count()`` — one shuffle on the key hash; the
-partial aggregate collapses most of the volume map-side. At 10^12 rows the
-fast path is the ``approx_count_distinct`` sketch already computed in
-``sequence_stats``; the exact paths here are run when the sketch signals
-(n_rows - approx_distinct) above tolerance, pruning to suspect partitions.
+partial aggregate collapses most of the volume map-side, and
+``rollup_key_groups`` sums the group sizes per partition (also under the
+shared-shuffle ``invariants.uniqueness_and_token_equality``). The counts
+are exact; ``sequence_stats``' ``approx_count_distinct`` is only reported.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..config import SAMPLE_DUP_GROUPS, SAMPLE_ROWS_PER_GROUP
 
@@ -44,7 +44,15 @@ def duplicate_stats(
     grouped = df.groupBy(partition_col, *keys).agg(
         F.count(F.lit(1)).alias("_n")
     )
-    return grouped.groupBy(partition_col).agg(
+    return rollup_key_groups(grouped, partition_col)
+
+
+def rollup_key_groups(
+    per_key: DataFrame, partition_col: str, *extra: Column
+) -> DataFrame:
+    """Per-partition totals of per-(partition, key) group sizes ``_n`` —
+    the ``duplicate_stats`` columns, then the ``extra`` aggregates."""
+    return per_key.groupBy(partition_col).agg(
         F.sum("_n").alias("n_rows"),
         F.sum(F.when(F.col("_n") > 1, F.col("_n")).otherwise(0)).alias(
             "duplicate_rows"
@@ -57,14 +65,11 @@ def duplicate_stats(
             2,
         ).alias("duplicate_pct"),
         F.count(F.lit(1)).alias("unique_keys"),
+        *extra,
     )
 
 
-def duplicate_violations(
-    df: DataFrame,
-    keys: list[str],
-    partition_col: str = "part_id",
-) -> DataFrame:
+def duplicate_violations(df: DataFrame, keys: list[str]) -> DataFrame:
     """Violation rows: every row belonging to a duplicated key group, tagged
     with its group size and occurrence rank. The rank uses an explicit
     deterministic order (the reference's ``keep='first'`` at
@@ -82,11 +87,7 @@ def duplicate_violations(
     )
 
 
-def sample_duplicate_groups(
-    df: DataFrame,
-    keys: list[str],
-    partition_col: str = "part_id",
-) -> DataFrame:
+def sample_duplicate_groups(df: DataFrame, keys: list[str]) -> DataFrame:
     """Reference's capped duplicate samples (duplicates.py:92-123: ≤5 groups,
     ≤3 rows each) as a single aggregation — no driver iteration.
     """

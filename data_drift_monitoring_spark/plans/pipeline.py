@@ -52,11 +52,12 @@ from ..functions.verdicts import grade, psi_classification
 from ..operators.drift import collect_ref_hist, drift_from_histograms
 from ..operators.histogram import categorical_counts, value_histogram
 from ..operators.invariants import (
-    _one_digest_per_key,
-    token_digests,
+    digest_join,
+    token_mismatch,
     uniqueness_and_token_equality,
 )
-from ..operators.stats import sequence_stats_prepared
+from ..operators.referential import referential_violations
+from ..operators.stats import prepare_sequences, sequence_stats_prepared
 from ..operators.uniqueness import duplicate_stats, duplicate_violations
 from ..schema import SEQUENCES_SCHEMA, validate_schema
 from ..session import local_frame
@@ -73,23 +74,6 @@ class RunResult:
     verdicts: DataFrame
     score: DataFrame
     pruned_partitions: list[int] = field(default_factory=list)
-
-
-def prepare_sequences(df: DataFrame) -> DataFrame:
-    """ONE heavy scan of the sequence table → a narrow per-row projection
-    (doc_id, n_tok, source, tok_len, tok_digest): the token arrays — the
-    bulk of the bytes at 10^12 scale — are read exactly once; every check
-    downstream (stats, uniqueness, referential, histograms, token-equality
-    join) works off this ~40-byte/row projection. Persisted MEMORY_AND_DISK
-    by ``build_verdicts`` so the multiple groupBy shuffles don't re-scan."""
-    return df.select(
-        "part_id",
-        "doc_id",
-        "n_tok",
-        "source",
-        F.size("tokens").alias("tok_len"),  # NULL iff tokens is NULL
-        F.xxhash64("tokens").alias("tok_digest"),
-    )
 
 
 # the per-part aggregate row build_verdicts emits verdicts from; a NULL
@@ -237,7 +221,6 @@ def build_verdicts(
     df: DataFrame,
     ref_stats: DataFrame | None = None,
     allowed_sources: DataFrame | None = None,
-    ref_sequences: DataFrame | None = None,
     ref_digests: DataFrame | None = None,
 ) -> DataFrame:
     """Assemble all per-partition verdict rows (no writes).
@@ -251,9 +234,8 @@ def build_verdicts(
     ``local_frame`` (Arrow, a local scan), so the verdicts, the score and
     every action on them run without a Python worker.
 
-    ``ref_digests`` (doc_id, tok_digest) is the preferred reference-side
-    artifact for the per-row token-equality invariant; ``ref_sequences``
-    (full arrays) is accepted and digested on the fly.
+    ``ref_digests`` (doc_id, tok_digest; ``reference.load_ref_digests``)
+    turns on the per-row token-equality invariant.
 
     The projection stays cached (tracked on the returned DataFrame) so a
     violation export over the same input reuses it; pass the result to
@@ -273,8 +255,6 @@ def build_verdicts(
 
     # 3 + 6. uniqueness on doc_id — and, when reference digests exist, the
     #    per-row token-equality invariant from the SAME doc_id shuffle
-    if ref_digests is None and ref_sequences is not None:
-        ref_digests = token_digests(ref_sequences)
     if ref_digests is not None:
         dup = uniqueness_and_token_equality(prepared, ref_digests).select(
             "part_id", "duplicate_rows", "duplicate_pct",
@@ -435,16 +415,9 @@ def build_violations(
         )
 
     if allowed_sources is not None and (src := scope("referential")) is not None:
-        bad = src.join(
-            F.broadcast(
-                allowed_sources.select("source").distinct()
-            ),
-            on="source",
-            how="left_anti",
-        )
         pieces.append(
             rows(
-                bad,
+                referential_violations(src, allowed_sources, "source"),
                 "referential",
                 F.concat(F.lit("unknown source="), F.coalesce(
                     F.col("source"), F.lit("NULL"))),
@@ -452,13 +425,8 @@ def build_violations(
         )
 
     if ref_digests is not None and (src := scope("token_equality")) is not None:
-        # one reference digest per doc_id, as in the verdict's join
-        r = _one_digest_per_key(ref_digests, "doc_id")
-        mism = (
-            src.filter(F.col("doc_id").isNotNull())
-            .join(r.hint("shuffle_hash"), on="doc_id", how="inner")
-            .filter(F.col("tok_digest") != F.col("_rd"))
-        )
+        # the verdict's own join, filtered to its mismatch predicate
+        mism = digest_join(src, ref_digests).filter(token_mismatch())
         pieces.append(
             rows(mism, "token_equality", F.lit("token digest mismatch"))
         )
@@ -564,7 +532,6 @@ def run_checks(
     run_id: str = "run_0",
     ref_stats: DataFrame | None = None,
     allowed_sources: DataFrame | None = None,
-    ref_sequences: DataFrame | None = None,
     ref_digests: DataFrame | None = None,
     snapshot_id: str | None = None,
     min_rows: int | None = None,
@@ -602,9 +569,7 @@ def run_checks(
             spark, io, run_id, todo, "started", snapshot_id, now=now
         )
 
-    built = build_verdicts(
-        df, ref_stats, allowed_sources, ref_sequences, ref_digests=ref_digests
-    )
+    built = build_verdicts(df, ref_stats, allowed_sources, ref_digests)
     verdicts = built.withColumn("run_id", F.lit(run_id))
     score = score_partitions(built).withColumn("run_id", F.lit(run_id))
     if io is None:
@@ -615,8 +580,6 @@ def run_checks(
 
     io.append(verdicts, RESULTS_TABLE)
     io.append(score, RESULTS_TABLE + "_score")
-    if ref_digests is None and ref_sequences is not None:
-        ref_digests = token_digests(ref_sequences)
     io.append(
         build_violations(
             df, allowed_sources, ref_digests, failed=failed_checks(built)

@@ -37,8 +37,9 @@ def init_reference(
     now=None,
 ) -> str:
     """Compute and persist the reference snapshot; returns its snapshot id.
-    ``persist_sequences`` also versions the raw reference table (needed by
-    the per-row token-equality invariant)."""
+    ``persist_sequences`` also versions the raw reference table (the
+    element-level diff of ``invariants.token_equality_violations`` reads
+    it; the verdicts need only the digests)."""
     stats = build_ref_stats(ref_df)
     snap_id = io.write(stats, REF_STATS_TABLE, now=now)
     from ..operators.invariants import token_digests

@@ -13,10 +13,12 @@ Cluster usage::
         [--report /path/report.json] [--master ...]
 
 Stage order (each optional, each one corpus scan, none shuffles the
-corpus): repetition keep-filter → PII redaction (text column replaced
-in place; original preserved as <text>_raw) → URL blocklist → mixture
+corpus): repetition keep-filter → URL blocklist → PII redaction (text
+column replaced in place; original preserved as <text>_raw) → mixture
 rebalance (the only stage with an aggregate: one |strata|-row count).
-Emits a JSON line with per-stage row counts."""
+The blocklist reads the raw text (redaction turns an IPv4 host into
+``[IPV4]``), as ``streaming.curate`` does. Emits a JSON line with
+per-stage row counts."""
 
 from __future__ import annotations
 
@@ -83,17 +85,17 @@ def main(argv: list[str] | None = None) -> int:
         df = flagged.filter(F.col("repetition_keep")).select(df.columns)
         stages["after_repetition"] = df.count()
 
+    if args.blocklist:
+        bl = [d.strip() for d in args.blocklist.split(",") if d.strip()]
+        df = filter_blocklisted(df, bl, tc)
+        stages["after_blocklist"] = df.count()
+
     if not args.no_pii:
         df = (
             redact_pii(df, tc, out_col="__redacted")
             .withColumnRenamed(tc, f"{tc}_raw")
             .withColumnRenamed("__redacted", tc)
         )
-
-    if args.blocklist:
-        bl = [d.strip() for d in args.blocklist.split(",") if d.strip()]
-        df = filter_blocklisted(df, bl, tc)
-        stages["after_blocklist"] = df.count()
 
     if args.mixture:
         df = rebalance_to_mixture(

@@ -63,9 +63,9 @@ def main() -> None:
         uniqueness_and_token_equality,
     )
     from data_drift_monitoring_spark.operators.stats import (
+        prepare_sequences,
         sequence_stats_prepared,
     )
-    from data_drift_monitoring_spark.plans.pipeline import prepare_sequences
     from data_drift_monitoring_spark.plans.reference import build_ref_stats
     from data_drift_monitoring_spark.session import get_spark
 

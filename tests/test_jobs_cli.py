@@ -4,12 +4,9 @@ detect_drift and remediate, the reference's promised route CLIs."""
 from __future__ import annotations
 
 import json
-import sys
 
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 
 @pytest.fixture()
@@ -166,6 +163,8 @@ def test_filter_corpus_cli(spark, tmp_path, capsys):
         (2, "email me at x@y.io for info and details thanks", "a"),
         (3, "link https://blocked.example/x plus other words", "b"),
         (4, "another clean diverse document for the corpus", "b"),
+        # an IPv4-literal host: PII redaction would rewrite it to [IPV4]
+        (5, "see http://10.0.0.1/page for the quarterly numbers", "b"),
     ]
     src = str(tmp_path / "corpus")
     spark.createDataFrame(
@@ -176,7 +175,7 @@ def test_filter_corpus_cli(spark, tmp_path, capsys):
         [
             "--input", src,
             "--output", out,
-            "--blocklist", "blocked.example",
+            "--blocklist", "blocked.example,10.0.0.1",
         ]
     )
     assert rc == 0
@@ -185,12 +184,13 @@ def test_filter_corpus_cli(spark, tmp_path, capsys):
     ids = {r.doc_id for r in kept.collect()}
     assert 1 not in ids  # repetition filter
     assert 3 not in ids  # blocklist
+    assert 5 not in ids  # blocklist, checked before redaction
     assert {0, 2, 4} <= ids
     # PII redacted in place, original preserved
     t2 = kept.filter("doc_id = 2").collect()[0]
     assert "[EMAIL]" in t2["text"]
     assert "x@y.io" in t2["text_raw"]
-    assert report["rows"]["input"] == 5
+    assert report["rows"]["input"] == 6
     assert report["rows"]["output"] == len(ids)
 
 

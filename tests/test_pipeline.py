@@ -9,8 +9,8 @@ from pyspark.sql import functions as F
 from data_drift_monitoring_spark.plans.pipeline import RESULTS_TABLE, run_checks
 from data_drift_monitoring_spark.plans.reference import (
     init_reference,
+    load_ref_digests,
     load_ref_stats,
-    load_ref_sequences,
 )
 from data_drift_monitoring_spark.schema import SEQUENCES_SCHEMA, validate_schema
 from data_drift_monitoring_spark.sources.tables import ParquetTableIO
@@ -77,7 +77,7 @@ def test_token_equality_in_pipeline(spark, warehouse, ref_corrupted_df, allowed_
     io, snap = warehouse
     res = run_checks(
         spark, ref_corrupted_df, io, "run_corrupt",
-        load_ref_stats(io), allowed_sources_df, load_ref_sequences(io),
+        load_ref_stats(io), allowed_sources_df, load_ref_digests(io),
         snapshot_id=snap,
     )
     te = {

@@ -21,6 +21,7 @@ from data_drift_monitoring_spark.operators.histogram import (
 )
 from data_drift_monitoring_spark.operators.invariants import token_digests
 from data_drift_monitoring_spark.plans.pipeline import (
+    VIOLATION_CHECKS,
     VIOLATIONS_TABLE,
     build_verdicts,
     build_violations,
@@ -47,16 +48,25 @@ def test_run_checks_exports_the_full_violation_set(
     df = request.getfixturevalue(table)
     ref_stats, rd = refs
     io = ParquetTableIO(spark, str(tmp_path))
-    run_checks(
+    res = run_checks(
         spark, df, io, "v", ref_stats, allowed_sources_df,
         ref_digests=rd, min_rows=1,
     )
     exported = io.read_appended(VIOLATIONS_TABLE).filter(F.col("run_id") == "v")
-    full = build_violations(df, allowed_sources_df, rd)
+    full = build_violations(df, allowed_sources_df, rd).select(COLS).collect()
     got = Counter(tuple(r) for r in exported.select(COLS).collect())
-    want = Counter(tuple(r) for r in full.select(COLS).collect())
+    want = Counter(tuple(r) for r in full)
     assert got == want
     assert got  # every table here has some violation
+
+    # the invariant the failed-only export rests on: per part, each
+    # family's violation row count equals its verdict value
+    # (missing_values: the doc_id and tokens verdicts together)
+    values = Counter()
+    for r in res.verdicts.filter(F.col("check").isin(*VIOLATION_CHECKS)).collect():
+        if (r["check"], r["column"]) != ("missing_values", "source"):
+            values[(r["part_id"], r["check"])] += int(r["value"])
+    assert Counter((r["part_id"], r["check"]) for r in full) == +values
 
 
 def test_every_family_fails_on_the_edge_fixture(edge_df, refs, allowed_sources_df):
