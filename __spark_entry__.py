@@ -40,6 +40,7 @@ from data_drift_monitoring_spark.operators.referential import (
     referential_stats,
     referential_violations,
 )
+from data_drift_monitoring_spark.session import local_frame
 
 # documents.source values src0..src9 are "allowed"; src10+ violate
 ALLOWED_DOC_SOURCES = [f"src{i}" for i in range(10)]
@@ -47,6 +48,12 @@ ALLOWED_DOC_SOURCES = [f"src{i}" for i in range(10)]
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _source_dim(spark: SparkSession, sources: list[str]) -> DataFrame:
+    """A ``source string`` dimension as a local scan: no action on it starts
+    a Python worker."""
+    return local_frame(spark, [(s,) for s in sources], "source string")
 
 
 def _sequences_view(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -91,9 +98,8 @@ def entry(spark: SparkSession) -> DataFrame:
     seq = _sequences_view(spark, sf_dir)
     from data_drift_monitoring_spark.plans.pipeline import build_verdicts
 
-    dim = spark.createDataFrame(
-        [(s,) for s in ALLOWED_DOC_SOURCES + [f"src{i}" for i in range(10, 20)]],
-        "source string",
+    dim = _source_dim(
+        spark, ALLOWED_DOC_SOURCES + [f"src{i}" for i in range(10, 20)]
     )
     return build_verdicts(seq, ref_stats=None, allowed_sources=dim)
 
@@ -274,7 +280,7 @@ def q_referential_ok(spark, sf_dir):
 
 def q_referential_violations(spark, sf_dir):
     d = _read(spark, sf_dir, "documents")
-    dim = spark.createDataFrame([(s,) for s in ALLOWED_DOC_SOURCES], "source string")
+    dim = _source_dim(spark, ALLOWED_DOC_SOURCES)
     v = referential_violations(d, dim, "source")
     return (
         v.groupBy("source")
@@ -1489,9 +1495,7 @@ def q_report_json(spark, sf_dir):
     )
 
     seq = _sequences_view(spark, sf_dir)
-    dim = spark.createDataFrame(
-        [(f"src{i}",) for i in range(20)], "source string"
-    )
+    dim = _source_dim(spark, [f"src{i}" for i in range(20)])
     v = build_verdicts(seq, ref_stats=None, allowed_sources=dim)
     j = report_json(v, "gate_run")
     schema = (
@@ -1546,9 +1550,7 @@ def q_remediation(spark, sf_dir):
     )
     from data_drift_monitoring_spark.plans.pipeline import build_verdicts
 
-    dim = spark.createDataFrame(
-        [(s,) for s in ALLOWED_DOC_SOURCES], "source string"
-    )
+    dim = _source_dim(spark, ALLOWED_DOC_SOURCES)
     v = build_verdicts(
         _corrupted_view(spark, sf_dir), ref_stats=None, allowed_sources=dim
     )
@@ -1580,12 +1582,8 @@ def q_score_trends(spark, sf_dir):
     )
     from data_drift_monitoring_spark.plans.trends import trend_over_runs
 
-    dim20 = spark.createDataFrame(
-        [(f"src{i}",) for i in range(20)], "source string"
-    )
-    dim10 = spark.createDataFrame(
-        [(s,) for s in ALLOWED_DOC_SOURCES], "source string"
-    )
+    dim20 = _source_dim(spark, [f"src{i}" for i in range(20)])
+    dim10 = _source_dim(spark, ALLOWED_DOC_SOURCES)
     sa = score_partitions(
         build_verdicts(_sequences_view(spark, sf_dir), allowed_sources=dim20)
     ).select("part_id", F.lit(1).alias("run_seq"), "overall_score")
@@ -1671,9 +1669,7 @@ def q_seq_pipeline_verdicts(spark, sf_dir):
     seq = _sequences_view(spark, sf_dir)
     from data_drift_monitoring_spark.plans.pipeline import build_verdicts
 
-    dim = spark.createDataFrame(
-        [(f"src{i}",) for i in range(20)], "source string"
-    )
+    dim = _source_dim(spark, [f"src{i}" for i in range(20)])
     v = build_verdicts(seq, ref_stats=None, allowed_sources=dim)
     return v.orderBy("part_id", "check", "column")
 
@@ -1690,9 +1686,7 @@ def q_verdict_rollup(spark, sf_dir):
     )
 
     seq = _sequences_view(spark, sf_dir)
-    dim = spark.createDataFrame(
-        [(f"src{i}",) for i in range(20)], "source string"
-    )
+    dim = _source_dim(spark, [f"src{i}" for i in range(20)])
     v = build_verdicts(seq, ref_stats=None, allowed_sources=dim)
     return verdict_rollup(v).orderBy("part_id", "check")
 
@@ -1838,12 +1832,8 @@ def q_check_history(spark, sf_dir):
 
     shutil.rmtree(_HISTORY_WAREHOUSE, ignore_errors=True)
     io = ParquetTableIO(spark, _HISTORY_WAREHOUSE)
-    dim20 = spark.createDataFrame(
-        [(f"src{i}",) for i in range(20)], "source string"
-    )
-    dim10 = spark.createDataFrame(
-        [(s,) for s in ALLOWED_DOC_SOURCES], "source string"
-    )
+    dim20 = _source_dim(spark, [f"src{i}" for i in range(20)])
+    dim10 = _source_dim(spark, ALLOWED_DOC_SOURCES)
     run_checks(
         spark,
         _sequences_view(spark, sf_dir),

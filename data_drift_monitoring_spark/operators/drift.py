@@ -129,11 +129,11 @@ _KERNEL_SCHEMA = (
 )
 
 
-def collect_ref_hist(ref_hist: DataFrame) -> dict[str, dict]:
-    """A (col, bin, cnt) histogram — the reference, or any side without
-    partitions — as col → bin → cnt."""
+def hist_map(rows) -> dict[str, dict]:
+    """Collected (col, bin, cnt) histogram rows — the reference, or any side
+    without partitions — as col → bin → cnt."""
     ref_map: dict[str, dict] = {}
-    for row in ref_hist.select("col", "bin", "cnt").collect():
+    for row in rows:
         bins = ref_map.setdefault(row["col"], {})
         bins[row["bin"]] = bins.get(row["bin"], 0) + row["cnt"]
     return ref_map
@@ -183,9 +183,8 @@ def drift_stats_broadcast(
     rows = cur_hist.select(*keys, "col", "bin", "cnt").collect()
     if not partition_col:
         rows = [(None, *r) for r in rows]
-    stats = drift_from_histograms(
-        rows, collect_ref_hist(ref_hist), set(numeric_cols), DRIFT_BINS
-    )
+    ref_map = hist_map(ref_hist.select("col", "bin", "cnt").collect())
+    stats = drift_from_histograms(rows, ref_map, set(numeric_cols), DRIFT_BINS)
     psi = F.col("psi")
     out = (
         local_frame(cur_hist.sparkSession, stats, _KERNEL_SCHEMA)
@@ -262,7 +261,7 @@ def token_drift(
     """
     name = f"{tokens_col}_unigram"
     cur_map, ref_map = (
-        collect_ref_hist(token_unigram_histogram(df, tokens_col)).get(name, {})
+        hist_map(token_unigram_histogram(df, tokens_col).collect()).get(name, {})
         for df in (cur, ref)
     )
     rows = []

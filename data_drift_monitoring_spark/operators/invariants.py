@@ -61,38 +61,40 @@ def _array_diff(cur: pd.Series, ref: pd.Series) -> pd.DataFrame:
     )
 
 
-def token_equality_violations(
-    cur: DataFrame,
-    ref: DataFrame,
-    key: str = "doc_id",
-    tokens_col: str = "tokens",
-    partition_col: str = "part_id",
-) -> DataFrame:
+def token_equality_violations(cur: DataFrame, ref: DataFrame) -> DataFrame:
     """Rows whose token array differs from the reference copy with the same
-    key. Returns (part_id, doc_id, first_diff_idx, n_diff, len_cur, len_ref,
-    check). Digest pre-filter keeps the pandas UDF off the hot path."""
+    doc_id. Returns (part_id, doc_id, first_diff_idx, n_diff, len_cur,
+    len_ref, check). Digest pre-filter keeps the pandas UDF off the hot
+    path."""
     c = cur.select(
-        partition_col,
-        key,
-        F.col(tokens_col).alias("_cur_tokens"),
-        F.xxhash64(tokens_col).alias("_cur_digest"),
-    ).filter(F.col(key).isNotNull())
-    r = ref.select(
-        key,
-        F.col(tokens_col).alias("_ref_tokens"),
-        F.xxhash64(tokens_col).alias("_ref_digest"),
-    ).filter(F.col(key).isNotNull())
+        "part_id",
+        "doc_id",
+        F.col("tokens").alias("_cur_tokens"),
+        F.xxhash64("tokens").alias("_cur_digest"),
+    ).filter(F.col("doc_id").isNotNull())
+    # one reference row per doc_id, by ``_one_digest_per_key``'s min-digest
+    # rule: a duplicated doc_id must not fan out the violation rows
+    ref_row = F.struct(
+        F.xxhash64("tokens").alias("_ref_digest"),
+        F.col("tokens").alias("_ref_tokens"),
+    )
+    r = (
+        ref.filter(F.col("doc_id").isNotNull())
+        .groupBy("doc_id")
+        .agg(F.min(ref_row).alias("_r"))
+        .select("doc_id", "_r.*")
+    )
 
     mismatched = (
-        c.join(r, on=key, how="inner")
+        c.join(r, on="doc_id", how="inner")
         .filter(F.col("_cur_digest") != F.col("_ref_digest"))
     )
     diff = mismatched.withColumn(
         "_d", _array_diff(F.col("_cur_tokens"), F.col("_ref_tokens"))
     )
     return diff.select(
-        partition_col,
-        key,
+        "part_id",
+        "doc_id",
         F.col("_d.first_diff_idx").alias("first_diff_idx"),
         F.col("_d.n_diff").alias("n_diff"),
         F.col("_d.len_cur").alias("len_cur"),

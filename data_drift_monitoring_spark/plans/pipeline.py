@@ -5,13 +5,13 @@ Distributed equivalent of ``POST /check_quality``
 score sequentially over one in-memory DataFrame. Here (SURVEY.md §3.2):
 
     scan (partition-pruned by the resume manifest) → persisted projection
-    → ONE wide groupBy(part_id) agg (stats + length-consistency + sketches)
-    → uniqueness agg on doc_id (key-hash shuffle), sharing its shuffle with
-      the optional per-row token-equality join vs the reference digests
-    → per-partition histograms (n_tok values, source categories)
-    → the per-part aggregates (O(parts × bins) rows) collected: referential
-      counts and drift (numpy kernel) vs the reference histograms computed
-      on the driver
+    → ONE collect of every per-part aggregate (``part_aggregates``, a
+      tagged union): the wide groupBy(part_id) stats agg, the uniqueness
+      agg on doc_id sharing its key-hash shuffle with the optional per-row
+      token-equality join vs the reference digests, the per-partition
+      histograms, and the reference histograms and allowed sources; its
+      keys are the parts to validate
+    → referential counts and drift (numpy kernel) on the driver
     → verdict rows from ONE projection (severity when-chains) over a small
       per-part DataFrame + quality score; that frame is built on the driver
       through Arrow (``session.local_frame``), so it plans as a local scan
@@ -30,9 +30,10 @@ document is derivable with ``F.to_json(F.struct(...))`` (report_json).
 
 from __future__ import annotations
 
+from collections import defaultdict
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
-from functools import reduce
+from functools import cache, reduce
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
@@ -49,7 +50,7 @@ from ..config import (
 from ..functions import verdicts as V
 from ..functions.scoring import overall_score
 from ..functions.verdicts import grade, psi_classification
-from ..operators.drift import collect_ref_hist, drift_from_histograms
+from ..operators.drift import drift_from_histograms, hist_map
 from ..operators.histogram import categorical_counts, value_histogram
 from ..operators.invariants import (
     digest_join,
@@ -102,6 +103,7 @@ def _check(check: str, column, value, pct, severity, recommendation, passed):
     )
 
 
+@cache  # built once: it reads no input, and a build is ~0.3 s of py4j calls
 def _verdict_structs() -> Column:
     """Every verdict of one wide per-part row, as an array of ``_check``
     structs in check order; checks with no row for the part are dropped."""
@@ -217,58 +219,37 @@ def _verdict_structs() -> Column:
     return F.filter(every, lambda s: s.isNotNull())
 
 
-def build_verdicts(
-    df: DataFrame,
+def part_aggregates(
+    prepared: DataFrame,
     ref_stats: DataFrame | None = None,
     allowed_sources: DataFrame | None = None,
     ref_digests: DataFrame | None = None,
 ) -> DataFrame:
-    """Assemble all per-partition verdict rows (no writes).
-
-    Eager: every check reduces to a per-part aggregate of O(parts × bins)
-    rows, never O(rows) (``n_tok`` bins are bounded). The aggregates are
-    collected from the persisted ``prepare_sequences`` projection, drift
-    (numpy kernel) and referential counts are computed on the driver, and
-    the verdict rows come from ONE projection over a small per-part
-    DataFrame — no union of per-check plans. That frame is built with
-    ``local_frame`` (Arrow, a local scan), so the verdicts, the score and
-    every action on them run without a Python worker.
-
-    ``ref_digests`` (doc_id, tok_digest; ``reference.load_ref_digests``)
-    turns on the per-row token-equality invariant.
-
-    The projection stays cached (tracked on the returned DataFrame) so a
-    violation export over the same input reuses it; pass the result to
-    ``release_cached`` when done."""
-    prepared = prepare_sequences(df).persist(StorageLevel.MEMORY_AND_DISK)
-
+    """Every per-part aggregate over the ``prepare_sequences`` projection,
+    and the small side inputs, as ONE plan of O(parts × bins) rows: a union
+    of the check operators, each row tagged (``_agg``) with the struct
+    column that holds it. ``ref_digests`` (``reference.load_ref_digests``)
+    turns on the per-row token-equality invariant."""
     # 1-2. missing values + length consistency; one row per part
-    wide = {
-        r["part_id"]: {**r.asDict(), "drift": []}
-        for r in sequence_stats_prepared(prepared)
-        .select(
+    pieces = {
+        "stats": sequence_stats_prepared(prepared).select(
             "part_id", "n_rows", "null_doc_id", "null_tokens", "null_source",
             "len_mismatch",
         )
-        .collect()
     }
-
     # 3 + 6. uniqueness on doc_id — and, when reference digests exist, the
     #    per-row token-equality invariant from the SAME doc_id shuffle
     if ref_digests is not None:
-        dup = uniqueness_and_token_equality(prepared, ref_digests).select(
+        pieces["dup"] = uniqueness_and_token_equality(prepared, ref_digests).select(
             "part_id", "duplicate_rows", "duplicate_pct",
             F.col("n_rows").alias("te_rows"), "token_mismatch",
         )
     else:
-        dup = duplicate_stats(
+        pieces["dup"] = duplicate_stats(
             prepared.select("part_id", "doc_id"),
             keys=["doc_id"],
             ignore_null_keys=True,
         ).select("part_id", "duplicate_rows", "duplicate_pct")
-    for r in dup.collect():
-        wide[r["part_id"]].update(r.asDict())
-
     # per-partition source counts (salted two-level agg), shared by the
     # referential check and the drift comparison, plus the n_tok per-value
     # histogram when drift runs
@@ -276,13 +257,45 @@ def build_verdicts(
         hist = categorical_counts(prepared, "source")
         if ref_stats is not None:
             hist = value_histogram(prepared, "n_tok").unionByName(hist)
-        hist_rows = hist.select("part_id", "col", "bin", "cnt").collect()
+        pieces["hist"] = hist.select("part_id", "col", "bin", "cnt")
+    if allowed_sources is not None:
+        pieces["allowed"] = allowed_sources.select("source")
+    if ref_stats is not None:
+        pieces["ref"] = ref_stats.select("col", "bin", "cnt")
+    return reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [
+            p.select(F.lit(tag).alias("_agg"), F.struct(*p.columns).alias(tag))
+            for tag, p in pieces.items()
+        ],
+    )
+
+
+def aggregate_parts(
+    df: DataFrame,
+    ref_stats: DataFrame | None = None,
+    allowed_sources: DataFrame | None = None,
+    ref_digests: DataFrame | None = None,
+) -> tuple[DataFrame, dict]:
+    """Step 1 of ``build_verdicts``: collect ``part_aggregates`` over the
+    persisted projection once; referential counts and drift (numpy kernel)
+    follow on the driver. Returns the projection and ``wide``: part_id →
+    its ``_WIDE_SCHEMA`` row, one key per part of ``df``."""
+    prepared = prepare_sequences(df).persist(StorageLevel.MEMORY_AND_DISK)
+    aggs = part_aggregates(prepared, ref_stats, allowed_sources, ref_digests)
+    rows: dict[str, list] = defaultdict(list)
+    for r in aggs.collect():
+        rows[r["_agg"]].append(r[r["_agg"]])
+    wide = {r["part_id"]: {**r.asDict(), "drift": []} for r in rows["stats"]}
+    for r in rows["dup"]:
+        wide[r["part_id"]].update(r.asDict())
+    hist_rows = [tuple(r) for r in rows["hist"]]
 
     # 4. referential: source ∈ allowed dimension (J3). The dimension is tiny
     #    by definition, so it is an isin over the histogram bins; violations
     #    = n_rows - matched, so NULL sources count as violations.
     if allowed_sources is not None:
-        allowed = {r["source"] for r in allowed_sources.select("source").collect()}
+        allowed = {r["source"] for r in rows["allowed"]}
         matched = dict.fromkeys(wide, 0)
         for p, col, b, cnt in hist_rows:
             if col == "source" and b in allowed:
@@ -293,14 +306,20 @@ def build_verdicts(
     # 5. drift vs reference snapshot (PSI/KS/JS/chi² from histograms)
     if ref_stats is not None:
         for s in drift_from_histograms(
-            hist_rows, collect_ref_hist(ref_stats), {"n_tok"}, DRIFT_BINS
+            hist_rows, hist_map(rows["ref"]), {"n_tok"}, DRIFT_BINS
         ):
             wide[s["part_id"]]["drift"].append(s)
+    return prepared, wide
 
+
+def verdict_frame(prepared: DataFrame, wide: dict) -> DataFrame:
+    """Step 2 of ``build_verdicts``: the verdict rows from ONE projection
+    (severity when-chains) over ``wide`` as a ``local_frame`` (Arrow, a
+    local scan), so no action on the verdicts starts a Python worker."""
     # one partition: the rows are few, and every later action on the
     # verdicts (score, writes) then runs one task, not one per core
     per_part = local_frame(
-        df.sparkSession,
+        prepared.sparkSession,
         wide.values(),
         _WIDE_SCHEMA.format(prepared.schema["part_id"].dataType.simpleString()),
     ).coalesce(1)
@@ -308,25 +327,41 @@ def build_verdicts(
     return track_cached(out, prepared)
 
 
-# check families with row-level violations: per part, each family's
-# violation row count equals its verdict value (missing_values: the doc_id
-# and tokens verdicts together), so a family with value 0 exports no rows
-VIOLATION_CHECKS = (
-    "missing_values", "length_consistency", "uniqueness", "referential",
-    "token_equality",
-)
+def build_verdicts(
+    df: DataFrame,
+    ref_stats: DataFrame | None = None,
+    allowed_sources: DataFrame | None = None,
+    ref_digests: DataFrame | None = None,
+) -> DataFrame:
+    """All per-partition verdict rows (no writes): one aggregate collect
+    (``aggregate_parts``), then one local-frame projection. The projection
+    stays cached for a violation export over the same input; pass the
+    result to ``release_cached`` when done."""
+    return verdict_frame(
+        *aggregate_parts(df, ref_stats, allowed_sources, ref_digests)
+    )
 
 
-def failed_checks(verdicts: DataFrame) -> set[tuple]:
-    """(part_id, check) pairs of the violation families with a nonzero
-    verdict value — the ``failed`` argument of ``build_violations``."""
+# check families with row-level violations → the ``wide`` columns whose sum
+# is, per part, the family's violation row count (missing_values: NULL
+# doc_ids and NULL tokens; a NULL source has no violation row)
+VIOLATION_CHECKS = {
+    "missing_values": ("null_doc_id", "null_tokens"),
+    "length_consistency": ("len_mismatch",),
+    "uniqueness": ("duplicate_rows",),
+    "referential": ("ref_violations",),
+    "token_equality": ("token_mismatch",),
+}
+
+
+def failed_checks(wide: dict) -> set[tuple]:
+    """(part_id, check) pairs whose family count in ``wide`` is nonzero —
+    ``build_violations``' ``failed``; a count whose pct rounds to 0 counts."""
     return {
-        (r["part_id"], r["check"])
-        for r in verdicts.filter(
-            (F.col("value") > 0) & F.col("check").isin(*VIOLATION_CHECKS)
-        )
-        .select("part_id", "check")
-        .collect()
+        (p, check)
+        for p, w in wide.items()
+        for check, cols in VIOLATION_CHECKS.items()
+        if any(w.get(c) for c in cols)
     }
 
 
@@ -441,16 +476,9 @@ def score_partitions(verdicts: DataFrame) -> DataFrame:
     generalized: dataset → partition). Components: missing = worst null pct,
     duplicate = doc_id dup pct, outlier(slot) = contract-violation pct
     (length mismatches + referential + token mismatches)."""
-    p = verdicts.groupBy("part_id").pivot(
-        "check",
-        [
-            "missing_values",
-            "uniqueness",
-            "referential",
-            "length_consistency",
-            "token_equality",
-        ],
-    ).agg(F.max("pct"))
+    p = verdicts.groupBy("part_id").pivot("check", list(VIOLATION_CHECKS)).agg(
+        F.max("pct")
+    )
     z = F.lit(0.0)
     missing = F.coalesce(F.col("missing_values"), z)
     dup = F.coalesce(F.col("uniqueness"), z)
@@ -545,31 +573,33 @@ def run_checks(
     if not sv.is_valid:
         raise ValueError(f"schema validation failed: {sv.errors}")
     floor = MIN_ROWS if min_rows is None else min_rows
-    n = df.limit(floor).count()
+    started = (now or datetime.now(timezone.utc)).isoformat()
+    todo, pruned = (df, []) if io is None else M.prune_completed(df, io, run_id)
+    # the gate counts the whole input, not the parts left to validate; when
+    # the parts left clear the floor alone, one take answers both questions
+    left = len(todo.select("part_id").take(max(floor, 1)))
+    n = len(df.select("part_id").take(floor)) if pruned and left < floor else left
     if n < floor:
         raise ValueError(
             f"dataset has {n} rows; minimum is {floor} "
             "(reference MIN_ROWS gate, config/settings.py:58)"
         )
+    if io is not None and not left:  # fully resumed: nothing to recompute
+        verdicts, score = (
+            io.read_appended(t).filter(F.col("run_id") == run_id)
+            for t in (RESULTS_TABLE, RESULTS_TABLE + "_score")
+        )
+        return RunResult(run_id, verdicts, score, pruned)
 
-    pruned: list[int] = []
-    started = (now or datetime.now(timezone.utc)).isoformat()
+    prepared, wide = aggregate_parts(todo, ref_stats, allowed_sources, ref_digests)
     if io is not None:
-        df, pruned = M.prune_completed(df, io, run_id)
-        todo = [r["part_id"] for r in df.select("part_id").distinct().collect()]
-        if not todo:  # fully resumed: nothing to recompute
-            verdicts = io.read_appended(RESULTS_TABLE).filter(
-                F.col("run_id") == run_id
-            )
-            score = io.read_appended(RESULTS_TABLE + "_score").filter(
-                F.col("run_id") == run_id
-            )
-            return RunResult(run_id, verdicts, score, pruned)
+        # the todo parts are the parts the aggregates saw
         M.record_partitions(
-            spark, io, run_id, todo, "started", snapshot_id, now=now
+            spark, io, run_id, sorted(wide), "started", snapshot_id,
+            started_at=started, now=now,
         )
 
-    built = build_verdicts(df, ref_stats, allowed_sources, ref_digests)
+    built = verdict_frame(prepared, wide)
     verdicts = built.withColumn("run_id", F.lit(run_id))
     score = score_partitions(built).withColumn("run_id", F.lit(run_id))
     if io is None:
@@ -582,7 +612,7 @@ def run_checks(
     io.append(score, RESULTS_TABLE + "_score")
     io.append(
         build_violations(
-            df, allowed_sources, ref_digests, failed=failed_checks(built)
+            todo, allowed_sources, ref_digests, failed=failed_checks(wide)
         ).withColumn("run_id", F.lit(run_id)),
         VIOLATIONS_TABLE,
     )

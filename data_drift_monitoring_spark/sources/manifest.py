@@ -30,24 +30,20 @@ def completed_partitions(
     io: ParquetTableIO, run_id: str
 ) -> list[int]:
     """Partition ids already finished for this run (driver-side — the
-    manifest has one row per partition, thousands at most)."""
+    manifest has one row per partition, thousands at most: no shuffle)."""
     if not io.exists(MANIFEST_TABLE):
         return []
     m = io.read_appended(MANIFEST_TABLE)
     rows = (
         m.filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
         .select("part_id")
-        .distinct()
         .collect()
     )
-    return sorted(r["part_id"] for r in rows)
+    return sorted({r["part_id"] for r in rows})
 
 
 def prune_completed(
-    df: DataFrame,
-    io: ParquetTableIO,
-    run_id: str,
-    partition_col: str = "part_id",
+    df: DataFrame, io: ParquetTableIO, run_id: str
 ) -> tuple[DataFrame, list[int]]:
     """Filter out already-done partitions. The predicate is on the partition
     column, so with a partitioned layout Catalyst prunes whole files/
@@ -55,7 +51,7 @@ def prune_completed(
     done = completed_partitions(io, run_id)
     if not done:
         return df, []
-    return df.filter(~F.col(partition_col).isin(done)), done
+    return df.filter(~F.col("part_id").isin(done)), done
 
 
 def record_partitions(

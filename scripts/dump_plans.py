@@ -51,23 +51,11 @@ def main() -> None:
 
     from data_drift_monitoring_spark.config import ALLOWED_SOURCES
     from data_drift_monitoring_spark.generator import generate_sequences
-    from data_drift_monitoring_spark.operators.drift import (
-        drift_stats_broadcast,
-    )
-    from data_drift_monitoring_spark.operators.histogram import (
-        categorical_counts,
-        value_histogram,
-    )
-    from data_drift_monitoring_spark.operators.invariants import (
-        token_digests,
-        uniqueness_and_token_equality,
-    )
-    from data_drift_monitoring_spark.operators.stats import (
-        prepare_sequences,
-        sequence_stats_prepared,
-    )
+    from data_drift_monitoring_spark.operators.invariants import token_digests
+    from data_drift_monitoring_spark.operators.stats import prepare_sequences
+    from data_drift_monitoring_spark.plans.pipeline import part_aggregates
     from data_drift_monitoring_spark.plans.reference import build_ref_stats
-    from data_drift_monitoring_spark.session import get_spark
+    from data_drift_monitoring_spark.session import get_spark, local_frame
 
     spark = get_spark(master="local[4]", shuffle_partitions=16)
     d = sys.argv[1] if len(sys.argv) > 1 else "/tmp/_plans_fixture"
@@ -78,16 +66,11 @@ def main() -> None:
         )
     ref = spark.read.parquet(d + "/ref")
     cur = spark.read.parquet(d + "/cur")
-    dim = spark.createDataFrame(
-        [(s,) for s in ALLOWED_SOURCES], "source string"
-    )
+    dim = local_frame(spark, [(s,) for s in ALLOWED_SOURCES], "source string")
     p = prepare_sequences(cur).persist(StorageLevel.MEMORY_AND_DISK)
     p.count()
     rs = build_ref_stats(ref)
     rd = token_digests(ref)
-    hist = value_histogram(p, "n_tok").unionByName(
-        categorical_counts(p, "source")
-    )
 
     sections = [
         (
@@ -97,30 +80,19 @@ def main() -> None:
             prepare_sequences(cur),
         ),
         (
-            "sequence_stats over the cached projection",
-            "All per-partition statistics in one two-phase HashAggregate; "
-            "scan side reads the InMemoryRelation, not parquet.",
-            sequence_stats_prepared(p),
-        ),
-        (
-            "uniqueness + token equality — shared doc_id shuffle",
-            "ShuffledHashJoin (BuildRight on 12-byte/row digests, no "
-            "sorts); join output partitioning satisfies the (part_id, "
-            "doc_id) aggregation → no second row-volume exchange.",
-            uniqueness_and_token_equality(p, rd),
-        ),
-        (
-            "drift — histograms collected, numpy kernel on the driver",
-            "The histogram aggregation below shuffles O(partitions × bins) "
-            "rows and is the only distributed drift work; "
-            "drift_stats_broadcast collects it with the reference "
-            "histograms and computes all statistics and p-values in numpy "
-            "on the driver, so its own plan is a local scan of those "
-            "driver-side rows (LocalTableScan; no FlatMapGroupsInPandas/"
-            "ArrowEvalPython):\n\n```\n"
-            + fmt(drift_stats_broadcast(hist, rs, numeric_cols={"n_tok"}))
-            + "```",
-            hist,
+            "build_verdicts — one aggregate collect",
+            "Every per-part aggregate in one plan (part_aggregates): a "
+            "union of tagged branches, collected once. The stats branch is "
+            "one two-phase HashAggregate over the InMemoryRelation, not "
+            "parquet; the doc_id branch is a ShuffledHashJoin (BuildRight "
+            "on 12-byte/row digests, no sorts) whose output partitioning "
+            "satisfies the (part_id, doc_id) aggregation, so no second "
+            "row-volume exchange; the histogram branches shuffle only "
+            "O(partitions × bins) rows; the reference histograms and the "
+            "allowed sources are plain scans. Drift (numpy kernel) and the "
+            "referential counts run on the driver over the collected rows, "
+            "and the verdict frame is a LocalTableScan.",
+            part_aggregates(p, rs, dim, rd),
         ),
         (
             "referential — broadcast anti-join (standalone operator)",

@@ -3,6 +3,7 @@ tables (FIXTURES.md) in a session-scoped tmp dir."""
 
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 
@@ -31,6 +32,29 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(action)`` runs ``action()`` under a fresh job group and
+    returns the sorted ids of the Spark jobs it launched (AQE's stage jobs
+    inherit the group from the calling thread)."""
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def count(action) -> list[int]:
+        group = f"count_jobs-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(prop, None)
+        # job events reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
 
 
 @pytest.fixture(scope="session")

@@ -68,3 +68,26 @@ def test_ref_duplicates_do_not_inflate_current_counts(spark, ref_df):
             "token_mismatch", "token_match", "missing_in_ref",
         ):
             assert c[col] == d[col], (p, col)
+
+
+def test_ref_duplicates_do_not_fan_out_violation_rows(spark):
+    """A doc_id held twice in the reference yields one violation row, as in
+    ``token_equality_stats``, which keeps one reference digest per key."""
+    from data_drift_monitoring_spark.schema import SEQUENCES_SCHEMA
+
+    def table(rows):
+        return spark.createDataFrame(
+            [(d, t, len(t), "web", 0) for d, t in rows], SEQUENCES_SCHEMA
+        )
+
+    cur = table([("a", [1, 2, 3]), ("b", [4, 5]), ("c", [7, 8])])
+    ref = table([
+        ("a", [1, 2, 3]),
+        ("b", [4, 6]), ("b", [4, 6]),  # one mismatched doc, duplicated
+        ("c", [7, 8]), ("c", [7, 9]),  # two copies, one of them equal
+    ])
+    v = token_equality_violations(cur, ref).collect()
+    stats = token_equality_stats(cur, ref).collect()
+    assert len(v) == sum(r["token_mismatch"] for r in stats)
+    assert "b" in {r["doc_id"] for r in v}
+    assert [r["doc_id"] for r in v].count("b") == 1

@@ -6,7 +6,12 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from data_drift_monitoring_spark.plans.pipeline import RESULTS_TABLE, run_checks
+from data_drift_monitoring_spark.config import MIN_ROWS
+from data_drift_monitoring_spark.plans.pipeline import (
+    RESULTS_TABLE,
+    VIOLATIONS_TABLE,
+    run_checks,
+)
 from data_drift_monitoring_spark.plans.reference import (
     init_reference,
     load_ref_digests,
@@ -97,6 +102,112 @@ def test_min_rows_gate(spark, data_dir):
     # an explicit 0 turns the gate off; it is not the default floor of 10
     res = run_checks(spark, df, min_rows=0)
     assert res.verdicts.count() > 0
+
+
+def test_min_rows_gate_counts_the_whole_input(spark, ref_df, tmp_path):
+    """The gate counts the input, not the parts left to validate: a resume
+    whose one remaining part holds fewer than MIN_ROWS rows still runs."""
+    big = ref_df.filter("part_id = 0").limit(2 * MIN_ROWS)
+    small = ref_df.filter("part_id = 1").limit(MIN_ROWS - 1)
+    df = big.unionByName(small)
+    io = ParquetTableIO(spark, str(tmp_path))
+    M.record_partitions(spark, io, "gate", [0], "done")
+    res = run_checks(spark, df, io, "gate")
+    assert res.pruned_partitions == [0]
+    assert {r["part_id"] for r in res.verdicts.collect()} == {1}
+    assert M.completed_partitions(io, "gate") == [0, 1]
+    # an input below the floor still raises; min_rows=0 turns the gate off
+    with pytest.raises(ValueError, match=f"minimum is {MIN_ROWS}"):
+        run_checks(spark, small, io, "gate_small")
+    assert run_checks(spark, small, min_rows=0).verdicts.count() > 0
+
+
+def _done_but(spark, io, run_id, snap, todo=5):
+    """Mark every fixture part but ``todo`` done for ``run_id``."""
+    done = [p for p in range(8) if p != todo]
+    M.record_partitions(spark, io, run_id, done, "done", snap)
+    return done
+
+
+def test_one_part_resume_manifest_rows(
+    spark, warehouse, ref_corrupted_df, allowed_sources_df
+):
+    """A one-part resume appends one ``started`` and one ``done`` row for
+    its part, with the same started_at; a fully-resumed re-invocation
+    appends no manifest rows and no results."""
+    io, snap = warehouse
+    run = "run_manifest_rows"
+    done = _done_but(spark, io, run, snap)
+
+    def rows(table):
+        return io.read_appended(table).filter(F.col("run_id") == run).collect()
+
+    def invoke():
+        return run_checks(
+            spark, ref_corrupted_df, io, run, load_ref_stats(io),
+            allowed_sources_df, load_ref_digests(io), snapshot_id=snap,
+        )
+
+    res = invoke()
+    assert res.pruned_partitions == done
+    manifest = rows(M.MANIFEST_TABLE)
+    assert len(manifest) == len(done) + 2
+    new = sorted(
+        (r for r in manifest if r["part_id"] == 5), key=lambda r: r["status"]
+    )
+    assert [r["status"] for r in new] == ["done", "started"]
+    finished, started = new
+    assert finished["started_at"] == started["started_at"]
+    assert started["finished_at"] is None and started["stats_digest"] is None
+    assert finished["finished_at"] is not None and finished["stats_digest"]
+    assert all(r["snapshot_id"] == snap for r in new)
+
+    tables = (RESULTS_TABLE, RESULTS_TABLE + "_score", VIOLATIONS_TABLE)
+    written = {t: len(rows(t)) for t in tables}
+    assert written[RESULTS_TABLE] > 0 and written[VIOLATIONS_TABLE] > 0
+    again = invoke()
+    assert again.pruned_partitions == list(range(8))
+    assert len(rows(M.MANIFEST_TABLE)) == len(manifest)
+    assert {t: len(rows(t)) for t in tables} == written
+    assert again.verdicts.count() == written[RESULTS_TABLE]
+
+
+def test_one_part_resume_job_budget(
+    spark, warehouse, ref_corrupted_df, allowed_sources_df, count_jobs
+):
+    """One one-part resume pass with every check on launches at most 23
+    Spark jobs: one ``take`` over the parts left is both the gate and the
+    todo probe, the manifest read has no shuffle, and every per-part
+    aggregate comes from one collect that also names the todo parts and
+    the failed checks."""
+    io, snap = warehouse
+    run = "run_job_budget"
+    _done_but(spark, io, run, snap)
+    ref_stats, rd = load_ref_stats(io), load_ref_digests(io)
+    store = spark.sparkContext._jsc.sc().statusStore()
+
+    def job_ids():
+        it = store.jobsList(None).iterator()
+        ids = set()
+        while it.hasNext():
+            ids.add(it.next().jobId())
+        return ids
+
+    def invoke():
+        run_checks(
+            spark, ref_corrupted_df, io, run, ref_stats, allowed_sources_df,
+            rd, snapshot_id=snap,
+        )
+
+    before = job_ids()
+    jobs = count_jobs(invoke)
+    # the job-group count agrees with the status store's job list
+    assert jobs == sorted(job_ids() - before)
+    assert M.completed_partitions(io, run) == list(range(8))
+    assert len(jobs) <= 23
+    # a fully-resumed re-invocation learns that no part is left before it
+    # plans any aggregate: at most the 8 jobs it took before the one collect
+    assert len(count_jobs(invoke)) <= 8
 
 
 def test_schema_gate(spark):

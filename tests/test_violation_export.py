@@ -23,6 +23,7 @@ from data_drift_monitoring_spark.operators.invariants import token_digests
 from data_drift_monitoring_spark.plans.pipeline import (
     VIOLATION_CHECKS,
     VIOLATIONS_TABLE,
+    aggregate_parts,
     build_verdicts,
     build_violations,
     failed_checks,
@@ -71,8 +72,10 @@ def test_run_checks_exports_the_full_violation_set(
 
 def test_every_family_fails_on_the_edge_fixture(edge_df, refs, allowed_sources_df):
     ref_stats, rd = refs
-    v = build_verdicts(edge_df, ref_stats, allowed_sources_df, ref_digests=rd)
-    failed = failed_checks(v)
+    prepared, wide = aggregate_parts(
+        edge_df, ref_stats, allowed_sources_df, ref_digests=rd
+    )
+    failed = failed_checks(wide)
     assert {c for p, c in failed if p == 0} == {
         "missing_values", "length_consistency", "uniqueness", "referential",
         "token_equality",
@@ -83,23 +86,27 @@ def test_every_family_fails_on_the_edge_fixture(edge_df, refs, allowed_sources_d
     only = build_violations(edge_df, allowed_sources_df, rd, failed=failed)
     uniq = only.filter(F.col("check") == "uniqueness").collect()
     assert {r["part_id"] for r in uniq} == {0}
-    release_cached(v)
+    prepared.unpersist()
 
 
-def test_failed_checks_keys_on_value_not_passed(spark):
+def test_failed_checks_keys_on_value_not_passed():
     """A nonzero count whose pct rounds to 0 still passes its verdict, yet
-    has violation rows; drift verdicts have none."""
-    v = spark.createDataFrame(
-        [
-            (0, "missing_values", "doc_id", 1.0, 0.0, True),
-            (0, "uniqueness", "doc_id", 0.0, 0.0, True),
-            (1, "token_equality", "tokens", 3.0, 0.3, False),
-            (1, "drift_psi", "n_tok", 0.4, None, False),
-        ],
-        "part_id int, check string, column string, value double, "
-        "pct double, passed boolean",
-    )
-    assert failed_checks(v) == {(0, "missing_values"), (1, "token_equality")}
+    has violation rows; drift verdicts and NULL sources have none, and a
+    check with no aggregate for the part (NULL) has none either."""
+    psi = {"col": "n_tok", "psi": 0.4, "ks_stat": 0.5, "ks_pvalue": 0.0}
+    wide = {
+        0: {  # 1 NULL doc_id in 10^6 rows: pct rounds to 0.0
+            "n_rows": 1_000_000, "null_doc_id": 1, "null_tokens": 0,
+            "null_source": 0, "len_mismatch": 0, "duplicate_rows": 0,
+            "ref_violations": 0, "token_mismatch": None, "drift": [],
+        },
+        1: {
+            "n_rows": 1000, "null_doc_id": 0, "null_tokens": 0,
+            "null_source": 4, "len_mismatch": 0, "duplicate_rows": None,
+            "ref_violations": 0, "token_mismatch": 3, "drift": [psi],
+        },
+    }
+    assert failed_checks(wide) == {(0, "missing_values"), (1, "token_equality")}
 
 
 def test_no_failed_checks_exports_nothing(cur_clean_df, allowed_sources_df):
