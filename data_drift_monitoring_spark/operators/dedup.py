@@ -47,22 +47,19 @@ from .similarity import vec_matrix
 _MERSENNE = (1 << 31) - 1
 
 
-def content_digest(df: DataFrame, text_col: str = "text", normalized: bool = True) -> DataFrame:
+def content_digest(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Stable content digest column ``digest`` (md5 — also available in
-    every SQL oracle engine). Normalization: lowercase + collapsed
+    every SQL oracle engine) of the normalized text: lowercase + collapsed
     whitespace, the usual exact-dedup canonicalization."""
-    t = F.col(text_col)
-    if normalized:
-        t = normalized_text(t)
-    return df.withColumn("digest", F.md5(t))
+    return df.withColumn("digest", F.md5(normalized_text(F.col(text_col))))
 
 
 def exact_duplicates(
-    df: DataFrame, key_col: str, text_col: str = "text", normalized: bool = True
+    df: DataFrame, key_col: str, text_col: str = "text"
 ) -> DataFrame:
     """Exact-content duplicate groups: (digest, group_size, doc_ids).
     Returns only groups with >1 member, doc_ids sorted for determinism."""
-    d = content_digest(df, text_col, normalized)
+    d = content_digest(df, text_col)
     return (
         d.groupBy("digest")
         .agg(
@@ -74,11 +71,11 @@ def exact_duplicates(
 
 
 def dedup_exact_content(
-    df: DataFrame, key_col: str, text_col: str = "text", normalized: bool = True
+    df: DataFrame, key_col: str, text_col: str = "text"
 ) -> DataFrame:
     """Keep one representative per content digest (lowest key — explicit
     deterministic order, cf. uniqueness.dedup_exact)."""
-    d = content_digest(df, text_col, normalized)
+    d = content_digest(df, text_col)
     w = Window.partitionBy("digest").orderBy(F.col(key_col).asc())
     return (
         d.withColumn("_rn", F.row_number().over(w))

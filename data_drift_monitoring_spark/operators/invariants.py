@@ -1,15 +1,12 @@
 """Per-row invariants over token arrays (BASELINE.json input_hint).
 
 The mandated per-row check: token-array equality against a reference copy.
-The scale-safe shape is digest-first:
-
-1. JVM fast path — ``digest_join`` compares ``xxhash64(tokens)`` digests
-   after the doc_id join; equality of 64-bit digests is computed entirely
-   in whole-stage codegen, no Python touches the 10^12 rows. The verdict,
-   ``token_equality_stats`` and the violation export all use this one join.
-2. Arrow slow path — only digest-MISMATCHED rows (tiny by construction) go
-   through a vectorized pandas UDF that pinpoints the first differing
-   element and the count of differing positions.
+It is digest-only: ``digest_join`` compares ``xxhash64(tokens)`` digests
+after the doc_id join, so equality of 64-bit digests is computed entirely
+in whole-stage codegen and no Python touches the 10^12 rows. The reference
+side is the persisted ``token_digests`` artifact (~12 bytes/row), never the
+raw arrays. The verdict, ``token_equality_stats`` and the violation export
+(``pipeline.build_violations``) all use this one join.
 
 At cluster scale the doc_id equi-join is the one unavoidable shuffle; with
 both tables bucketed by doc_id (Iceberg bucket transform) it becomes a
@@ -18,88 +15,9 @@ co-located zero-shuffle join — the API takes pre-partitioned inputs as-is.
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F, types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql import Column, DataFrame, functions as F
 
 from .uniqueness import rollup_key_groups
-
-_DIFF_SCHEMA = T.StructType(
-    [
-        T.StructField("first_diff_idx", T.IntegerType()),
-        T.StructField("n_diff", T.IntegerType()),
-        T.StructField("len_cur", T.IntegerType()),
-        T.StructField("len_ref", T.IntegerType()),
-    ]
-)
-
-
-@pandas_udf(_DIFF_SCHEMA)
-def _array_diff(cur: pd.Series, ref: pd.Series) -> pd.DataFrame:
-    """Arrow-vectorized elementwise diff of two int-array columns."""
-    import numpy as np
-
-    first, ndiff, lc, lr = [], [], [], []
-    for a, b in zip(cur, ref):
-        a = np.asarray(a if a is not None else [], dtype=np.int64)
-        b = np.asarray(b if b is not None else [], dtype=np.int64)
-        n = min(len(a), len(b))
-        neq = np.nonzero(a[:n] != b[:n])[0]
-        if len(a) != len(b):
-            fd = int(neq[0]) if len(neq) else n
-            nd = int(len(neq)) + abs(len(a) - len(b))
-        elif len(neq):
-            fd, nd = int(neq[0]), int(len(neq))
-        else:
-            fd, nd = -1, 0
-        first.append(fd)
-        ndiff.append(nd)
-        lc.append(len(a))
-        lr.append(len(b))
-    return pd.DataFrame(
-        {"first_diff_idx": first, "n_diff": ndiff, "len_cur": lc, "len_ref": lr}
-    )
-
-
-def token_equality_violations(cur: DataFrame, ref: DataFrame) -> DataFrame:
-    """Rows whose token array differs from the reference copy with the same
-    doc_id. Returns (part_id, doc_id, first_diff_idx, n_diff, len_cur,
-    len_ref, check). Digest pre-filter keeps the pandas UDF off the hot
-    path."""
-    c = cur.select(
-        "part_id",
-        "doc_id",
-        F.col("tokens").alias("_cur_tokens"),
-        F.xxhash64("tokens").alias("_cur_digest"),
-    ).filter(F.col("doc_id").isNotNull())
-    # one reference row per doc_id, by ``_one_digest_per_key``'s min-digest
-    # rule: a duplicated doc_id must not fan out the violation rows
-    ref_row = F.struct(
-        F.xxhash64("tokens").alias("_ref_digest"),
-        F.col("tokens").alias("_ref_tokens"),
-    )
-    r = (
-        ref.filter(F.col("doc_id").isNotNull())
-        .groupBy("doc_id")
-        .agg(F.min(ref_row).alias("_r"))
-        .select("doc_id", "_r.*")
-    )
-
-    mismatched = (
-        c.join(r, on="doc_id", how="inner")
-        .filter(F.col("_cur_digest") != F.col("_ref_digest"))
-    )
-    diff = mismatched.withColumn(
-        "_d", _array_diff(F.col("_cur_tokens"), F.col("_ref_tokens"))
-    )
-    return diff.select(
-        "part_id",
-        "doc_id",
-        F.col("_d.first_diff_idx").alias("first_diff_idx"),
-        F.col("_d.n_diff").alias("n_diff"),
-        F.col("_d.len_cur").alias("len_cur"),
-        F.col("_d.len_ref").alias("len_ref"),
-    ).withColumn("check", F.lit("token_equality"))
 
 
 def token_digests(

@@ -22,11 +22,11 @@ the ``tokens:array<int>`` column of the sequence table:
 
 Scale design (10^12 sequences):
 
-  * gram extraction is narrow (no shuffle) and Arrow-vectorized by
-    default: one ``mapInPandas`` pass emits the flat occurrence frame
-    ``(gram: 8 bytes, doc_id, pos)`` straight from numpy (4x the
-    interpreted ``transform``/``slice`` expression twin, which is kept
-    as ``use_arrow=False``); token payloads never leave the scan;
+  * gram extraction is narrow (no shuffle) and Arrow-vectorized:
+    one ``mapInPandas`` pass emits the flat occurrence frame
+    ``(gram: 8 bytes, doc_id, pos)`` straight from numpy (4x an
+    interpreted ``transform``/``slice`` expression); token payloads
+    never leave the scan;
   * the duplicate census is one count-only ``groupBy(gram)`` — fully
     hash-aggregable, map-side partial combine, 16-byte exchange rows;
   * ``count >= 2`` grams join back to the occurrence stream on the
@@ -52,10 +52,11 @@ are tabular: backend/app/services/quality_check.py:25-191); this module
 is a training-pipeline extension over the graft's token payload, next
 to ``contamination.py`` (train/eval grams) and ``packing.py``.
 
-``portable=True`` swaps xxhash64 for the md5-hex gram key that DuckDB
-reproduces bit-exactly (same construction as
+``portable=True`` swaps the Arrow combiner for an md5-hex gram
+expression that DuckDB reproduces bit-exactly (same construction as
 ``dedup.portable_word_hash``) so the driver oracle can recompute the
-whole operator in SQL.
+whole operator in SQL. The two gram keys differ; the dedup output does
+not.
 """
 
 from __future__ import annotations
@@ -65,24 +66,23 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def _gram_expr(tokens: F.Column, k: int, portable: bool) -> F.Column:
-    """Array of per-position gram keys for one document (empty if
-    n_tok < k). O(n_tok * k) inside one codegen'd projection."""
+def _gram_expr(tokens: F.Column, k: int) -> F.Column:
+    """Array of per-position md5-hex gram keys for one document (empty
+    if n_tok < k) — the portable gram path. O(n_tok * k) inside one
+    codegen'd projection."""
     n = F.size(tokens)
     starts = F.sequence(F.lit(0), n - k)  # 0-based start positions
-    if portable:
-        gram = lambda i: F.md5(  # noqa: E731
+    grams = F.transform(
+        starts,
+        lambda i: F.md5(
             F.array_join(
                 F.transform(F.slice(tokens, i + 1, k), lambda t: t.cast("string")),
                 ",",
             )
-        )
-    else:
-        gram = lambda i: F.xxhash64(F.slice(tokens, i + 1, k))  # noqa: E731
-    # sequence(0, n-k) DESCENDS when n < k (negative stop) — guard to empty
-    return F.when(n >= k, F.transform(starts, gram)).otherwise(
-        F.array().cast("array<string>" if portable else "array<bigint>")
+        ),
     )
+    # sequence(0, n-k) DESCENDS when n < k (negative stop) — guard to empty
+    return F.when(n >= k, grams).otherwise(F.array().cast("array<string>"))
 
 
 def _splitmix64(x: "np.ndarray") -> "np.ndarray":
@@ -99,9 +99,9 @@ def _occ_arrow(df: DataFrame, k: int, tokens_col: str, id_col: str) -> DataFrame
     """Arrow gram path: one mapInPandas pass emits the flat occurrence
     frame (id, pos, gram) straight from numpy — no per-element
     interpreted lambda, no JVM explode. Measured 33 s -> 8 s (4x) for
-    33.6M grams at 16 cores vs the expression path (whose transform/
-    slice lambdas are interpreted per element — the same trap the
-    contamination gram path hit). Gram = XOR_j mix[j]*splitmix64(tok_j):
+    33.6M grams at 16 cores vs an xxhash64 expression gram path (whose
+    transform/slice lambdas are interpreted per element — the same trap
+    the contamination gram path hit). Gram = XOR_j mix[j]*splitmix64(tok_j):
     position-mixed 64-bit combiner over scrambled ids, collision odds
     ~n^2/2^64."""
     id_dt = df.schema[id_col].dataType.simpleString()
@@ -153,22 +153,16 @@ def ngram_occurrences(
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
     portable: bool = False,
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """One row per k-gram occurrence: (id_col, pos, gram). Narrow —
-    no shuffle; rows are (key, int, 8-byte hash). Default hash is the
-    vectorized Arrow combiner (``use_arrow=None`` -> True unless
-    ``portable``); ``use_arrow=False`` keeps the pure-expression
-    xxhash64 twin (same dedup semantics, different hash values)."""
-    if use_arrow is None:
-        use_arrow = not portable
-    if use_arrow and portable:
-        raise ValueError("portable grams are expression-only (md5)")
-    if use_arrow:
+    no shuffle; rows are (key, int, gram key). The gram key is the
+    vectorized Arrow combiner's 8-byte hash, or with ``portable`` the
+    md5-hex expression the SQL oracle reproduces."""
+    if not portable:
         return _occ_arrow(df, k, tokens_col, id_col)
     return df.select(
         F.col(id_col),
-        F.posexplode(_gram_expr(F.col(tokens_col), k, portable)).alias("pos", "gram"),
+        F.posexplode(_gram_expr(F.col(tokens_col), k)).alias("pos", "gram"),
     )
 
 
@@ -178,14 +172,13 @@ def duplicated_span_occurrences(
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
     portable: bool = False,
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """Every occurrence of a gram seen >= 2 times corpus-wide, flagged
     canonical (global min (id, pos) — the one occurrence kept) or not.
 
     Columns: id_col, pos, gram, gram_count, is_canonical.
     """
-    occ = ngram_occurrences(df, k, tokens_col, id_col, portable, use_arrow)
+    occ = ngram_occurrences(df, k, tokens_col, id_col, portable)
     # Census carries ONLY (gram, count) — count is hash-aggregable, so the
     # big exchange is a HashAggregate of 16-byte rows with no sort. The
     # earlier min(struct(id, pos)) canonical forced a SortAggregate over
@@ -259,7 +252,6 @@ def span_dedup_stats(
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
     portable: bool = False,
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """Per-document duplication accounting (all-integer, oracle-friendly):
 
@@ -269,7 +261,7 @@ def span_dedup_stats(
     set without shipping the arrays).
     """
     removed = duplicated_span_occurrences(
-        df, k, tokens_col, id_col, portable, use_arrow
+        df, k, tokens_col, id_col, portable
     ).filter(~F.col("is_canonical"))
     return _doc_stats(
         _with_coverage(df, removed, k, id_col), tokens_col, id_col
@@ -282,14 +274,13 @@ def remove_duplicate_spans(
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
     portable: bool = False,
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """df with ``tokens_col`` rewritten to drop every token covered by a
     non-canonical duplicated span (first corpus-wide occurrence kept),
     plus ``covered_tokens``. Schema otherwise preserved; ``n_tok``-style
     derived columns are the caller's to refresh."""
     removed = duplicated_span_occurrences(
-        df, k, tokens_col, id_col, portable, use_arrow
+        df, k, tokens_col, id_col, portable
     ).filter(~F.col("is_canonical"))
     covered = _with_coverage(df, removed, k, id_col)
     kept = F.filter(
@@ -308,14 +299,13 @@ def span_dedup_summary(
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
     portable: bool = False,
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """One-row corpus roll-up: docs/tokens totals, affected docs,
     removed tokens + pct, distinct duplicated grams, removed
     occurrences. Two aggregations (per-doc stats + gram census) — the
     census is re-derived rather than threaded through to keep each
     public function standalone."""
-    stats = span_dedup_stats(df, k, tokens_col, id_col, portable, use_arrow)
+    stats = span_dedup_stats(df, k, tokens_col, id_col, portable)
     per_doc = stats.agg(
         F.count(F.lit(1)).alias("docs_total"),
         F.sum((F.col("covered_tokens") > 0).cast("bigint")).alias("docs_affected"),
@@ -324,7 +314,7 @@ def span_dedup_summary(
         F.sum("removed_occurrences").alias("removed_occurrences"),
     )
     census = (
-        ngram_occurrences(df, k, tokens_col, id_col, portable, use_arrow)
+        ngram_occurrences(df, k, tokens_col, id_col, portable)
         .groupBy("gram")
         .agg(F.count(F.lit(1)).alias("c"))
         .filter(F.col("c") >= 2)
@@ -350,7 +340,6 @@ def span_dedup_stats_against(
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
     portable: bool = False,
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """Incremental duplicated-span accounting of a NEW batch against an
     existing corpus index — "which spans of this crawl drop does the
@@ -371,12 +360,12 @@ def span_dedup_stats_against(
     aggregates per doc exactly like the self-dedup path.
     """
     index_grams = (
-        ngram_occurrences(index, k, tokens_col, id_col, portable, use_arrow)
+        ngram_occurrences(index, k, tokens_col, id_col, portable)
         .select("gram")
         .distinct()
     )
     return span_dedup_stats_against_grams(
-        index_grams, new, k, tokens_col, id_col, portable, use_arrow
+        index_grams, new, k, tokens_col, id_col, portable
     )
 
 
@@ -387,7 +376,6 @@ def span_dedup_stats_against_grams(
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
     portable: bool = False,
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """:func:`span_dedup_stats_against` with the index already reduced to
     its distinct ``gram`` column — the entry point for incremental /
@@ -396,7 +384,7 @@ def span_dedup_stats_against_grams(
     must be deduplicated (duplicate gram rows would fan out the join and
     inflate removed_occurrences)."""
     removed = ngram_occurrences(
-        new, k, tokens_col, id_col, portable, use_arrow
+        new, k, tokens_col, id_col, portable
     ).join(index_grams, "gram")
     return _doc_stats(
         _with_coverage(new, removed, k, id_col), tokens_col, id_col

@@ -12,10 +12,9 @@ blocklists — the C4/RefinedWeb curation step). Two stages:
   semantics. The blocklist is a dimension table
   (10^3–10^6 rows) against a 10^12-doc corpus: broadcast the list and
   probe with ``arrays_overlap`` on the per-doc domain array — the corpus
-  NEVER shuffles and no explode materializes per-URL rows. For
-  blocklists too big to broadcast, ``explode → left-anti join`` is the
-  fallback (one narrow (doc_id, domain) exchange); both paths are
-  equality-tested.
+  NEVER shuffles and no explode materializes per-URL rows. This is the
+  one path: there is no shuffle-join fallback for a blocklist too big
+  to broadcast.
 
 Patterns stay in the shared Java-regex/RE2 subset so the DuckDB gate
 oracle runs them verbatim (same contract as operators/pii.py)."""
@@ -75,9 +74,7 @@ def _dot_suffixes(host) -> "F.Column":
     )
 
 
-def _blocked_col(
-    df: DataFrame, blocklist: list[str], spark
-) -> DataFrame:
+def _blocked_col(df: DataFrame, blocklist: list[str]) -> DataFrame:
     """``__blocked`` via broadcast + arrays_overlap: the blocklist
     travels to the data; the corpus stays put. Hosts are expanded to
     their dot-suffix sets before the probe so an entry ``spam.example``
@@ -86,7 +83,9 @@ def _blocked_col(
     round-3 ADVICE). Cost stays O(labels) per host against the
     broadcast set, never O(|blocklist|) per doc."""
     bl = local_frame(
-        spark, [(sorted({d.lower() for d in blocklist}),)], "bl array<string>"
+        df.sparkSession,
+        [(sorted({d.lower() for d in blocklist}),)],
+        "bl array<string>",
     )
     sufs = F.array_distinct(
         F.flatten(F.transform(F.col("domains"), _dot_suffixes))
@@ -100,12 +99,10 @@ def filter_blocklisted(
     df: DataFrame,
     blocklist: list[str],
     text_col: str = "text",
-    spark=None,
 ) -> DataFrame:
     """Keep documents citing NO blocklisted domain. Docs with no URLs
     pass (arrays_overlap on an empty array is false)."""
-    spark = spark or df.sparkSession
-    tagged = _blocked_col(with_urls(df, text_col), blocklist, spark)
+    tagged = _blocked_col(with_urls(df, text_col), blocklist)
     return tagged.filter(~F.col("__blocked")).drop(
         "__blocked", "urls", "domains", "n_urls"
     )
@@ -116,12 +113,10 @@ def blocklist_report(
     blocklist: list[str],
     text_col: str = "text",
     group_col: str = "source",
-    spark=None,
 ) -> DataFrame:
     """Per-group exposure: docs, docs with URLs, total URLs, blocked
     docs. One scan + the |groups|-row exchange."""
-    spark = spark or df.sparkSession
-    tagged = _blocked_col(with_urls(df, text_col), blocklist, spark)
+    tagged = _blocked_col(with_urls(df, text_col), blocklist)
     return tagged.groupBy(group_col).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum((F.col("n_urls") > 0).cast("long")).alias(

@@ -37,9 +37,10 @@ def init_reference(
     now=None,
 ) -> str:
     """Compute and persist the reference snapshot; returns its snapshot id.
-    ``persist_sequences`` also versions the raw reference table (the
-    element-level diff of ``invariants.token_equality_violations`` reads
-    it; the verdicts need only the digests)."""
+    ``persist_sequences`` also writes ``REF_SEQUENCES_TABLE``, a versioned
+    copy of the raw reference table kept as the snapshot's baseline; no
+    engine path reads it (the verdicts and the violation export need only
+    the digests)."""
     stats = build_ref_stats(ref_df)
     snap_id = io.write(stats, REF_STATS_TABLE, now=now)
     from ..operators.invariants import token_digests
@@ -56,12 +57,6 @@ def load_ref_stats(
     io: ParquetTableIO, snapshot_id: str | None = None
 ) -> DataFrame:
     return io.read(REF_STATS_TABLE, snapshot_id)
-
-
-def load_ref_sequences(
-    io: ParquetTableIO, snapshot_id: str | None = None
-) -> DataFrame:
-    return io.read(REF_SEQUENCES_TABLE, snapshot_id)
 
 
 def load_ref_digests(

@@ -56,9 +56,7 @@ def curate_batch(
         # twice with complementary filters
         from ..operators.urls import _blocked_col
 
-        tagged = _blocked_col(
-            with_urls(kept, text_col), blocklist, batch.sparkSession
-        )
+        tagged = _blocked_col(with_urls(kept, text_col), blocklist)
         quarantine_url = (
             tagged.filter(F.col("__blocked"))
             .select(*cols)

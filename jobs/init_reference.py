@@ -7,7 +7,8 @@ Iceberg tables on a real catalog):
 
 - ``ref_stats``:     per-value n_tok histogram + source category counts
 - ``ref_digests``:   (doc_id, tok_digest) for the per-row equality invariant
-- ``ref_sequences``: full reference copy (optional, ``--no-sequences``)
+- ``ref_sequences``: full reference copy, the versioned raw baseline; no
+                     check reads it (skip with ``--no-sequences``)
 
 Cluster usage::
 

@@ -1,10 +1,21 @@
 """Per-row token-array equality invariant (input_hint) on the corrupted-copy
 fixture: corruption injected only in partition 5."""
 
+from pyspark.sql import functions as F
+
 from data_drift_monitoring_spark.operators.invariants import (
+    token_digests,
     token_equality_stats,
-    token_equality_violations,
 )
+from data_drift_monitoring_spark.plans.pipeline import build_violations
+
+
+def _token_violations(cur, ref):
+    """The ``token_equality`` rows of the violation export against the
+    reference's persisted digests."""
+    return build_violations(cur, ref_digests=token_digests(ref)).filter(
+        F.col("check") == "token_equality"
+    )
 
 
 def test_stats_flag_only_corrupted_partition(spark, ref_df, ref_corrupted_df):
@@ -21,12 +32,10 @@ def test_stats_flag_only_corrupted_partition(spark, ref_df, ref_corrupted_df):
 
 
 def test_violation_rows_pinpoint_diffs(spark, ref_df, ref_corrupted_df):
-    v = token_equality_violations(ref_corrupted_df, ref_df).collect()
+    v = _token_violations(ref_corrupted_df, ref_df).collect()
     assert v and all(r["part_id"] == 5 for r in v)
-    for r in v:
-        assert r["check"] == "token_equality"
-        assert r["n_diff"] >= 1
-        assert 0 <= r["first_diff_idx"] <= r["len_cur"]
+    # one row per planted mismatch, located by (part_id, doc_id)
+    assert len({(r["part_id"], r["doc_id"]) for r in v}) == len(v)
     # cross-check count against the digest-only stats
     stats = {
         r["part_id"]: r
@@ -36,14 +45,13 @@ def test_violation_rows_pinpoint_diffs(spark, ref_df, ref_corrupted_df):
 
 
 def test_identical_tables_no_violations(spark, ref_df):
-    assert token_equality_violations(ref_df, ref_df).count() == 0
+    assert _token_violations(ref_df, ref_df).count() == 0
 
 
 def test_ref_duplicates_do_not_inflate_current_counts(spark, ref_df):
     """A reference snapshot with duplicated doc_ids must not fan out the
     join: current-side n_rows / uniqueness must equal the clean-ref run."""
     from data_drift_monitoring_spark.operators.invariants import (
-        token_digests,
         uniqueness_and_token_equality,
     )
 
@@ -86,7 +94,7 @@ def test_ref_duplicates_do_not_fan_out_violation_rows(spark):
         ("b", [4, 6]), ("b", [4, 6]),  # one mismatched doc, duplicated
         ("c", [7, 8]), ("c", [7, 9]),  # two copies, one of them equal
     ])
-    v = token_equality_violations(cur, ref).collect()
+    v = _token_violations(cur, ref).collect()
     stats = token_equality_stats(cur, ref).collect()
     assert len(v) == sum(r["token_mismatch"] for r in stats)
     assert "b" in {r["doc_id"] for r in v}

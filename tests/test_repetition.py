@@ -67,13 +67,9 @@ def docs_df(spark):
     )
 
 
-@pytest.mark.parametrize("use_arrow", [True, False])
-def test_signals_match_python_mirror(docs_df, use_arrow):
+def test_signals_match_python_mirror(docs_df):
     got = {
-        r["doc_id"]: r.asDict()
-        for r in with_repetition_signals(
-            docs_df, use_arrow=use_arrow
-        ).collect()
+        r["doc_id"]: r.asDict() for r in with_repetition_signals(docs_df).collect()
     }
     for doc_id, text, _ in DOCS:
         exp = _mirror(text)
@@ -84,15 +80,15 @@ def test_signals_match_python_mirror(docs_df, use_arrow):
             )
 
 
-def test_arrow_and_expression_paths_identical(spark):
-    """Both paths bit-identical on a larger random corpus — a word-hash
-    collision in the Arrow path would surface here."""
+def test_arrow_path_matches_mirror_on_random_corpus(spark):
+    """The Arrow path equals the collision-free pure-Python mirror exactly
+    on a larger random corpus — a word-hash collision would surface here."""
     import random
 
     rng = random.Random(11)
     vocab = [f"w{i}" for i in range(50)]
     # edge whitespace mixed in (round-3 ADVICE): trailing/leading
-    # '\n'/'\t'/NBSP must tokenize identically on both paths.
+    # '\n'/'\t'/NBSP must tokenize as the mirror does.
     suffixes = ["", "\n", "\t", " \r", "\xa0tail", "\x0b"]
     rows = [
         (
@@ -112,9 +108,11 @@ def test_arrow_and_expression_paths_identical(spark):
         "dup_trigram_frac",
         "top_word_frac",
     ]
-    a = sorted(map(tuple, with_repetition_signals(df, use_arrow=True).select(cols).collect()))
-    b = sorted(map(tuple, with_repetition_signals(df, use_arrow=False).select(cols).collect()))
-    assert a == b
+    got = sorted(map(tuple, with_repetition_signals(df).select(cols).collect()))
+    exp = sorted(
+        (doc_id, *(_mirror(text)[c] for c in cols[1:])) for doc_id, text, _ in rows
+    )
+    assert got == exp
 
 
 def test_flags_and_keep(docs_df):

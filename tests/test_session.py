@@ -77,10 +77,9 @@ def test_create_dataframe_only_inside_local_frame():
     assert calls == [("data_drift_monitoring_spark/session.py", "local_frame")]
 
 
-def test_thresholds_are_module_constants():
-    """Thresholds live as module constants in ``config.py``: no engine or job
-    function takes a ``config`` or ``t`` parameter, and ``config.py``
-    defines no class to carry one."""
+def _engine_params(wanted):
+    """(module, function, parameter) of every engine or job function
+    parameter whose name satisfies ``wanted``."""
     params = []
     for top in ("data_drift_monitoring_spark", "jobs"):
         for path in sorted((ROOT / top).rglob("*.py")):
@@ -90,8 +89,29 @@ def test_thresholds_are_module_constants():
                     params += [
                         (path.relative_to(ROOT).as_posix(), node.name, p.arg)
                         for p in a.posonlyargs + a.args + a.kwonlyargs
-                        if p.arg in ("config", "t")
+                        if wanted(p.arg)
                     ]
-    assert params == []
+    return params
+
+
+def test_thresholds_are_module_constants():
+    """Thresholds live as module constants in ``config.py``: no engine or job
+    function takes a ``config`` or ``t`` parameter, and ``config.py``
+    defines no class to carry one."""
+    assert _engine_params(lambda a: a in ("config", "t")) == []
     config = ast.parse((ROOT / "data_drift_monitoring_spark/config.py").read_text())
     assert not any(isinstance(n, ast.ClassDef) for n in ast.walk(config))
+
+
+def test_one_implementation_per_token_text_operator():
+    """No engine or job function takes a ``use_*`` or ``normalized``
+    switch between two implementations of one operator, and the token-
+    equality invariant defines no pandas UDF beside its digest join."""
+    assert _engine_params(lambda a: a.startswith("use_") or a == "normalized") == []
+    invariants = ROOT / "data_drift_monitoring_spark/operators/invariants.py"
+    names = {
+        getattr(n, "id", None) or getattr(n, "attr", None) or n.name
+        for n in ast.walk(ast.parse(invariants.read_text()))
+        if isinstance(n, (ast.Name, ast.Attribute, ast.alias))
+    }
+    assert "pandas_udf" not in names
