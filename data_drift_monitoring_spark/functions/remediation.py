@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..session import local_frame
 
 # (check, severity, priority, action, snippet template)
-# Defaults mirror the per-check recommendation chains in
+# Defaults mirror the per-check recommendation rules in
 # functions/verdicts.py so the rules file is an override, not a fork.
 DEFAULT_RULES: list[tuple[str, str, str, str, str]] = [
     ("missing_values", "high", "high", "drop_column",

@@ -1,24 +1,28 @@
-"""Severity / recommendation when-chains (SURVEY.md §2.8 F3-F5).
-
-Each function is a Column expression evaluated on the *tiny* aggregated stats
-DataFrames — never on raw rows. Threshold provenance is in config.py; the
-decision trees mirror:
+"""Verdict policy: severity, recommendation, drift flags and grade (SURVEY.md
+§2.8 F3-F5), as plain Python over the floats and counts of the aggregated
+stats — the only copy of these rules. The pipeline, the drift operators and
+the service all call them on the driver. Threshold provenance is in
+config.py; the decision trees mirror:
 
 - missing severity/recommendation: ``missing_values.py:63-69, 99-141``
 - duplicate severity/recommendation: ``duplicates.py:146-184``
-- outlier recommendation: ``outliers.py:279-322``
+- outlier severity/recommendation: ``outliers.py:279-322``
 - PSI classification: ``README.md:49`` (0.1 / 0.25)
+- grade: ``quality_scorer.py:145-166``
+
+A comparison with NaN is false, so a NaN PSI classifies as ``large`` and a
+NaN p-value is not significant, as in the Spark SQL chains these replace.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
-
 from ..config import (
+    CHI2_ALPHA,
     DUP_LOW_PCT,
     DUP_MAJOR_PCT,
     DUP_MEDIUM_PCT,
     GRADE_BANDS,
+    KS_ALPHA,
     MISSING_ERROR_PCT,
     MISSING_WARN_PCT,
     OUTLIER_CLIP_PCT,
@@ -29,86 +33,141 @@ from ..config import (
     SKEW_TRANSFORM_THRESHOLD,
 )
 
-
-def missing_severity(pct: Column) -> Column:
-    return (
-        F.when(pct >= MISSING_ERROR_PCT, "high")
-        .when(pct >= MISSING_WARN_PCT, "medium")
-        .otherwise("low")
-    )
+_NUMERIC = ("tinyint", "smallint", "int", "bigint", "float", "double")
 
 
-def missing_recommendation(pct: Column, dtype: Column, skewness: Column) -> Column:
+def _banded(pct: float, low: float, high: float) -> str:
+    """0 → none, then low / medium / high below ``low``, below ``high``,
+    else."""
+    if pct == 0:
+        return "none"
+    return "low" if pct < low else "medium" if pct < high else "high"
+
+
+def missing_severity(pct: float) -> str:
+    """A verdict row's missing-value severity; no nulls reads ``low``."""
+    if pct >= MISSING_ERROR_PCT:
+        return "high"
+    return "medium" if pct >= MISSING_WARN_PCT else "low"
+
+
+def column_missing_severity(pct: float) -> str:
+    """The quality report's per-column severity: ``none`` for a column whose
+    null share rounds to 0, else ``missing_severity``."""
+    return _banded(pct, MISSING_WARN_PCT, MISSING_ERROR_PCT)
+
+
+def missing_recommendation(
+    pct: float, dtype: str, skewness: float | None
+) -> str:
     """dtype × pct × skew decision tree (missing_values.py:99-141)."""
-    numeric = dtype.isin(
-        "tinyint", "smallint", "int", "bigint", "float", "double"
-    ) | dtype.startswith("decimal")
-    return (
-        F.when(pct >= MISSING_ERROR_PCT, "drop_column")
-        .when(
-            numeric,
-            F.when(
-                F.abs(F.coalesce(skewness, F.lit(0.0)))
-                > SKEW_TRANSFORM_THRESHOLD,
-                "impute_median",
-            ).otherwise("impute_mean"),
-        )
-        .when(dtype == "string", "impute_mode")
-        .when(dtype == "boolean", "impute_mode")
-        .when(dtype.startswith("timestamp") | (dtype == "date"), "forward_fill")
-        .otherwise("investigate")
-    )
+    if pct == 0:
+        return "no_action"
+    if pct >= MISSING_ERROR_PCT:
+        return "drop_column"
+    if dtype in _NUMERIC or dtype.startswith("decimal"):
+        if abs(skewness or 0.0) > SKEW_TRANSFORM_THRESHOLD:
+            return "impute_median"
+        return "impute_mean"
+    if dtype in ("string", "boolean"):
+        return "impute_mode"
+    if dtype.startswith("timestamp") or dtype == "date":
+        return "forward_fill"
+    return "investigate"
 
 
-def duplicate_severity(pct: Column) -> Column:
-    return (
-        F.when(pct == 0, "none")
-        .when(pct < DUP_LOW_PCT, "low")
-        .when(pct < DUP_MEDIUM_PCT, "medium")
-        .otherwise("high")
-    )
+def duplicate_severity(pct: float) -> str:
+    return _banded(pct, DUP_LOW_PCT, DUP_MEDIUM_PCT)
 
 
-def duplicate_recommendation(pct: Column) -> Column:
-    return (
-        F.when(pct == 0, "no_action")
-        .when(pct < DUP_LOW_PCT, "keep_first")
-        .when(pct < DUP_MEDIUM_PCT, "review_and_remove")
-        .when(pct < DUP_MAJOR_PCT, "investigate_cause")
-        .otherwise("major_issue_investigate")
-    )
+def duplicate_recommendation(pct: float) -> str:
+    if pct == 0:
+        return "no_action"
+    if pct < DUP_LOW_PCT:
+        return "keep_first"
+    if pct < DUP_MEDIUM_PCT:
+        return "review_and_remove"
+    if pct < DUP_MAJOR_PCT:
+        return "investigate_cause"
+    return "major_issue_investigate"
 
 
-def outlier_recommendation(pct: Column, skewness: Column) -> Column:
-    return (
-        F.when(pct == 0, "no_action")
-        .when(pct < OUTLIER_LOW_PCT, "investigate")
-        .when(
-            pct < OUTLIER_MEDIUM_PCT,
-            F.when(
-                F.abs(F.coalesce(skewness, F.lit(0.0)))
-                > SKEW_TRANSFORM_THRESHOLD,
-                "transform_log",
-            ).otherwise("winsorize"),
-        )
-        .when(pct < OUTLIER_CLIP_PCT, "clip_bounds")
-        .otherwise("investigate_data_quality")
-    )
+def outlier_severity(pct: float) -> str:
+    return _banded(pct, OUTLIER_LOW_PCT, OUTLIER_MEDIUM_PCT)
 
 
-def psi_classification(psi: Column) -> Column:
+def outlier_recommendation(pct: float, skewness: float | None) -> str:
+    if pct == 0:
+        return "no_action"
+    if pct < OUTLIER_LOW_PCT:
+        return "investigate"
+    if pct < OUTLIER_MEDIUM_PCT:
+        if abs(skewness or 0.0) > SKEW_TRANSFORM_THRESHOLD:
+            return "transform_log"
+        return "winsorize"
+    if pct < OUTLIER_CLIP_PCT:
+        return "clip_bounds"
+    return "investigate_data_quality"
+
+
+def length_consistency(mismatches: int, pct: float) -> tuple[str, str]:
+    """(severity, recommendation) of the token-array length check (A20)."""
+    if mismatches == 0:
+        return "none", "no_action"
+    return ("medium" if pct < 1 else "high"), "repair_n_tok"
+
+
+def referential(violations: int, pct: float) -> tuple[str, str]:
+    """(severity, recommendation) of the source ∈ allowed check (J3)."""
+    if violations == 0:
+        return "none", "no_action"
+    severity = "low" if pct < 1 else "medium" if pct < 5 else "high"
+    return severity, "quarantine_unknown_sources"
+
+
+def token_equality(mismatches: int) -> tuple[str, str]:
+    """(severity, recommendation) of the per-row token-equality check."""
+    if mismatches == 0:
+        return "none", "no_action"
+    return "high", "recompute_tokens"
+
+
+def psi_classification(psi: float) -> str:
     """README.md:49: <0.1 no drift, 0.1-0.25 moderate, >0.25 large."""
-    return (
-        F.when(psi < PSI_MODERATE, "none")
-        .when(psi < PSI_LARGE, "moderate")
-        .otherwise("large")
-    )
+    return "none" if psi < PSI_MODERATE else "moderate" if psi < PSI_LARGE else "large"
 
 
-def grade(score: Column) -> Column:
+def psi_recommendation(psi: float) -> str:
+    return {
+        "none": "no_action",
+        "moderate": "monitor_drift",
+        "large": "retrain_or_investigate",
+    }[psi_classification(psi)]
+
+
+def drift_flags(psi: float, ks_pvalue: float, chi2_pvalue: float) -> dict:
+    """The drift verdict of one (partition, column) group: PSI class, KS and
+    chi² significance, and whether any of the three calls it drift (a NaN
+    PSI, from a column absent from the reference, is not drift by itself)."""
+    ks, chi2 = ks_pvalue < KS_ALPHA, chi2_pvalue < CHI2_ALPHA
+    return {
+        "psi_drift": psi_classification(psi),
+        "ks_significant": ks,
+        "chi2_significant": chi2,
+        "drift_detected": psi >= PSI_MODERATE or ks or chi2,
+    }
+
+
+def ks_drift(significant: bool) -> tuple[str, str]:
+    """(severity, recommendation) of a KS drift verdict."""
+    if significant:
+        return "high", "investigate_distribution_shift"
+    return "none", "no_action"
+
+
+def grade(score: float) -> str:
     """Score → letter grade (quality_scorer.py:145-166)."""
-    (cut, name), *rest = GRADE_BANDS
-    chain = F.when(score >= cut, name)
-    for cut, name in rest:
-        chain = chain.when(score >= cut, name)
-    return chain.otherwise("Critical")
+    for cut, name in GRADE_BANDS:
+        if score >= cut:
+            return name
+    return "Critical"

@@ -35,8 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..config import CHI2_ALPHA, DRIFT_BINS, KS_ALPHA, PSI_MODERATE
-from ..functions.verdicts import psi_classification
+from ..config import DRIFT_BINS
+from ..functions.verdicts import drift_flags
 from ..session import local_frame
 
 PSI_EPS = 1e-6
@@ -65,7 +65,8 @@ def _drift_from_counts(
     bin→count dicts over the bin universe cur ∪ ref, in bin order:
     KS from the fine per-value ECDF (exact on bounded int domains);
     PSI/JS/chi-square on reference-quantile buckets for numeric columns,
-    raw categories otherwise; p-values from functions.pvalues."""
+    raw categories otherwise; p-values from functions.pvalues; the drift
+    flags from ``verdicts.drift_flags``."""
     import numpy as np
 
     from ..functions.pvalues import chi2_sf, ks_2samp_pvalue
@@ -109,6 +110,7 @@ def _drift_from_counts(
         ((c[nz] - e_cur) ** 2 / e_cur + (r[nz] - e_ref) ** 2 / e_ref).sum()
     )
     dof = int(nz.sum()) - 1
+    ks_pvalue, chi2_pvalue = ks_2samp_pvalue(ks, n_cur, n_ref), chi2_sf(chi2, dof)
     return {
         "n_cur": int(n_cur),
         "n_ref": int(n_ref),
@@ -117,15 +119,17 @@ def _drift_from_counts(
         "ks_stat": ks,
         "chi2_stat": chi2,
         "chi2_dof": dof,
-        "ks_pvalue": ks_2samp_pvalue(ks, n_cur, n_ref),
-        "chi2_pvalue": chi2_sf(chi2, dof),
+        "ks_pvalue": ks_pvalue,
+        "chi2_pvalue": chi2_pvalue,
+        **drift_flags(psi, ks_pvalue, chi2_pvalue),
     }
 
 
 _KERNEL_SCHEMA = (
     "part_id int, col string, n_cur long, n_ref long, psi double, "
     "js_divergence double, ks_stat double, chi2_stat double, chi2_dof long, "
-    "ks_pvalue double, chi2_pvalue double"
+    "ks_pvalue double, chi2_pvalue double, psi_drift string, "
+    "ks_significant boolean, chi2_significant boolean, drift_detected boolean"
 )
 
 
@@ -169,15 +173,14 @@ def drift_stats_broadcast(
 ) -> DataFrame:
     """Drift on the driver: the current per-partition histograms are
     O(partitions × bins) rows, so they are collected together with the
-    reference histograms, every statistic AND p-value for a (partition,
-    column) group comes from the numpy kernel ``_drift_from_counts``, and
-    the result is a small local DataFrame built through Arrow
-    (``local_frame``): no Python worker and no stage of its own; the only
-    distributed work is the histogram aggregate that feeds it (SURVEY.md
-    §2.10). Columns in ``numeric_cols`` get PSI/JS/chi²
-    on reference-quantile buckets; every other column is compared bin by
-    bin. A column absent from the reference gets n_ref = 0 and NaN
-    statistics. ``partition_col=None`` takes (col, bin, cnt) histograms and
+    reference histograms, every statistic, p-value and drift flag for a
+    (partition, column) group comes from the numpy kernel
+    ``_drift_from_counts``, and the result is a small local DataFrame built
+    through Arrow (``local_frame``): no Python worker and no stage of its
+    own; the only distributed work is the histogram aggregate that feeds it
+    (SURVEY.md §2.10). Columns in ``numeric_cols`` get PSI/JS/chi² on
+    reference-quantile buckets; every other column is compared bin by bin.
+    A column absent from the reference gets n_ref = 0 and NaN statistics. ``partition_col=None`` takes (col, bin, cnt) histograms and
     drops ``part_id`` from the output."""
     keys = [partition_col] if partition_col else []
     rows = cur_hist.select(*keys, "col", "bin", "cnt").collect()
@@ -185,20 +188,7 @@ def drift_stats_broadcast(
         rows = [(None, *r) for r in rows]
     ref_map = hist_map(ref_hist.select("col", "bin", "cnt").collect())
     stats = drift_from_histograms(rows, ref_map, set(numeric_cols), DRIFT_BINS)
-    psi = F.col("psi")
-    out = (
-        local_frame(cur_hist.sparkSession, stats, _KERNEL_SCHEMA)
-        .withColumn("psi_drift", psi_classification(psi))
-        .withColumn("ks_significant", F.col("ks_pvalue") < KS_ALPHA)
-        .withColumn("chi2_significant", F.col("chi2_pvalue") < CHI2_ALPHA)
-        # a NaN PSI (column absent from the reference) is not drift by itself
-        .withColumn(
-            "drift_detected",
-            ((psi >= PSI_MODERATE) & ~F.isnan(psi))
-            | F.col("ks_significant")
-            | F.col("chi2_significant"),
-        )
-    )
+    out = local_frame(cur_hist.sparkSession, stats, _KERNEL_SCHEMA)
     return out if partition_col else out.drop("part_id")
 
 
@@ -268,20 +258,14 @@ def token_drift(
     if cur_map:
         st = _drift_from_counts(cur_map, ref_map, False, DRIFT_BINS)
         oov = [c for b, c in cur_map.items() if b not in ref_map]
-        rows.append((
-            name, st["n_cur"], st["n_ref"], st["psi"], st["js_divergence"],
-            st["chi2_stat"], st["chi2_dof"], len(oov),
-            100.0 * sum(oov) / st["n_cur"],
-        ))
-    out = local_frame(
+        rows.append({
+            **st, "col": name, "new_tokens": len(oov),
+            "oov_pct": 100.0 * sum(oov) / st["n_cur"],
+        })
+    return local_frame(
         cur.sparkSession,
         rows,
         "col string, n_cur long, n_ref long, psi double, js_divergence double, "
-        "chi2_stat double, chi2_dof long, new_tokens long, oov_pct double",
-    )
-    return out.select(
-        *out.columns[:7],
-        psi_classification(F.col("psi")).alias("psi_drift"),
-        "new_tokens",
-        "oov_pct",
+        "chi2_stat double, chi2_dof long, psi_drift string, new_tokens long, "
+        "oov_pct double",
     )

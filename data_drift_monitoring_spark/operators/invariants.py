@@ -20,49 +20,42 @@ from pyspark.sql import Column, DataFrame, functions as F
 from .uniqueness import rollup_key_groups
 
 
-def token_digests(
-    df: DataFrame,
-    key: str = "doc_id",
-    tokens_col: str = "tokens",
-) -> DataFrame:
-    """(key, tok_digest) — the persistable reference-side artifact for the
+def token_digests(df: DataFrame) -> DataFrame:
+    """(doc_id, tok_digest) — the persistable reference-side artifact for the
     per-row equality invariant: ~12 bytes/row instead of the full arrays, so
     the invariant join never re-reads reference token arrays."""
-    return df.select(key, F.xxhash64(tokens_col).alias("tok_digest"))
+    return df.select("doc_id", F.xxhash64("tokens").alias("tok_digest"))
 
 
-def _one_digest_per_key(ref_digests: DataFrame, key: str) -> DataFrame:
-    """Collapse the reference digests to exactly one row per key (min digest,
-    deterministic). A reference snapshot with duplicate keys would otherwise
-    fan out the left join and inflate every current-side count — the
-    invariant contract is one reference row per doc. The aggregate partial-
-    combines map-side and leaves the data hash-partitioned on ``key``, which
-    the join reuses, so this adds no extra row-volume shuffle."""
+def _one_digest_per_key(ref_digests: DataFrame) -> DataFrame:
+    """Collapse the reference digests to exactly one row per doc_id (min
+    digest, deterministic). A reference snapshot with duplicate keys would
+    otherwise fan out the left join and inflate every current-side count —
+    the invariant contract is one reference row per doc. The aggregate
+    partial-combines map-side and leaves the data hash-partitioned on
+    doc_id, which the join reuses, so this adds no extra row-volume
+    shuffle."""
     return (
-        ref_digests.filter(F.col(key).isNotNull())
-        .groupBy(key)
+        ref_digests.filter(F.col("doc_id").isNotNull())
+        .groupBy("doc_id")
         .agg(F.min("tok_digest").alias("_rd"))
     )
 
 
-def digest_join(
-    cur_digests: DataFrame,
-    ref_digests: DataFrame,
-    key: str = "doc_id",
-    partition_col: str = "part_id",
-) -> DataFrame:
-    """Current digests with a non-null key LEFT-joined to one reference
-    digest per key: (key, partition, ``_cd``, ``_rd``), ``_rd`` NULL when
-    the key is missing from the reference. Filtering on ``token_mismatch()``
-    rejects NULLs, so Catalyst turns that join back into an inner one."""
+def digest_join(cur_digests: DataFrame, ref_digests: DataFrame) -> DataFrame:
+    """Current digests with a non-null doc_id LEFT-joined to one reference
+    digest per doc_id: (doc_id, part_id, ``_cd``, ``_rd``), ``_rd`` NULL
+    when the doc is missing from the reference. Filtering on
+    ``token_mismatch()`` rejects NULLs, so Catalyst turns that join back
+    into an inner one."""
     c = cur_digests.select(
-        partition_col, key, F.col("tok_digest").alias("_cd")
-    ).filter(F.col(key).isNotNull())
-    r = _one_digest_per_key(ref_digests, key)
+        "part_id", "doc_id", F.col("tok_digest").alias("_cd")
+    ).filter(F.col("doc_id").isNotNull())
+    r = _one_digest_per_key(ref_digests)
     # digest equi-join needs no sort order: force shuffled-hash (the
     # planner still picks SortMergeJoin here otherwise, paying two
     # O(rows log rows) sorts)
-    return c.join(r.hint("shuffle_hash"), on=key, how="left")
+    return c.join(r.hint("shuffle_hash"), on="doc_id", how="left")
 
 
 def token_mismatch() -> Column:
@@ -72,24 +65,21 @@ def token_mismatch() -> Column:
 
 
 def uniqueness_and_token_equality(
-    cur_digests: DataFrame,
-    ref_digests: DataFrame,
-    key: str = "doc_id",
-    partition_col: str = "part_id",
+    cur_digests: DataFrame, ref_digests: DataFrame
 ) -> DataFrame:
-    """Both key-uniqueness AND per-row token equality from ONE ``key``-hash
-    shuffle: the ``digest_join``'s HashPartitioning(key) already satisfies
-    the clustering the (partition, key) aggregation needs, so Catalyst
-    inserts no second exchange for the current side — at 10^12 rows this
-    halves the row-volume shuffles of the verdict pipeline. Null keys are
-    excluded (they are a missing-value violation, not a duplicate group —
-    see ``uniqueness.duplicate_stats``).
+    """Both doc_id uniqueness AND per-row token equality from ONE doc_id-hash
+    shuffle: the ``digest_join``'s HashPartitioning(doc_id) already
+    satisfies the clustering the (part_id, doc_id) aggregation needs, so
+    Catalyst inserts no second exchange for the current side — at 10^12
+    rows this halves the row-volume shuffles of the verdict pipeline. Null
+    keys are excluded (they are a missing-value violation, not a duplicate
+    group — see ``uniqueness.duplicate_stats``).
 
     Output per partition: n_rows, duplicate_rows, duplicate_groups,
     duplicate_pct, unique_keys, token_mismatch, token_match, missing_in_ref.
     """
-    j = digest_join(cur_digests, ref_digests, key, partition_col)
-    per_key = j.groupBy(partition_col, key).agg(
+    j = digest_join(cur_digests, ref_digests)
+    per_key = j.groupBy("part_id", "doc_id").agg(
         F.count(F.lit(1)).alias("_n"),
         F.sum(token_mismatch().cast("long")).alias("_mm"),
         F.sum(F.col("_rd").isNull().cast("long")).alias("_mi"),
@@ -97,28 +87,20 @@ def uniqueness_and_token_equality(
     )
     return rollup_key_groups(
         per_key,
-        partition_col,
+        "part_id",
         F.sum("_mm").alias("token_mismatch"),
         F.sum("_ma").alias("token_match"),
         F.sum("_mi").alias("missing_in_ref"),
     )
 
 
-def token_equality_stats(
-    cur: DataFrame,
-    ref: DataFrame,
-    key: str = "doc_id",
-    tokens_col: str = "tokens",
-    partition_col: str = "part_id",
-) -> DataFrame:
+def token_equality_stats(cur: DataFrame, ref: DataFrame) -> DataFrame:
     """Per-partition counts: matched / mismatched / missing-in-reference —
     digest comparison only (pure JVM); the token-equality columns of
     ``uniqueness_and_token_equality`` over both tables' digests."""
     return uniqueness_and_token_equality(
-        cur.select(partition_col, key, F.xxhash64(tokens_col).alias("tok_digest")),
-        token_digests(ref, key, tokens_col),
-        key,
-        partition_col,
+        cur.select("part_id", "doc_id", F.xxhash64("tokens").alias("tok_digest")),
+        token_digests(ref),
     ).select(
-        partition_col, "n_rows", "missing_in_ref", "token_mismatch", "token_match"
+        "part_id", "n_rows", "missing_in_ref", "token_mismatch", "token_match"
     )

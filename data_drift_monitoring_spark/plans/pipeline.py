@@ -12,10 +12,10 @@ score sequentially over one in-memory DataFrame. Here (SURVEY.md §3.2):
       histograms, and the reference histograms and allowed sources; its
       keys are the parts to validate
     → referential counts and drift (numpy kernel) on the driver
-    → verdict rows from ONE projection (severity when-chains) over a small
-      per-part DataFrame + quality score; that frame is built on the driver
-      through Arrow (``session.local_frame``), so it plans as a local scan
-      and no action on the verdicts starts a Python worker
+    → verdict rows and quality score in plain Python on the driver, under
+      the policy of ``functions.verdicts`` / ``functions.scoring``; each
+      ships as one Arrow ``session.local_frame``, so it plans as a local
+      scan and no action on it starts a Python worker
     → violation rows for the failed (part, check) pairs only
     → write: results table, violations table, manifest rows (lineage); the
       manifest digests come from the in-memory verdict frame, not a
@@ -33,23 +33,15 @@ from __future__ import annotations
 from collections import defaultdict
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
-from functools import cache, reduce
+from functools import reduce
 
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..cache import release_cached, track_cached
-from ..config import (
-    DRIFT_BINS,
-    KS_ALPHA,
-    MIN_ROWS,
-    MISSING_ERROR_PCT,
-    PSI_LARGE,
-    PSI_MODERATE,
-)
+from ..config import DRIFT_BINS, MIN_ROWS
 from ..functions import verdicts as V
-from ..functions.scoring import overall_score
-from ..functions.verdicts import grade, psi_classification
+from ..functions.scoring import round_half_up, score_rows
 from ..operators.drift import drift_from_histograms, hist_map
 from ..operators.histogram import categorical_counts, value_histogram
 from ..operators.invariants import (
@@ -77,146 +69,92 @@ class RunResult:
     pruned_partitions: list[int] = field(default_factory=list)
 
 
-# the per-part aggregate row build_verdicts emits verdicts from; a NULL
-# check column means that check has no row for the part
-_WIDE_SCHEMA = (
-    "part_id {}, n_rows long, null_doc_id long, null_tokens long, "
-    "null_source long, len_mismatch long, duplicate_rows long, "
-    "duplicate_pct double, ref_violations long, te_rows long, "
-    "token_mismatch long, drift array<struct<col: string, psi: double, "
-    "ks_stat: double, ks_pvalue: double>>"
+# the verdict row (run_checks adds run_id) and the score row; part_id keeps
+# the input's type
+_VERDICT_SCHEMA = (
+    "part_id {}, check string, column string, value double, pct double, "
+    "severity string, recommendation string, passed boolean"
+)
+_SCORE_SCHEMA = (
+    "part_id {}, missing_pct double, duplicate_pct double, "
+    "violation_pct double, overall_score double, grade string"
 )
 
 
-def _check(check: str, column, value, pct, severity, recommendation, passed):
-    """One verdict as a struct (the verdict row minus part_id)."""
-    return F.struct(
-        F.lit(check).alias("check"),
-        (column if isinstance(column, Column) else F.lit(column)).alias(
-            "column"
-        ),
-        value.cast("double").alias("value"),
-        pct.cast("double").alias("pct"),
-        severity.alias("severity"),
-        recommendation.alias("recommendation"),
-        passed.alias("passed"),
-    )
+def _pct(count: int, n: int) -> float:
+    return round_half_up(count / n * 100)
 
 
-@cache  # built once: it reads no input, and a build is ~0.3 s of py4j calls
-def _verdict_structs() -> Column:
-    """Every verdict of one wide per-part row, as an array of ``_check``
-    structs in check order; checks with no row for the part are dropped."""
-    structs = []
+def verdict_rows(wide: dict) -> list[tuple]:
+    """Every verdict of every ``wide`` part, in part then check order, under
+    the policy of ``functions.verdicts``; a check whose count is absent for
+    a part has no row for it."""
+    out = []
+    for p, w in wide.items():
+        n = w["n_rows"]
 
-    # 1. missing values on every column of the contract (A1; severity chain
-    #    missing_values.py:63-69)
-    for col in ("doc_id", "tokens", "source"):
-        pct = F.round(F.col(f"null_{col}") / F.col("n_rows") * 100, 2)
-        structs.append(
-            _check(
-                "missing_values", col,
-                F.col(f"null_{col}"), pct,
-                V.missing_severity(pct),
-                F.when(pct >= MISSING_ERROR_PCT, "drop_column")
-                .when(pct > 0, "impute_mode" if col != "tokens" else "investigate")
-                .otherwise("no_action"),
-                pct == 0,
+        def add(check, column, value, pct, severity, recommendation, passed):
+            out.append((
+                p, check, column, float(value), pct, severity, recommendation,
+                passed,
+            ))
+
+        # 1. missing values on every column of the contract (A1)
+        for col in ("doc_id", "tokens", "source"):
+            k, pct = w[f"null_{col}"], _pct(w[f"null_{col}"], n)
+            dtype = SEQUENCES_SCHEMA[col].dataType.simpleString()
+            add(
+                "missing_values", col, k, pct, V.missing_severity(pct),
+                V.missing_recommendation(pct, dtype, None), pct == 0,
             )
+        # 2. token-array length consistency (A20 — the contract invariant)
+        lm = w["len_mismatch"]
+        pct = _pct(lm, n)
+        add(
+            "length_consistency", "tokens", lm, pct,
+            *V.length_consistency(lm, pct), lm == 0,
         )
+        # 3. uniqueness on doc_id (A14); no row for a part whose doc_ids are
+        #    all NULL (null keys are a missing-value violation, not a
+        #    duplicate)
+        if (dup := w.get("duplicate_rows")) is not None:
+            pct = w["duplicate_pct"]
+            add(
+                "uniqueness", "doc_id", dup, pct, V.duplicate_severity(pct),
+                V.duplicate_recommendation(pct), dup == 0,
+            )
+        # 4. referential: source ∈ allowed dimension (J3); NULL sources
+        #    count as violations
+        if (rv := w.get("ref_violations")) is not None:
+            pct = _pct(rv, n)
+            add("referential", "source", rv, pct, *V.referential(rv, pct), rv == 0)
+        # 5. drift vs reference snapshot, one PSI and one KS verdict per
+        #    (part, column) histogram group
+        for d in w["drift"]:
+            add(
+                "drift_psi", d["col"], d["psi"], None, d["psi_drift"],
+                V.psi_recommendation(d["psi"]), d["psi_drift"] == "none",
+            )
+        for d in w["drift"]:
+            add(
+                "drift_ks", d["col"], d["ks_stat"], d["ks_pvalue"],
+                *V.ks_drift(d["ks_significant"]), not d["ks_significant"],
+            )
+        # 6. per-row token equality against the reference digests (same
+        #    doc_id pass as uniqueness, so no row for an all-NULL-doc_id
+        #    part either)
+        if (tm := w.get("token_mismatch")) is not None:
+            pct = _pct(tm, w["te_rows"])
+            add("token_equality", "tokens", tm, pct, *V.token_equality(tm), tm == 0)
+    return out
 
-    # 2. token-array length consistency (A20 — the contract invariant)
-    lm = F.col("len_mismatch")
-    lm_pct = F.round(lm / F.col("n_rows") * 100, 2)
-    structs.append(
-        _check(
-            "length_consistency", "tokens", lm, lm_pct,
-            F.when(lm == 0, "none").when(lm_pct < 1, "medium").otherwise("high"),
-            F.when(lm == 0, "no_action").otherwise("repair_n_tok"),
-            lm == 0,
-        )
-    )
 
-    # 3. uniqueness on doc_id (A14); no row for a part whose doc_ids are all
-    #    NULL (null keys are a missing-value violation, not a duplicate)
-    dup_pct = F.col("duplicate_pct")
-    structs.append(
-        F.when(
-            F.col("duplicate_rows").isNotNull(),
-            _check(
-                "uniqueness", "doc_id", F.col("duplicate_rows"), dup_pct,
-                V.duplicate_severity(dup_pct),
-                V.duplicate_recommendation(dup_pct),
-                F.col("duplicate_rows") == 0,
-            ),
-        )
-    )
-
-    # 4. referential: source ∈ allowed dimension (J3); NULL sources count as
-    #    violations, as in the anti-join of operators.referential
-    rv = F.col("ref_violations")
-    rv_pct = F.round(rv / F.col("n_rows") * 100, 2)
-    structs.append(
-        F.when(
-            rv.isNotNull(),
-            _check(
-                "referential", "source", rv, rv_pct,
-                F.when(rv == 0, "none")
-                .when(rv_pct < 1, "low")
-                .when(rv_pct < 5, "medium")
-                .otherwise("high"),
-                F.when(rv == 0, "no_action").otherwise(
-                    "quarantine_unknown_sources"
-                ),
-                rv == 0,
-            ),
-        )
-    )
-
-    # 5. drift vs reference snapshot, one PSI and one KS verdict per
-    #    (part, column) histogram group
-    def psi(d):
-        return _check(
-            "drift_psi", d["col"], d["psi"], F.lit(None),
-            psi_classification(d["psi"]),
-            F.when(d["psi"] < PSI_MODERATE, "no_action")
-            .when(d["psi"] < PSI_LARGE, "monitor_drift")
-            .otherwise("retrain_or_investigate"),
-            d["psi"] < PSI_MODERATE,
-        )
-
-    def ks(d):
-        significant = d["ks_pvalue"] < KS_ALPHA
-        return _check(
-            "drift_ks", d["col"], d["ks_stat"], d["ks_pvalue"],
-            F.when(significant, "high").otherwise("none"),
-            F.when(significant, "investigate_distribution_shift").otherwise(
-                "no_action"
-            ),
-            ~significant,
-        )
-
-    # 6. per-row token equality against the reference digests (same doc_id
-    #    pass as uniqueness, so no row for an all-NULL-doc_id part either)
-    tm = F.col("token_mismatch")
-    te_pct = F.round(tm / F.col("te_rows") * 100, 2)
-    te = F.when(
-        tm.isNotNull(),
-        _check(
-            "token_equality", "tokens", tm, te_pct,
-            F.when(tm == 0, "none").otherwise("high"),
-            F.when(tm == 0, "no_action").otherwise("recompute_tokens"),
-            tm == 0,
-        ),
-    )
-
-    every = F.concat(
-        F.array(*structs),
-        F.transform("drift", psi),
-        F.transform("drift", ks),
-        F.array(te),
-    )
-    return F.filter(every, lambda s: s.isNotNull())
+def _local(like: DataFrame, rows, schema: str) -> DataFrame:
+    """``rows`` as a ``local_frame`` of ``schema``, its part_id typed as in
+    ``like``; one partition: the rows are few, and every later action on
+    them (writes, digests) then runs one task, not one per core."""
+    part = like.schema["part_id"].dataType.simpleString()
+    return local_frame(like.sparkSession, rows, schema.format(part)).coalesce(1)
 
 
 def part_aggregates(
@@ -280,7 +218,10 @@ def aggregate_parts(
     """Step 1 of ``build_verdicts``: collect ``part_aggregates`` over the
     persisted projection once; referential counts and drift (numpy kernel)
     follow on the driver. Returns the projection and ``wide``: part_id →
-    its ``_WIDE_SCHEMA`` row, one key per part of ``df``."""
+    its aggregates, one key per part of ``df``: n_rows and the null,
+    length-mismatch and duplicate counts, ref_violations, te_rows and
+    token_mismatch when those checks run, and ``drift``, its kernel rows.
+    A count is absent when its check has no row for the part."""
     prepared = prepare_sequences(df).persist(StorageLevel.MEMORY_AND_DISK)
     aggs = part_aggregates(prepared, ref_stats, allowed_sources, ref_digests)
     rows: dict[str, list] = defaultdict(list)
@@ -312,19 +253,11 @@ def aggregate_parts(
     return prepared, wide
 
 
-def verdict_frame(prepared: DataFrame, wide: dict) -> DataFrame:
-    """Step 2 of ``build_verdicts``: the verdict rows from ONE projection
-    (severity when-chains) over ``wide`` as a ``local_frame`` (Arrow, a
-    local scan), so no action on the verdicts starts a Python worker."""
-    # one partition: the rows are few, and every later action on the
-    # verdicts (score, writes) then runs one task, not one per core
-    per_part = local_frame(
-        prepared.sparkSession,
-        wide.values(),
-        _WIDE_SCHEMA.format(prepared.schema["part_id"].dataType.simpleString()),
-    ).coalesce(1)
-    out = per_part.select("part_id", F.inline(_verdict_structs()))
-    return track_cached(out, prepared)
+def verdict_frame(prepared: DataFrame, rows: list[tuple]) -> DataFrame:
+    """Step 2 of ``build_verdicts``: ``verdict_rows`` as a local frame
+    (Arrow, a local scan), so no action on the verdicts starts a Python
+    worker; it holds ``prepared`` cached for a violation export."""
+    return track_cached(_local(prepared, rows, _VERDICT_SCHEMA), prepared)
 
 
 def build_verdicts(
@@ -334,12 +267,11 @@ def build_verdicts(
     ref_digests: DataFrame | None = None,
 ) -> DataFrame:
     """All per-partition verdict rows (no writes): one aggregate collect
-    (``aggregate_parts``), then one local-frame projection. The projection
-    stays cached for a violation export over the same input; pass the
-    result to ``release_cached`` when done."""
-    return verdict_frame(
-        *aggregate_parts(df, ref_stats, allowed_sources, ref_digests)
-    )
+    (``aggregate_parts``), then the verdict rows built on the driver. The
+    projection stays cached for a violation export over the same input;
+    pass the result to ``release_cached`` when done."""
+    prepared, wide = aggregate_parts(df, ref_stats, allowed_sources, ref_digests)
+    return verdict_frame(prepared, verdict_rows(wide))
 
 
 # check families with row-level violations → the ``wide`` columns whose sum
@@ -472,31 +404,11 @@ def build_violations(
 
 
 def score_partitions(verdicts: DataFrame) -> DataFrame:
-    """Per-partition weighted quality score + grade (quality_scorer.py:46-122
-    generalized: dataset → partition). Components: missing = worst null pct,
-    duplicate = doc_id dup pct, outlier(slot) = contract-violation pct
-    (length mismatches + referential + token mismatches)."""
-    p = verdicts.groupBy("part_id").pivot("check", list(VIOLATION_CHECKS)).agg(
-        F.max("pct")
-    )
-    z = F.lit(0.0)
-    missing = F.coalesce(F.col("missing_values"), z)
-    dup = F.coalesce(F.col("uniqueness"), z)
-    contract = F.least(
-        F.lit(100.0),
-        F.coalesce(F.col("referential"), z)
-        + F.coalesce(F.col("length_consistency"), z)
-        + F.coalesce(F.col("token_equality"), z),
-    )
-    sc = overall_score(missing, dup, contract)
-    return p.select(
-        "part_id",
-        F.round(missing, 2).alias("missing_pct"),
-        F.round(dup, 2).alias("duplicate_pct"),
-        F.round(contract, 2).alias("violation_pct"),
-        sc.alias("overall_score"),
-        grade(sc).alias("grade"),
-    )
+    """Per-partition weighted quality score + grade of a verdict frame:
+    ``scoring.score_rows`` over its collected (part_id, check, pct)
+    triples, as a local frame."""
+    triples = verdicts.select("part_id", "check", "pct").collect()
+    return _local(verdicts, score_rows(triples), _SCORE_SCHEMA)
 
 
 def verdict_rollup(verdicts: DataFrame) -> DataFrame:
@@ -599,9 +511,12 @@ def run_checks(
             started_at=started, now=now,
         )
 
-    built = verdict_frame(prepared, wide)
+    rows = verdict_rows(wide)
+    built = verdict_frame(prepared, rows)
     verdicts = built.withColumn("run_id", F.lit(run_id))
-    score = score_partitions(built).withColumn("run_id", F.lit(run_id))
+    score = _local(
+        prepared, score_rows((r[0], r[1], r[4]) for r in rows), _SCORE_SCHEMA
+    ).withColumn("run_id", F.lit(run_id))
     if io is None:
         # the verdict rows are local data; only a violation export reads the
         # cached projection

@@ -31,19 +31,8 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .config import (
-    DUP_LOW_PCT,
-    DUP_MEDIUM_PCT,
-    DUPLICATE_WEIGHT,
-    GRADE_BANDS,
-    MISSING_ERROR_PCT,
-    MISSING_WARN_PCT,
-    MISSING_WEIGHT,
-    OUTLIER_LOW_PCT,
-    OUTLIER_MEDIUM_PCT,
-    OUTLIER_WEIGHT,
-    SCHEMA_WEIGHT,
-)
+from .functions import verdicts as V
+from .functions.scoring import WEIGHTS, component_scores, weighted_score
 from .operators.stats import column_profile, missing_patterns
 from .operators.uniqueness import duplicate_stats
 from .plans.compare import compare_metadata, no_baseline
@@ -64,14 +53,6 @@ _GRADE_EMOJI = {  # quality_scorer.py:168-186
     "Poor": "\U0001f534",
     "Critical": "\U0001f534",
 }
-
-
-def _grade_py(score: float) -> str:
-    """Driver-side twin of functions.verdicts.grade (quality_scorer.py:145-166)."""
-    for cut, name in GRADE_BANDS:
-        if score >= cut:
-            return name
-    return "Critical"
 
 BASELINE_TABLE = "baseline"
 BASELINE_META_TABLE = "baseline_metadata"
@@ -217,6 +198,10 @@ class ValidationService:
         prof_rows = pf.collect()
         prof = {r["column"]: r for r in prof_rows}
         n_rows = next(iter(prof.values()))["n_rows"] if prof else 0
+        if not n_rows:
+            raise ValueError(
+                f"dataset has {n_rows} rows; a quality report needs at least 1"
+            )
 
         # job 2: per-row patterns + full-row/key duplicates in one pass set
         pat = missing_patterns(tagged, partition_col="part_id").collect()[0]
@@ -381,11 +366,7 @@ class ValidationService:
                 "n_current": int(r["n_cur"]),
                 "n_baseline": int(r["n_ref"]),
                 "drift_detected": drifted,
-                "recommendation": (
-                    "no_action" if r["psi_drift"] == "none"
-                    else "monitor_drift" if r["psi_drift"] == "moderate"
-                    else "retrain_or_investigate"
-                ),
+                "recommendation": V.psi_recommendation(r["psi"]),
             }
         for c in [*no_data, *numeric, *categorical, *token_cols]:
             cols.setdefault(
@@ -440,11 +421,7 @@ class ValidationService:
             add(
                 "outliers",
                 d["column"],
-                _severity(
-                    float(d["outlier_percentage"]),
-                    OUTLIER_LOW_PCT,
-                    OUTLIER_MEDIUM_PCT,
-                ),
+                V.outlier_severity(float(d["outlier_percentage"])),
             )
         _prio = {"high": 0, "medium": 1, "low": 2}
         actions.sort(key=lambda r: _prio.get(r["priority"], 3))
@@ -472,16 +449,6 @@ class ValidationService:
         return json.loads(rows[0]["report"]) if rows else None
 
 
-def _severity(pct: float, low: float, high: float) -> str:
-    if pct == 0:
-        return "none"
-    if pct < low:
-        return "low"
-    if pct < high:
-        return "medium"
-    return "high"
-
-
 def _assemble_report(
     report_id, filename, ts, df, n_rows, prof, pat, dup, key_dup,
     key_columns, out_rows,
@@ -503,9 +470,7 @@ def _assemble_report(
             "missing_count": int(r["null_count"]),
             "missing_percentage": float(r["null_pct"]),
             "dtype": r["dtype"],
-            "severity": _severity(
-                float(r["null_pct"]), MISSING_WARN_PCT, MISSING_ERROR_PCT
-            ),
+            "severity": V.column_missing_severity(float(r["null_pct"])),
         }
         for c, r in sorted(
             with_missing.items(), key=lambda kv: -kv[1]["null_pct"]
@@ -551,7 +516,7 @@ def _assemble_report(
             if key_dup is not None
             else None
         ),
-        "severity": _severity(dup_pct, DUP_LOW_PCT, DUP_MEDIUM_PCT),
+        "severity": V.duplicate_severity(dup_pct),
     }
 
     total_outliers = sum(int(r["outlier_count"]) for r in out_rows)
@@ -577,21 +542,14 @@ def _assemble_report(
             }
             for r in sorted(out_rows, key=lambda r: -r["outlier_pct"])
         ],
-        "severity": _severity(out_pct, OUTLIER_LOW_PCT, OUTLIER_MEDIUM_PCT),
+        "severity": V.outlier_severity(out_pct),
     }
 
-    m_score = max(0.0, 100 - missing_values["overall_missing_percentage"])
-    d_score = max(0.0, 100 - dup_pct)
-    o_score = max(0.0, 100 - min(out_pct, 100.0))
-    s_score = 100.0
-    overall = round(
-        m_score * MISSING_WEIGHT / 100
-        + d_score * DUPLICATE_WEIGHT / 100
-        + o_score * OUTLIER_WEIGHT / 100
-        + s_score * SCHEMA_WEIGHT / 100,
-        2,
-    )
-    grade = _grade_py(overall)
+    pcts = missing_values["overall_missing_percentage"], dup_pct, out_pct
+    components = component_scores(*pcts)
+    # Python's round, as the reference's quality_scorer.py:80-88
+    overall = round(weighted_score(*pcts), 2)
+    grade = V.grade(overall)
 
     recommendations = []
     for d in mv_details:
@@ -602,7 +560,7 @@ def _assemble_report(
                     "column": d["column"],
                     "priority": d["severity"],
                     "action": "drop_column"
-                    if d["missing_percentage"] >= MISSING_ERROR_PCT
+                    if d["severity"] == "high"
                     else "impute",
                 }
             )
@@ -615,7 +573,7 @@ def _assemble_report(
             }
         )
     for d in outliers["details"]:
-        if d["outlier_percentage"] >= OUTLIER_MEDIUM_PCT:
+        if V.outlier_severity(d["outlier_percentage"]) == "high":
             recommendations.append(
                 {
                     "category": "outliers",
@@ -671,16 +629,8 @@ def _assemble_report(
             "grade": grade,
             "grade_emoji": _GRADE_EMOJI[grade],
             "breakdown": {
-                "missing_score": round(m_score, 2),
-                "duplicate_score": round(d_score, 2),
-                "outlier_score": round(o_score, 2),
-                "schema_score": s_score,
-                "weights": {
-                    "missing": MISSING_WEIGHT,
-                    "duplicates": DUPLICATE_WEIGHT,
-                    "outliers": OUTLIER_WEIGHT,
-                    "schema": SCHEMA_WEIGHT,
-                },
+                **{k: round(v, 2) for k, v in components.items()},
+                "weights": dict(WEIGHTS),
             },
         },
         "recommendations": recommendations,

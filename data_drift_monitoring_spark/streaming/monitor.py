@@ -25,21 +25,14 @@ the batch operators gives identical semantics in both modes.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..schema import SEQUENCES_SCHEMA
 
-# severity → rank for alert filtering; covers the quality chains
-# (low/medium/high) and the drift chains (moderate/large)
+# severity → rank for alert filtering; covers the quality severities
+# (low/medium/high) and the drift ones (moderate/large)
 _SEV_RANK = {"none": 0, "low": 1, "medium": 2, "moderate": 2,
              "high": 3, "large": 3}
-
-
-def _severity_rank(sev: Column) -> Column:
-    expr = F.lit(0)
-    for name, rank in _SEV_RANK.items():
-        expr = F.when(sev == name, rank).otherwise(expr)
-    return expr
 
 
 def alerts_from_verdicts(
@@ -52,7 +45,9 @@ def alerts_from_verdicts(
     delivery (email/Slack webhook) is a sink concern layered on the
     alerts table this produces."""
     floor = _SEV_RANK.get(min_severity, 2)
-    rank = _severity_rank(F.col("severity"))
+    ranks = F.create_map(*[F.lit(x) for kv in _SEV_RANK.items() for x in kv])
+    # an unknown or NULL severity ranks 0
+    rank = F.coalesce(ranks[F.col("severity")], F.lit(0))
     return verdicts.filter(~F.col("passed") & (rank >= floor)).withColumn(
         "alert_level", F.when(rank >= 3, "critical").otherwise("warning")
     )

@@ -29,8 +29,8 @@ plans may further coalesce partitions at runtime). What to look for:
 - **WholeStageCodegen** spans cover the hot path. The verdict path has no
   Python worker stage: drift statistics come from a numpy kernel on the
   driver over the collected histograms. Every frame the engine builds on
-  the driver (the `drift_stats_broadcast` result, the per-part verdict
-  frame, the manifest rows) crosses to the JVM once as an Arrow table
+  the driver (the `drift_stats_broadcast` result, the verdict and score
+  frames, the manifest rows) crosses to the JVM once as an Arrow table
   (`session.local_frame`) and plans as a `LocalTableScan`, not as a
   `Scan ExistingRDD` over a PythonRDD that every action re-runs through
   Python workers.
@@ -89,9 +89,11 @@ def main() -> None:
             "satisfies the (part_id, doc_id) aggregation, so no second "
             "row-volume exchange; the histogram branches shuffle only "
             "O(partitions × bins) rows; the reference histograms and the "
-            "allowed sources are plain scans. Drift (numpy kernel) and the "
-            "referential counts run on the driver over the collected rows, "
-            "and the verdict frame is a LocalTableScan.",
+            "allowed sources are plain scans. Drift (numpy kernel), the "
+            "referential counts, the verdict rows and the score "
+            "(score_partitions) are plain Python on the driver over the "
+            "collected rows; the verdict and score frames are each one "
+            "LocalTableScan, with no aggregate or pivot of their own.",
             part_aggregates(p, rs, dim, rd),
         ),
         (

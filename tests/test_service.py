@@ -78,6 +78,14 @@ def test_check_quality_report_shape(svc, current_df):
     assert rep["report_id"] in svc.list_reports()
 
 
+def test_check_quality_rejects_empty_table(svc, clean_df):
+    """A zero-row table has no quality report: check_quality says so with a
+    ValueError naming the row count instead of failing on an empty
+    collect."""
+    with pytest.raises(ValueError, match="dataset has 0 rows"):
+        svc.check_quality(clean_df.limit(0), persist=False)
+
+
 def test_check_quality_profiles_once(svc, current_df, monkeypatch):
     """The outlier counts take their bounds from the profile check_quality
     already collected: the percentile_approx profile runs once per call."""

@@ -3,6 +3,7 @@
 import ast
 import math
 import os
+import re
 from pathlib import Path
 
 from pyspark.sql import types as T
@@ -115,3 +116,45 @@ def test_one_implementation_per_token_text_operator():
         if isinstance(n, (ast.Name, ast.Attribute, ast.alias))
     }
     assert "pandas_udf" not in names
+
+
+_POLICY = re.compile(
+    r"(MISSING|DUP|OUTLIER)_[A-Z]+_PCT|SKEW_TRANSFORM_THRESHOLD|PSI_MODERATE"
+    r"|PSI_LARGE|KS_ALPHA|CHI2_ALPHA|GRADE_BANDS|[A-Z]+_WEIGHT"
+)
+_POLICY_OWNERS = {
+    "data_drift_monitoring_spark/functions/verdicts.py",
+    "data_drift_monitoring_spark/functions/scoring.py",
+}
+
+
+def test_verdict_policy_has_one_owner():
+    """Severity, recommendation, drift flags, grade and score rules are plain
+    Python in ``functions/verdicts.py`` and ``functions/scoring.py``: those
+    two import neither pyspark nor an engine module that does (only the
+    config and each other), and no other engine, job or script module
+    reads a policy threshold, band or weight."""
+    readers, owner_imports = set(), set()
+    for top in ("data_drift_monitoring_spark", "jobs", "scripts"):
+        for path in sorted((ROOT / top).rglob("*.py")):
+            rel = path.relative_to(ROOT).as_posix()
+            for node in ast.walk(ast.parse(path.read_text(), rel)):
+                if rel in _POLICY_OWNERS and isinstance(node, ast.Import):
+                    owner_imports |= {a.name for a in node.names}
+                elif rel in _POLICY_OWNERS and isinstance(node, ast.ImportFrom):
+                    owner_imports.add("." * node.level + (node.module or ""))
+                if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                    name = node.id
+                elif isinstance(node, ast.Attribute):
+                    name = node.attr
+                elif isinstance(node, ast.alias):
+                    name = node.name
+                else:
+                    continue
+                if _POLICY.fullmatch(name):
+                    readers.add(rel)
+    assert readers == _POLICY_OWNERS
+    assert not {m for m in owner_imports if m.split(".")[0] == "pyspark"}
+    assert {m for m in owner_imports if m.startswith(".")} == {
+        "..config", ".verdicts"
+    }
