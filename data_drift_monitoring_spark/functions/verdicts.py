@@ -45,16 +45,12 @@ def _banded(pct: float, low: float, high: float) -> str:
 
 
 def missing_severity(pct: float) -> str:
-    """A verdict row's missing-value severity; no nulls reads ``low``."""
+    """Missing-value severity of a verdict row and of a report column; below
+    the warning band it reads ``low``, so a column whose null share rounds
+    to 0 but has nulls still lands in a severity bucket."""
     if pct >= MISSING_ERROR_PCT:
         return "high"
     return "medium" if pct >= MISSING_WARN_PCT else "low"
-
-
-def column_missing_severity(pct: float) -> str:
-    """The quality report's per-column severity: ``none`` for a column whose
-    null share rounds to 0, else ``missing_severity``."""
-    return _banded(pct, MISSING_WARN_PCT, MISSING_ERROR_PCT)
 
 
 def missing_recommendation(

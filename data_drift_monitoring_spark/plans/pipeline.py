@@ -17,9 +17,14 @@ score sequentially over one in-memory DataFrame. Here (SURVEY.md §3.2):
       ships as one Arrow ``session.local_frame``, so it plans as a local
       scan and no action on it starts a Python worker
     → violation rows for the failed (part, check) pairs only
-    → write: results table, violations table, manifest rows (lineage); the
-      manifest digests come from the in-memory verdict frame, not a
-      read-back of the results table
+    → write: a "started" manifest row per part, then the verdict and score
+      rows as Arrow files (``pyarrow.parquet``, no Spark job), the
+      violation rows as a Spark write, and last the "done" manifest rows
+      (lineage), whose digests come from the in-memory verdict frame, not a
+      read-back of the results table. Every row carries the pass attempt's
+      id, and the "done" rows commit it: readers keep only committed
+      attempts' rows (``manifest.committed``), so a pass that dies between
+      appends leaves nothing a reader sees, and its resume recomputes it
 
 Verdict row shape: (run_id, part_id, check, column, value, pct, severity,
 recommendation, passed) — the per-partition generalization of the
@@ -30,6 +35,7 @@ document is derivable with ``F.to_json(F.struct(...))`` (report_json).
 
 from __future__ import annotations
 
+import uuid
 from collections import defaultdict
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
@@ -53,11 +59,12 @@ from ..operators.referential import referential_violations
 from ..operators.stats import prepare_sequences, sequence_stats_prepared
 from ..operators.uniqueness import duplicate_stats, duplicate_violations
 from ..schema import SEQUENCES_SCHEMA, validate_schema
-from ..session import local_frame
+from ..session import arrow_rows, local_frame
 from ..sources import manifest as M
 from ..sources.tables import ParquetTableIO
 
 RESULTS_TABLE = "check_results"
+SCORE_TABLE = RESULTS_TABLE + "_score"
 VIOLATIONS_TABLE = "violations"
 
 
@@ -79,6 +86,9 @@ _SCORE_SCHEMA = (
     "part_id {}, missing_pct double, duplicate_pct double, "
     "violation_pct double, overall_score double, grade string"
 )
+# what run_checks adds to every row it appends: the run, and the pass
+# attempt whose "done" manifest rows commit the row
+_PASS_COLS = ", run_id string, attempt_id string"
 
 
 def _pct(count: int, n: int) -> float:
@@ -149,12 +159,16 @@ def verdict_rows(wide: dict) -> list[tuple]:
     return out
 
 
+def _typed(like: DataFrame, schema: str) -> str:
+    """``schema`` with its part_id typed as in ``like``."""
+    return schema.format(like.schema["part_id"].dataType.simpleString())
+
+
 def _local(like: DataFrame, rows, schema: str) -> DataFrame:
-    """``rows`` as a ``local_frame`` of ``schema``, its part_id typed as in
-    ``like``; one partition: the rows are few, and every later action on
-    them (writes, digests) then runs one task, not one per core."""
-    part = like.schema["part_id"].dataType.simpleString()
-    return local_frame(like.sparkSession, rows, schema.format(part)).coalesce(1)
+    """``rows`` (or their ``arrow_rows`` table) as a ``local_frame`` of
+    ``_typed(like, schema)``; one partition: the rows are few, and every
+    later action on them (digests) then runs one task, not one per core."""
+    return local_frame(like.sparkSession, rows, _typed(like, schema)).coalesce(1)
 
 
 def part_aggregates(
@@ -498,47 +512,58 @@ def run_checks(
         )
     if io is not None and not left:  # fully resumed: nothing to recompute
         verdicts, score = (
-            io.read_appended(t).filter(F.col("run_id") == run_id)
-            for t in (RESULTS_TABLE, RESULTS_TABLE + "_score")
+            M.committed(io, io.read_appended(t), run_id)
+            for t in (RESULTS_TABLE, SCORE_TABLE)
         )
         return RunResult(run_id, verdicts, score, pruned)
 
     prepared, wide = aggregate_parts(todo, ref_stats, allowed_sources, ref_digests)
-    if io is not None:
-        # the todo parts are the parts the aggregates saw
-        M.record_partitions(
-            spark, io, run_id, sorted(wide), "started", snapshot_id,
-            started_at=started, now=now,
-        )
-
+    attempt = uuid.uuid4().hex
     rows = verdict_rows(wide)
-    built = verdict_frame(prepared, rows)
-    verdicts = built.withColumn("run_id", F.lit(run_id))
-    score = _local(
-        prepared, score_rows((r[0], r[1], r[4]) for r in rows), _SCORE_SCHEMA
-    ).withColumn("run_id", F.lit(run_id))
+    tagged = {
+        RESULTS_TABLE: (_VERDICT_SCHEMA + _PASS_COLS, rows),
+        SCORE_TABLE: (
+            _SCORE_SCHEMA + _PASS_COLS,
+            score_rows((r[0], r[1], r[4]) for r in rows),
+        ),
+    }
+    # one Arrow table per table: appended as a file, and the returned frame
+    tables = {
+        t: arrow_rows([(*r, run_id, attempt) for r in rs], _typed(prepared, s))
+        for t, (s, rs) in tagged.items()
+    }
+    verdicts, score = (_local(prepared, tables[t], s) for t, (s, _) in tagged.items())
+    track_cached(verdicts, prepared)
     if io is None:
         # the verdict rows are local data; only a violation export reads the
         # cached projection
-        release_cached(built)
+        release_cached(verdicts)
         return RunResult(run_id, verdicts, score, pruned)
 
-    io.append(verdicts, RESULTS_TABLE)
-    io.append(score, RESULTS_TABLE + "_score")
-    io.append(
-        build_violations(
-            todo, allowed_sources, ref_digests, failed=failed_checks(wide)
-        ).withColumn("run_id", F.lit(run_id)),
-        VIOLATIONS_TABLE,
-    )
-    # everything is on disk now; drop the cached projection so repeated
-    # run_checks calls (or a driver loop) don't accumulate cache entries.
-    # The verdict and score frames are local data: digesting and returning
-    # them reads nothing back.
-    release_cached(built)
+    try:
+        # the todo parts are the parts the aggregates saw
+        M.record_partitions(
+            spark, io, run_id, sorted(wide), "started", snapshot_id,
+            started_at=started, now=now, attempt_id=attempt,
+        )
+        for t, table in tables.items():
+            io.append(table, t)
+        io.append(
+            build_violations(
+                todo, allowed_sources, ref_digests, failed=failed_checks(wide)
+            ).withColumns({"run_id": F.lit(run_id), "attempt_id": F.lit(attempt)}),
+            VIOLATIONS_TABLE,
+        )
+    finally:
+        # drop the cached projection once the export has read it (or the
+        # pass failed), so repeated run_checks calls (or a driver loop)
+        # don't accumulate cache entries
+        release_cached(verdicts)
+    # the verdict frame is local data: digesting it reads nothing back. The
+    # "done" rows commit the attempt.
     digests = M.stats_digests(verdicts)
     M.record_partitions(
         spark, io, run_id, sorted(digests), "done", snapshot_id,
-        digests=digests, started_at=started, now=now,
+        digests=digests, started_at=started, now=now, attempt_id=attempt,
     )
     return RunResult(run_id, verdicts, score, pruned)

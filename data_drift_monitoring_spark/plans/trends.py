@@ -7,14 +7,16 @@ This module supplies it over the engine's persisted run history: the
 appended score/results tables (``plans.pipeline.run_checks``) plus the
 manifest's per-run timestamps give an ordered time series per partition;
 trends are window lag/delta computations over those (tiny aggregated
-tables — per-run × per-partition rows, never raw data).
+tables — per-run × per-partition rows, never raw data). Only rows of
+committed pass attempts count (``manifest.committed``): a pass that died
+before its "done" rows, and was resumed, appears once.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..sources.manifest import MANIFEST_TABLE
+from ..sources.manifest import MANIFEST_TABLE, committed
 from ..sources.tables import ParquetTableIO
 
 _DIRECTION = (
@@ -60,7 +62,7 @@ def _run_order(io: ParquetTableIO) -> DataFrame:
 def score_history(io: ParquetTableIO, results_table: str = "check_results") -> DataFrame:
     """Per-partition quality-score trend across all persisted runs:
     (part_id, run_id, run_ts, overall_score, prev, delta, direction)."""
-    s = io.read_appended(results_table + "_score").join(
+    s = committed(io, io.read_appended(results_table + "_score")).join(
         F.broadcast(_run_order(io)), on="run_id"
     )
     out = trend_over_runs(
@@ -83,7 +85,9 @@ def check_history(
 ) -> DataFrame:
     """Per-partition trend of one check's metric value across runs (e.g.
     drift_psi on n_tok, uniqueness on doc_id)."""
-    v = io.read_appended(results_table).filter(F.col("check") == check)
+    v = committed(io, io.read_appended(results_table)).filter(
+        F.col("check") == check
+    )
     if column is not None:
         v = v.filter(F.col("column") == column)
     v = v.join(F.broadcast(_run_order(io)), on="run_id")

@@ -56,6 +56,7 @@ MANIFEST_SCHEMA = T.StructType(
         T.StructField("status", T.StringType(), False),
         T.StructField("started_at", T.StringType(), True),
         T.StructField("finished_at", T.StringType(), True),
+        T.StructField("attempt_id", T.StringType(), True),
     ]
 )
 

@@ -36,7 +36,7 @@ from .functions.scoring import WEIGHTS, component_scores, weighted_score
 from .operators.stats import column_profile, missing_patterns
 from .operators.uniqueness import duplicate_stats
 from .plans.compare import compare_metadata, no_baseline
-from .session import local_frame
+from .session import arrow_rows, local_frame
 from .sources.ingest import (
     dataset_metadata,
     read_dataset,
@@ -102,9 +102,7 @@ class ValidationService:
             dup_of = prior[0]["file_id"] if prior else None
         snap = self.io.write(df, "uploads", now=now)
         self.io.append(
-            local_frame(
-                self.spark, [(digest, snap)], "digest string, file_id string"
-            ),
+            arrow_rows([(digest, snap)], "digest string, file_id string"),
             DIGEST_TABLE,
         )
         result = {
@@ -136,10 +134,8 @@ class ValidationService:
         meta = meta or dataset_metadata(df)
         now = now or datetime.now(timezone.utc)
         snap = self.io.write(df, BASELINE_TABLE, now=now)
-        side = local_frame(
-            self.spark,
-            [(snap, json.dumps(meta))],
-            "version_id string, metadata string",
+        side = arrow_rows(
+            [(snap, json.dumps(meta))], "version_id string, metadata string"
         )
         self.io.append(side, BASELINE_META_TABLE)
         return snap
@@ -235,8 +231,7 @@ class ValidationService:
             out_rows,
         )
         if persist:
-            row = local_frame(
-                self.spark,
+            row = arrow_rows(
                 [(report["report_id"], json.dumps(report, default=str))],
                 "report_id string, report string",
             )
@@ -255,7 +250,10 @@ class ValidationService:
     ) -> dict:
         """PSI / KS / JS / chi² of every shared column of the current
         dataset against the stored baseline snapshot, with the README.md:49
-        PSI classification. Numeric columns are binned on shared fixed
+        PSI classification. A column's ``drift_detected`` is the kernel
+        row's flag (``verdicts.drift_flags``: PSI ≥ 0.1, or a significant
+        KS or chi² test), the flag the pipeline's drift rows carry;
+        ``n_drifted`` and ``overall_drift`` count it. Numeric columns are binned on shared fixed
         edges (combined min/max across both sides); string columns use
         exact category counts; integer-array columns (tokenized sequences)
         use unigram token-id histograms — vocabulary-usage drift. One
@@ -354,15 +352,17 @@ class ValidationService:
         for r in stats.collect():
             if r["n_ref"] == 0:  # NaN statistics, not drift
                 continue
-            drifted = r["psi_drift"] != "none"
+            drifted = r["drift_detected"]
             n_drifted += int(drifted)
             cols[r["col"]] = {
                 "psi": float(r["psi"]),
                 "psi_drift": r["psi_drift"],
                 "ks_stat": float(r["ks_stat"]),
+                "ks_pvalue": float(r["ks_pvalue"]),
                 "js_divergence": float(r["js_divergence"]),
                 "chi2_stat": float(r["chi2_stat"]),
                 "chi2_dof": int(r["chi2_dof"]),
+                "chi2_pvalue": float(r["chi2_pvalue"]),
                 "n_current": int(r["n_cur"]),
                 "n_baseline": int(r["n_ref"]),
                 "drift_detected": drifted,
@@ -470,7 +470,7 @@ def _assemble_report(
             "missing_count": int(r["null_count"]),
             "missing_percentage": float(r["null_pct"]),
             "dtype": r["dtype"],
-            "severity": V.column_missing_severity(float(r["null_pct"])),
+            "severity": V.missing_severity(float(r["null_pct"])),
         }
         for c, r in sorted(
             with_missing.items(), key=lambda kv: -kv[1]["null_pct"]

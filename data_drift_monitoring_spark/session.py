@@ -5,8 +5,8 @@ The reference has no session concept (eager pandas in one uvicorn worker,
 execution; the factory encodes the scale-oriented defaults the engine relies
 on: AQE (runtime coalescing + skew-join handling), Arrow for the pandas-UDF
 boundary, and an explicit shuffle-partition count sized to the cluster.
-``local_frame`` is the one way the engine turns driver-side rows into a
-DataFrame.
+``arrow_rows`` turns driver-side rows into an Arrow table, and
+``local_frame`` is the one way the engine turns them into a DataFrame.
 """
 
 from __future__ import annotations
@@ -77,14 +77,27 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def arrow_rows(rows: Iterable[tuple | dict], schema: StructType | str) -> pa.Table:
+    """Rows built on the driver (tuples in schema order, or dicts keyed by
+    field name; extra keys are ignored) as an Arrow table of ``schema``, a
+    ``StructType`` or a DDL string. A table IO appends it without Spark;
+    ``local_frame`` turns it into a frame."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    names = schema.fieldNames()
+    return pa.Table.from_pylist(
+        [r if isinstance(r, dict) else dict(zip(names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+
+
 def local_frame(
     spark: SparkSession,
-    rows: Iterable[tuple | dict],
+    rows: Iterable[tuple | dict] | pa.Table,
     schema: StructType | str,
 ) -> DataFrame:
-    """A DataFrame over rows built on the driver (tuples in schema order, or
-    dicts keyed by field name; extra keys are ignored), with ``schema`` a
-    ``StructType`` or a DDL string.
+    """A DataFrame of ``schema`` over rows built on the driver, given as for
+    ``arrow_rows`` or as the table it returns.
 
     The rows cross to the JVM once, as an Arrow table, and the frame plans
     as a ``LocalTableScan``. ``createDataFrame`` over a Python list instead
@@ -92,9 +105,5 @@ def local_frame(
     runs them through Python workers again."""
     if isinstance(schema, str):
         schema = DataType.fromDDL(schema)
-    names = schema.fieldNames()
-    table = pa.Table.from_pylist(
-        [r if isinstance(r, dict) else dict(zip(names, r)) for r in rows],
-        schema=to_arrow_schema(schema),
-    )
+    table = rows if isinstance(rows, pa.Table) else arrow_rows(rows, schema)
     return spark.createDataFrame(table, schema)

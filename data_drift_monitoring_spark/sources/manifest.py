@@ -10,36 +10,69 @@ and start/finish timestamps.
 Resume = an anti-join: partitions of the input whose (run_id, part_id)
 already has a ``done`` manifest row are pruned BEFORE the scan via a
 partition-column filter, so completed work is never re-read (partition
-pruning, not post-filtering).
+pruning, not post-filtering). The manifest is small and driver-written, so
+the resume check reads it on the driver (``read_appended_arrow``), with no
+Spark job.
+
+Commit marker: each pass attempt has an ``attempt_id``, written on every
+manifest, result, score and violation row it appends, and its ``done``
+rows are written last, in one file. An attempt that died before them left
+rows no reader keeps (``committed``), and its parts are not done, so the
+resume recomputes them under a new attempt id: a crash never duplicates a
+run's results.
 """
 
 from __future__ import annotations
 
 from datetime import datetime, timezone
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..schema import MANIFEST_SCHEMA
-from ..session import local_frame
+from ..session import arrow_rows
 from .tables import ParquetTableIO
 
 MANIFEST_TABLE = "_manifest"
+
+
+def _done_rows(io: ParquetTableIO, run_id: str | None):
+    """The ``done`` manifest rows (of ``run_id``, or of every run), as an
+    Arrow table read on the driver; None when there is no manifest."""
+    if not io.exists(MANIFEST_TABLE):
+        return None
+    m = io.read_appended_arrow(MANIFEST_TABLE, MANIFEST_SCHEMA)
+    keep = pc.equal(m["status"], "done")
+    if run_id is not None:
+        keep = pc.and_(keep, pc.equal(m["run_id"], run_id))
+    return m.filter(keep)
 
 
 def completed_partitions(
     io: ParquetTableIO, run_id: str
 ) -> list[int]:
     """Partition ids already finished for this run (driver-side — the
-    manifest has one row per partition, thousands at most: no shuffle)."""
-    if not io.exists(MANIFEST_TABLE):
-        return []
-    m = io.read_appended(MANIFEST_TABLE)
-    rows = (
-        m.filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
-        .select("part_id")
-        .collect()
+    manifest has one row per partition, thousands at most)."""
+    done = _done_rows(io, run_id)
+    return [] if done is None else sorted(set(done["part_id"].to_pylist()))
+
+
+def committed(
+    io: ParquetTableIO, rows: DataFrame, run_id: str | None = None
+) -> DataFrame:
+    """The ``rows`` of a results, score or violations table (of ``run_id``,
+    or of every run) that a committed pass attempt appended: one with a
+    ``done`` manifest row. Rows with no attempt id come from a writer that
+    does not tag them, and are kept."""
+    if run_id is not None:
+        rows = rows.filter(F.col("run_id") == run_id)
+    if "attempt_id" not in rows.columns:
+        return rows
+    done = _done_rows(io, run_id)
+    ids = [] if done is None else sorted(
+        set(done["attempt_id"].drop_null().to_pylist())
     )
-    return sorted({r["part_id"] for r in rows})
+    return rows.filter(F.col("attempt_id").isNull() | F.col("attempt_id").isin(ids))
 
 
 def prune_completed(
@@ -64,7 +97,10 @@ def record_partitions(
     digests: dict[int, str] | None = None,
     started_at: str | None = None,
     now: datetime | None = None,
+    attempt_id: str | None = None,
 ) -> None:
+    """Append one manifest row per part, as one Arrow file (``io`` writes
+    it; ``spark`` is not needed)."""
     ts = (now or datetime.now(timezone.utc)).isoformat()
     rows = [
         (
@@ -75,20 +111,22 @@ def record_partitions(
             status,
             started_at or ts,
             ts if status == "done" else None,
+            attempt_id,
         )
         for p in part_ids
     ]
-    io.append(local_frame(spark, rows, MANIFEST_SCHEMA), MANIFEST_TABLE)
+    io.append(arrow_rows(rows, MANIFEST_SCHEMA), MANIFEST_TABLE)
 
 
 def stats_digests(verdicts: DataFrame, partition_col: str = "part_id") -> dict[int, str]:
     """16-hex-char SHA-256 digest of each partition's verdict rows
     (file_handler.py:83-100's truncation convention) — the idempotency
     witness: identical input partition → identical digest across runs."""
-    # run_id is per-invocation identity, not content — excluding it is what
-    # makes the digest an idempotency witness across runs
+    # run_id and attempt_id are per-invocation identity, not content —
+    # excluding them is what makes the digest an idempotency witness
     cols = sorted(
-        c for c in verdicts.columns if c not in (partition_col, "run_id")
+        c for c in verdicts.columns
+        if c not in (partition_col, "run_id", "attempt_id")
     )
     digest = F.substring(
         F.sha2(

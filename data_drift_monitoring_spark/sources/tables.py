@@ -15,17 +15,30 @@ sandbox has no Iceberg runtime jar, so ``TableIO`` abstracts the catalog:
   list versions, read latest) are identical, so every engine feature is
   testable offline and swaps to Iceberg by configuration only.
 
-Reads/writes always go through Spark's parquet source → predicate pushdown,
-column pruning and min/max file skipping apply (SURVEY.md §4.2).
+Versioned snapshots and appended DataFrames are written, and every table is
+read into a DataFrame, through Spark's parquet source → predicate pushdown,
+column pruning and min/max file skipping apply (SURVEY.md §4.2). Rows the
+driver already holds (manifest, verdict, score and service sidecar rows)
+are appended as an Arrow table instead: ``pyarrow.parquet`` writes one file
+into the same ``data/`` directory, with no Spark job, and Spark reads it
+with the rest. Small appended tables (the manifest) are also read on the
+driver with pyarrow (``read_appended_arrow``).
 """
 
 from __future__ import annotations
 
 import os
 import re
+import uuid
 from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.types import StructType
+
+from ..session import local_frame
 
 _VERSION_RE = re.compile(r"^v(\d+)_(\d{8}_\d{6})$")
 
@@ -82,24 +95,44 @@ class ParquetTableIO:
             os.path.join(self._table_dir(table), snap)
         )
 
-    def append(self, df: DataFrame, table: str) -> None:
-        """Un-versioned append (results / violations / manifest tables)."""
-        df.write.mode("append").parquet(
-            os.path.join(self._table_dir(table), "data")
-        )
+    def append(self, rows: DataFrame | pa.Table, table: str) -> None:
+        """Un-versioned append (results / violations / manifest tables). A
+        DataFrame is a Spark write. An Arrow table is one parquet file,
+        written under a ``.``-prefixed name that both Spark and pyarrow
+        skip, then renamed into place: a crash mid-write leaves no file
+        that a reader sees."""
+        d = os.path.join(self._table_dir(table), "data")
+        if isinstance(rows, DataFrame):
+            rows.write.mode("append").parquet(d)
+            return
+        os.makedirs(d, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        pq.write_table(rows, os.path.join(d, "." + name))
+        os.replace(os.path.join(d, "." + name), os.path.join(d, name))
 
     def read_appended(self, table: str) -> DataFrame:
         return self.spark.read.parquet(
             os.path.join(self._table_dir(table), "data")
         )
 
+    def read_appended_arrow(self, table: str, schema: StructType) -> pa.Table:
+        """The appended rows as an Arrow table on the driver, with no Spark
+        job; a column of ``schema`` that a file lacks reads as NULL."""
+        fields = to_arrow_schema(schema)
+        return pq.read_table(
+            os.path.join(self._table_dir(table), "data"),
+            schema=pa.schema([f.with_nullable(True) for f in fields]),
+        )
+
     def exists(self, table: str) -> bool:
-        """True if the table has any versioned snapshot OR appended data."""
+        """True if the table has any versioned snapshot OR appended data
+        (a ``.``-prefixed file is an unfinished write, not data)."""
         if self.list_snapshots(table):
             return True
         d = os.path.join(self._table_dir(table), "data")
         return os.path.isdir(d) and any(
-            f.endswith(".parquet") for f in os.listdir(d)
+            f.endswith(".parquet") and not f.startswith(".")
+            for f in os.listdir(d)
         )
 
 
@@ -148,8 +181,13 @@ class IcebergTableIO:
         ).collect()
         return str(hist[0][0]) if hist else "unknown"
 
-    def append(self, df: DataFrame, table: str) -> None:
-        df.writeTo(f"{self.prefix}.{table}").append()
+    def append(self, rows: DataFrame | pa.Table, table: str) -> None:
+        if isinstance(rows, pa.Table):
+            rows = local_frame(self.spark, rows, from_arrow_schema(rows.schema))
+        rows.writeTo(f"{self.prefix}.{table}").append()
 
     def read_appended(self, table: str) -> DataFrame:
         return self.read(table)
+
+    def read_appended_arrow(self, table: str, schema: StructType) -> pa.Table:
+        return self.read_appended(table).select(*schema.fieldNames()).toArrow()

@@ -3,8 +3,10 @@
 
 import os
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from data_drift_monitoring_spark.config import MIN_ROWS
 from data_drift_monitoring_spark.plans.pipeline import (
@@ -17,7 +19,12 @@ from data_drift_monitoring_spark.plans.reference import (
     load_ref_digests,
     load_ref_stats,
 )
-from data_drift_monitoring_spark.schema import SEQUENCES_SCHEMA, validate_schema
+from data_drift_monitoring_spark.schema import (
+    MANIFEST_SCHEMA,
+    SEQUENCES_SCHEMA,
+    validate_schema,
+)
+from data_drift_monitoring_spark.session import local_frame
 from data_drift_monitoring_spark.sources.tables import ParquetTableIO
 from data_drift_monitoring_spark.sources import manifest as M
 
@@ -175,11 +182,13 @@ def test_one_part_resume_manifest_rows(
 def test_one_part_resume_job_budget(
     spark, warehouse, ref_corrupted_df, allowed_sources_df, count_jobs
 ):
-    """One one-part resume pass with every check on launches at most 23
-    Spark jobs: one ``take`` over the parts left is both the gate and the
-    todo probe, the manifest read has no shuffle, and every per-part
+    """One one-part resume pass with every check on launches at most 17
+    Spark jobs: the manifest is read on the driver (no job), one ``take``
+    over the parts left is both the gate and the todo probe, every per-part
     aggregate comes from one collect that also names the todo parts and
-    the failed checks."""
+    the failed checks, and the manifest, verdict and score rows are written
+    as Arrow files (no job); the violation export and the digests are the
+    jobs after the collect."""
     io, snap = warehouse
     run = "run_job_budget"
     _done_but(spark, io, run, snap)
@@ -204,10 +213,11 @@ def test_one_part_resume_job_budget(
     # the job-group count agrees with the status store's job list
     assert jobs == sorted(job_ids() - before)
     assert M.completed_partitions(io, run) == list(range(8))
-    assert len(jobs) <= 23
+    assert len(jobs) <= 17
     # a fully-resumed re-invocation learns that no part is left before it
-    # plans any aggregate: at most the 8 jobs it took before the one collect
-    assert len(count_jobs(invoke)) <= 8
+    # plans any aggregate: the gate's takes (over the pruned input, then
+    # the whole), and the schema reads of the two committed read-backs
+    assert len(count_jobs(invoke)) <= 6
 
 
 def test_schema_gate(spark):
@@ -284,6 +294,129 @@ def test_returned_frames_equal_the_appended_rows(
     assert recorded == M.stats_digests(back[RESULTS_TABLE])
     assert recorded == M.stats_digests(res.verdicts)
     assert sorted(recorded) == list(range(8))
+
+
+class _Crash(Exception):
+    pass
+
+
+# the tables of a pass's five appends, in order: "started" manifest rows,
+# verdicts, score, violations, "done" manifest rows
+_APPENDS = (
+    M.MANIFEST_TABLE, RESULTS_TABLE, RESULTS_TABLE + "_score", VIOLATIONS_TABLE,
+    M.MANIFEST_TABLE,
+)
+
+
+def _run_view(io, run, again):
+    """What readers see of ``run`` after ``again``, a fully-resumed
+    invocation: the verdict and score frames it reads back, the committed
+    violation rows and the "done" digests; run and attempt ids dropped."""
+
+    def rows(df):
+        cols = [c for c in df.columns if c not in ("run_id", "attempt_id")]
+        # repr: NaN drift statistics compare equal by representation
+        return sorted(repr(tuple(r)) for r in df.select(cols).collect())
+
+    assert again.pruned_partitions == list(range(8))
+    done = io.read_appended(M.MANIFEST_TABLE).filter(
+        (F.col("run_id") == run) & (F.col("status") == "done")
+    )
+    return {
+        RESULTS_TABLE: rows(again.verdicts),
+        RESULTS_TABLE + "_score": rows(again.score),
+        "digests": sorted(
+            (r["part_id"], r["stats_digest"]) for r in done.collect()
+        ),
+        VIOLATIONS_TABLE: rows(
+            M.committed(io, io.read_appended(VIOLATIONS_TABLE), run)
+        ),
+    }
+
+
+@pytest.fixture(scope="module")
+def drifted_pass(spark, warehouse, cur_drifted_df, allowed_sources_df):
+    """``invoke(io, run)``: a full run_checks pass of the drifted fixture
+    against the reference, every check on; and one clean run's view."""
+    io, snap = warehouse
+    args = (load_ref_stats(io), allowed_sources_df, load_ref_digests(io))
+
+    def invoke(into, run):
+        return run_checks(
+            spark, cur_drifted_df, into, run, *args, snapshot_id=snap
+        )
+
+    invoke(io, "crash_clean")
+    return invoke, _run_view(io, "crash_clean", invoke(io, "crash_clean"))
+
+
+@pytest.mark.parametrize("at", range(1, len(_APPENDS) + 1))
+def test_crash_then_resume_equals_one_clean_run(spark, warehouse, drifted_pass, at):
+    """A pass that dies at any one of its five appends, then resumes,
+    leaves the run with exactly one clean run's verdict, score, violation
+    and manifest-digest rows: the dead attempt wrote no "done" row, so no
+    reader keeps its rows, and the resume recomputes its parts."""
+    io, _ = warehouse
+    invoke, clean = drifted_pass
+    run = f"crash_at_{at}"
+    crashing = ParquetTableIO(spark, io.root)
+    tables = []
+
+    def append(rows, table):
+        tables.append(table)
+        if len(tables) == at:
+            raise _Crash(table)
+        io.append(rows, table)
+
+    crashing.append = append
+    with pytest.raises(_Crash):
+        invoke(crashing, run)
+    assert tables == list(_APPENDS[:at])
+    assert invoke(io, run).pruned_partitions == []
+    assert _run_view(io, run, invoke(io, run)) == clean
+
+
+def test_spark_and_arrow_appends_read_back_as_one_table(
+    spark, warehouse, cur_drifted_df, allowed_sources_df, tmp_path
+):
+    """run_checks appends its manifest, verdict and score rows as Arrow
+    files. A Spark-written append of the same rows in the same table
+    directory reads back with them through ``read_appended``, under the
+    schema Spark reads from the Spark-written file alone; the manifest's
+    driver read sees both files too."""
+    io, snap = warehouse
+    arrow = {}
+    keep = ParquetTableIO(spark, io.root)
+
+    def append(rows, table):
+        if isinstance(rows, pa.Table):
+            arrow.setdefault(table, []).append(rows)
+        io.append(rows, table)
+
+    keep.append = append
+    run_checks(
+        spark, cur_drifted_df, keep, "mixed", load_ref_stats(io),
+        allowed_sources_df, None, snapshot_id=snap,
+    )
+    assert sorted(arrow) == sorted(
+        [M.MANIFEST_TABLE, RESULTS_TABLE, RESULTS_TABLE + "_score"]
+    )
+    mixed = ParquetTableIO(spark, str(tmp_path))
+    for table, parts in arrow.items():
+        t = pa.concat_tables(parts)
+        mixed.append(local_frame(spark, t, from_arrow_schema(t.schema)), table)
+        spark_only = mixed.read_appended(table).schema
+        mixed.append(t, table)
+        back = mixed.read_appended(table)
+        assert back.schema == spark_only
+        assert sorted(repr(tuple(r)) for r in back.collect()) == sorted(
+            repr(tuple(r.values())) for r in 2 * t.to_pylist()
+        )
+    manifest = mixed.read_appended_arrow(M.MANIFEST_TABLE, MANIFEST_SCHEMA)
+    assert manifest.num_rows == 2 * sum(
+        p.num_rows for p in arrow[M.MANIFEST_TABLE]
+    )
+    assert M.completed_partitions(mixed, "mixed") == list(range(8))
 
 
 def test_violation_rows_match_verdict_counts(

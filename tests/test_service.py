@@ -269,3 +269,50 @@ def test_report_formatters(svc, spark, clean_df):
     drift = svc.detect_drift(clean_df.withColumn("score", F.col("score") + 40))
     dmd = format_drift_report(drift)
     assert drift["baseline_version"] in dmd and "score" in dmd
+
+
+def test_one_null_in_a_large_column_reads_low(svc, spark):
+    """A column with one NULL in 30,000 rows has a null share that rounds
+    to 0.00 %: it still reads severity ``low``, counts in the summary's
+    ``low_severity`` and gets a remediation action — the pipeline's
+    missing-value severity, not a second one that calls it ``none``."""
+    df = spark.range(30000).select(
+        F.col("id"),
+        F.when(F.col("id") == 7, None).otherwise(F.col("id") * 1.5).alias("x"),
+    )
+    rep = svc.check_quality(df, persist=False)
+    [d] = rep["missing_values"]["details"]
+    assert (d["column"], d["missing_count"], d["missing_percentage"]) == (
+        "x", 1, 0.0
+    )
+    assert d["severity"] == "low"
+    assert rep["missing_values"]["summary"]["low_severity"] == 1
+    assert [
+        (a["check"], a["column"], a["severity"]) for a in svc.remediate(rep)
+    ] == [("missing_values", "x", "low")]
+
+
+def test_detect_drift_flag_is_the_kernel_flag(spark, tmp_path):
+    """``drift_detected`` in the service report has the meaning of
+    ``verdicts.drift_flags`` (PSI, KS or chi²), as in the pipeline's drift
+    rows. A small shift over many rows keeps PSI under 0.1 while the tests
+    call it drift; ``n_drifted`` and ``overall_drift`` count the flag."""
+    from data_drift_monitoring_spark.functions.verdicts import drift_flags
+
+    svc = ValidationService(spark, str(tmp_path / "wh"))
+    base = spark.range(20000).select(
+        (F.col("id") % 1000 / 10.0).alias("v"),
+        (F.col("id") % 7).cast("string").alias("k"),
+    )
+    svc.create_baseline(base)
+    rep = svc.detect_drift(base.withColumn("v", F.col("v") + 2.0))
+    cols = rep["columns"]
+    assert cols["v"]["psi_drift"] == "none" and cols["v"]["drift_detected"]
+    assert not cols["k"]["drift_detected"]
+    for c in cols.values():
+        assert c["drift_detected"] == drift_flags(
+            c["psi"], c["ks_pvalue"], c["chi2_pvalue"]
+        )["drift_detected"]
+    n = sum(c["drift_detected"] for c in cols.values())
+    assert rep["summary"]["n_drifted"] == n == 1
+    assert rep["summary"]["overall_drift"]

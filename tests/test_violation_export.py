@@ -8,6 +8,7 @@ violation row count equals its verdict value.
 
 from collections import Counter
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -127,9 +128,10 @@ class _CaptureIO:
 
 def test_drift_runs_on_the_driver(spark, ref_df, cur_drifted_df, refs,
                                   allowed_sources_df):
-    """No Python worker stage: drift_stats_broadcast, token_drift, the
-    verdict frame and the manifest rows are driver-built local frames —
-    no pandas operator in their plans and no PythonRDD under them."""
+    """No Python worker stage: drift_stats_broadcast, token_drift and the
+    verdict frame are driver-built local frames — no pandas operator in
+    their plans and no PythonRDD under them — and the manifest rows reach
+    the table IO as an Arrow table, with no Spark plan at all."""
     hist = value_histogram(cur_drifted_df, "n_tok").unionByName(
         categorical_counts(cur_drifted_df, "source")
     )
@@ -143,7 +145,7 @@ def test_drift_runs_on_the_driver(spark, ref_df, cur_drifted_df, refs,
     )
     io = _CaptureIO()
     record_partitions(spark, io, "r", [0, 1], "done", digests={0: "ab"})
-    for df in (out, tok, verdicts, *io.frames):
+    for df in (out, tok, verdicts):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "FlatMapGroupsInPandas" not in plan
         assert "ArrowEvalPython" not in plan
@@ -152,7 +154,7 @@ def test_drift_runs_on_the_driver(spark, ref_df, cur_drifted_df, refs,
         )
     assert out.count() == 2 * cur_drifted_df.select("part_id").distinct().count()
     assert tok.count() == 1
-    assert [r["stats_digest"] for r in io.frames[0].orderBy("part_id").collect()] == [
-        "ab", None,
-    ]
+    [manifest] = io.frames
+    assert isinstance(manifest, pa.Table)
+    assert manifest.sort_by("part_id")["stats_digest"].to_pylist() == ["ab", None]
     release_cached(verdicts)
