@@ -64,7 +64,6 @@ from ..sources import manifest as M
 from ..sources.tables import ParquetTableIO
 
 RESULTS_TABLE = "check_results"
-SCORE_TABLE = RESULTS_TABLE + "_score"
 VIOLATIONS_TABLE = "violations"
 
 
@@ -267,11 +266,14 @@ def aggregate_parts(
     return prepared, wide
 
 
-def verdict_frame(prepared: DataFrame, rows: list[tuple]) -> DataFrame:
-    """Step 2 of ``build_verdicts``: ``verdict_rows`` as a local frame
-    (Arrow, a local scan), so no action on the verdicts starts a Python
-    worker; it holds ``prepared`` cached for a violation export."""
-    return track_cached(_local(prepared, rows, _VERDICT_SCHEMA), prepared)
+def verdict_frame(
+    prepared: DataFrame, rows, schema: str = _VERDICT_SCHEMA
+) -> DataFrame:
+    """Step 2 of ``build_verdicts``: ``verdict_rows`` (or their Arrow table
+    of ``schema``) as a local frame (Arrow, a local scan), so no action on
+    the verdicts starts a Python worker; it holds ``prepared`` cached for a
+    violation export."""
+    return track_cached(_local(prepared, rows, schema), prepared)
 
 
 def build_verdicts(
@@ -513,27 +515,27 @@ def run_checks(
     if io is not None and not left:  # fully resumed: nothing to recompute
         verdicts, score = (
             M.committed(io, io.read_appended(t), run_id)
-            for t in (RESULTS_TABLE, SCORE_TABLE)
+            for t in (RESULTS_TABLE, RESULTS_TABLE + "_score")
         )
         return RunResult(run_id, verdicts, score, pruned)
 
     prepared, wide = aggregate_parts(todo, ref_stats, allowed_sources, ref_digests)
     attempt = uuid.uuid4().hex
     rows = verdict_rows(wide)
-    tagged = {
-        RESULTS_TABLE: (_VERDICT_SCHEMA + _PASS_COLS, rows),
-        SCORE_TABLE: (
-            _SCORE_SCHEMA + _PASS_COLS,
-            score_rows((r[0], r[1], r[4]) for r in rows),
-        ),
-    }
-    # one Arrow table per table: appended as a file, and the returned frame
-    tables = {
-        t: arrow_rows([(*r, run_id, attempt) for r in rs], _typed(prepared, s))
-        for t, (s, rs) in tagged.items()
-    }
-    verdicts, score = (_local(prepared, tables[t], s) for t, (s, _) in tagged.items())
-    track_cached(verdicts, prepared)
+
+    def tagged(rs, schema: str):
+        # ``rs`` with the pass's ids, as one Arrow table: appended as a
+        # file, and the returned frame
+        return arrow_rows(
+            [(*r, run_id, attempt) for r in rs], _typed(prepared, schema)
+        )
+
+    verdict_schema = _VERDICT_SCHEMA + _PASS_COLS
+    score_schema = _SCORE_SCHEMA + _PASS_COLS
+    verdict_table = tagged(rows, verdict_schema)
+    score_table = tagged(score_rows((r[0], r[1], r[4]) for r in rows), score_schema)
+    verdicts = verdict_frame(prepared, verdict_table, verdict_schema)
+    score = _local(prepared, score_table, score_schema)
     if io is None:
         # the verdict rows are local data; only a violation export reads the
         # cached projection
@@ -546,8 +548,8 @@ def run_checks(
             spark, io, run_id, sorted(wide), "started", snapshot_id,
             started_at=started, now=now, attempt_id=attempt,
         )
-        for t, table in tables.items():
-            io.append(table, t)
+        io.append(verdict_table, RESULTS_TABLE)
+        io.append(score_table, RESULTS_TABLE + "_score")
         io.append(
             build_violations(
                 todo, allowed_sources, ref_digests, failed=failed_checks(wide)

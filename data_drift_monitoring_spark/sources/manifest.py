@@ -63,7 +63,8 @@ def committed(
     """The ``rows`` of a results, score or violations table (of ``run_id``,
     or of every run) that a committed pass attempt appended: one with a
     ``done`` manifest row. Rows with no attempt id come from a writer that
-    does not tag them, and are kept."""
+    does not tag them, and are kept; so ``rows`` must show the column of
+    every file (``read_appended`` merges the files' schemas)."""
     if run_id is not None:
         rows = rows.filter(F.col("run_id") == run_id)
     if "attempt_id" not in rows.columns:

@@ -21,8 +21,9 @@ column pruning and min/max file skipping apply (SURVEY.md §4.2). Rows the
 driver already holds (manifest, verdict, score and service sidecar rows)
 are appended as an Arrow table instead: ``pyarrow.parquet`` writes one file
 into the same ``data/`` directory, with no Spark job, and Spark reads it
-with the rest. Small appended tables (the manifest) are also read on the
-driver with pyarrow (``read_appended_arrow``).
+with the rest, under the union of every file's columns. Small appended
+tables (the manifest) are also read on the driver with pyarrow
+(``read_appended_arrow``).
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ from datetime import datetime, timezone
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import StructType
 
@@ -111,7 +112,11 @@ class ParquetTableIO:
         os.replace(os.path.join(d, "." + name), os.path.join(d, name))
 
     def read_appended(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(
+        """Every appended row, under the union of the files' columns:
+        appends may add a column (``attempt_id`` did), and without
+        ``mergeSchema`` Spark takes the schema of the file it lists first,
+        so an older file would hide the new column."""
+        return self.spark.read.option("mergeSchema", "true").parquet(
             os.path.join(self._table_dir(table), "data")
         )
 
@@ -182,12 +187,29 @@ class IcebergTableIO:
         return str(hist[0][0]) if hist else "unknown"
 
     def append(self, rows: DataFrame | pa.Table, table: str) -> None:
+        """Append the columns the table has: a column the rows add (such as
+        ``attempt_id`` on a table created before it) is left off until the
+        table's schema is evolved to hold it."""
         if isinstance(rows, pa.Table):
             rows = local_frame(self.spark, rows, from_arrow_schema(rows.schema))
-        rows.writeTo(f"{self.prefix}.{table}").append()
+        have = set(self.read(table).columns)
+        rows.select(*[c for c in rows.columns if c in have]).writeTo(
+            f"{self.prefix}.{table}"
+        ).append()
 
     def read_appended(self, table: str) -> DataFrame:
         return self.read(table)
 
+    def exists(self, table: str) -> bool:
+        return self.spark.catalog.tableExists(f"{self.prefix}.{table}")
+
     def read_appended_arrow(self, table: str, schema: StructType) -> pa.Table:
-        return self.read_appended(table).select(*schema.fieldNames()).toArrow()
+        """A column of ``schema`` that the table lacks reads as NULL."""
+        df = self.read_appended(table)
+        return df.select(
+            *[
+                F.col(f.name) if f.name in df.columns
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in schema
+            ]
+        ).toArrow()

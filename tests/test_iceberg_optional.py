@@ -78,3 +78,35 @@ def test_iceberg_snapshot_pinning_and_time_travel(tmp_path):
         timeout=600,
     )
     assert "ICEBERG_OK" in out.stdout, out.stderr[-2000:]
+
+
+def test_manifest_read_of_a_table_without_attempt_id(spark, tmp_path):
+    """``IcebergTableIO``'s resume read over a manifest table created before
+    the ``attempt_id`` column: the column reads as NULL and the done parts
+    are found. Runs offline over a session-catalog parquet table standing in
+    for the Iceberg table (``read`` is the only Iceberg-specific call)."""
+    from data_drift_monitoring_spark.schema import MANIFEST_SCHEMA
+    from data_drift_monitoring_spark.sources import manifest as M
+    from data_drift_monitoring_spark.sources.tables import IcebergTableIO
+
+    class SessionTableIO(IcebergTableIO):
+        def read(self, table, snapshot_id=None):
+            return self.spark.table(f"{self.prefix}.{table}")
+
+    io = SessionTableIO(spark, "spark_catalog", "default")
+    old = [f for f in MANIFEST_SCHEMA if f.name != "attempt_id"]
+    ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in old)
+    spark.sql(
+        f"CREATE TABLE default.{M.MANIFEST_TABLE} ({ddl}) USING parquet "
+        f"LOCATION '{tmp_path}'"
+    )
+    try:
+        assert M.completed_partitions(io, "r") == []
+        spark.createDataFrame(
+            [("r", p, "s", None, "done", "t0", "t1") for p in (0, 1)], ddl
+        ).write.insertInto(f"default.{M.MANIFEST_TABLE}")
+        assert M.completed_partitions(io, "r") == [0, 1]
+        m = io.read_appended_arrow(M.MANIFEST_TABLE, MANIFEST_SCHEMA)
+        assert m["attempt_id"].to_pylist() == [None, None]
+    finally:
+        spark.sql(f"DROP TABLE default.{M.MANIFEST_TABLE}")

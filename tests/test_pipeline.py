@@ -334,6 +334,21 @@ def _run_view(io, run, again):
     }
 
 
+def _crashing(spark, io, at, tables):
+    """``io`` whose ``at``-th append raises; every append's table is
+    recorded in ``tables``."""
+    crashing = ParquetTableIO(spark, io.root)
+
+    def append(rows, table):
+        tables.append(table)
+        if len(tables) == at:
+            raise _Crash(table)
+        io.append(rows, table)
+
+    crashing.append = append
+    return crashing
+
+
 @pytest.fixture(scope="module")
 def drifted_pass(spark, warehouse, cur_drifted_df, allowed_sources_df):
     """``invoke(io, run)``: a full run_checks pass of the drifted fixture
@@ -359,21 +374,38 @@ def test_crash_then_resume_equals_one_clean_run(spark, warehouse, drifted_pass, 
     io, _ = warehouse
     invoke, clean = drifted_pass
     run = f"crash_at_{at}"
-    crashing = ParquetTableIO(spark, io.root)
     tables = []
-
-    def append(rows, table):
-        tables.append(table)
-        if len(tables) == at:
-            raise _Crash(table)
-        io.append(rows, table)
-
-    crashing.append = append
     with pytest.raises(_Crash):
-        invoke(crashing, run)
+        invoke(_crashing(spark, io, at, tables), run)
     assert tables == list(_APPENDS[:at])
     assert invoke(io, run).pruned_partitions == []
     assert _run_view(io, run, invoke(io, run)) == clean
+
+
+def test_crash_then_resume_over_untagged_rows(
+    spark, warehouse, drifted_pass, tmp_path
+):
+    """Tables that already hold Spark-written rows with no attempt id
+    column (an earlier writer's) still show a resumed crash once: the
+    reads see the column of every file, whichever file Spark lists first,
+    and keep the untagged rows."""
+    src, _ = warehouse
+    invoke, clean = drifted_pass
+    io = ParquetTableIO(spark, str(tmp_path))
+    for table in set(_APPENDS):
+        io.append(
+            src.read_appended(table)
+            .filter(F.col("run_id") == "crash_clean")
+            .drop("attempt_id")
+            .withColumn("run_id", F.lit("untagged")),
+            table,
+        )
+    run = "over_untagged"
+    with pytest.raises(_Crash):
+        invoke(_crashing(spark, io, len(_APPENDS), []), run)
+    assert invoke(io, run).pruned_partitions == []
+    assert _run_view(io, run, invoke(io, run)) == clean
+    assert _run_view(io, "untagged", invoke(io, "untagged")) == clean
 
 
 def test_spark_and_arrow_appends_read_back_as_one_table(
